@@ -135,7 +135,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
     // Where the full per-query artifact lands. NOT the CWD: the repo
     // root holds the deliberately-committed canonical map under the
@@ -155,13 +154,7 @@ object Bench {
       else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
       java.nio.file.Files.createTempDirectory(base, "graft-bench-ck").toString
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-bench")
       .config("spark.sql.streaming.checkpointLocation", ckRoot)
       .config("spark.sql.streaming.minBatchesToRetain", "2")
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
@@ -382,8 +375,9 @@ object Bench {
     val retryJson = retried.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     // The driver's capture is tail-bounded: round 5 lost the aggregate
     // fields to a head-truncated line. Aggregates therefore go AFTER the
-    // queries map, and a second queries-free summary line goes LAST so
-    // the headline total always survives any truncation.
+    // queries map, and a second, short summary line goes LAST (the
+    // headline totals plus per-family medians, below) so the headline
+    // total always survives any truncation.
     val fullLine =
       s"""{"metric":"total","sf":"$sfDir","queries":$qs,"mins":$mins,"loadavg":$loads,"ambient":$ambients,"iowait":$iowaits,"psi_cpu":$psiCpu,"psi_io":$psiIo,"psi_mem":$psiMem,"value":${fmt(total)},"batch_total":${fmt(batchTotal)},"streaming_total":${fmt(stTotal)},"adc_build_cold":${fmt(adcBuildCold)},"unit":"sec","iters":$iters,"errors":$errJson,"partial":$partJson,"retried":$retryJson}"""
     // The per-query map ALSO goes to a file artifact: the captured

@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: prints the formatted physical plan of selected
   * queries (all, when no names given). Used to keep pushdown, pruning
   * and broadcast decisions honest — `PushedFilters`, `ReadSchema` and
   * `BroadcastHashJoin` should appear where the catalog docs claim.
+  * The session is [[GraftSession]]'s, the same one Bench and Verify
+  * run, so the printed plan is the plan they time: plan evidence is
+  * regenerated on demand, never committed as text.
   *
   * Usage: runMain graft.Explain <sfDir> [queryName...]
   */

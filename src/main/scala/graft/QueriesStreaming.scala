@@ -96,19 +96,6 @@ object QueriesStreaming {
     cache.foreach(_.persist())
     val dir = java.nio.file.Files.createTempDirectory(ingestRoot, "graft-ingest-")
     val staging = java.nio.file.Files.createTempDirectory(ingestRoot, "graft-staging-")
-    // phase-timing diagnostic (round 21): SPARK_GRAFT_INGEST_DEBUG=1
-    // prints per-phase walls (chunk writes / query start / per-batch
-    // drains / stop) to stderr, so the streaming family's fixed
-    // harness tax is decomposable without touching any query
-    val dbg = sys.env.contains("SPARK_GRAFT_INGEST_DEBUG")
-    def phase[T](what: String)(body: => T): T =
-      if (!dbg) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"[ingest] $what%-10s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
     try {
       // watch one level of chunk SUBDIRECTORIES (glob): each chunk is
       // written to a staging dir and atomically RENAMED into the
@@ -118,12 +105,12 @@ object QueriesStreaming {
       // protocol and (for order-contract operators like the pack) leak
       // commit-order as arrival-order
       val stream = s.readStream.schema(chunks.head.schema).parquet(dir.toString + "/*")
-      val query = phase("start")(start(stream))
+      val query = start(stream)
       try {
         // PRE-STAGE every chunk in ONE write job (round 21): the old
         // shape paid one Spark job + parquet commit protocol per chunk,
         // interleaved with the drains — measured ~0.2-0.45 s of pure
-        // harness tax per chunk at sf0.1 (SPARK_GRAFT_INGEST_DEBUG).
+        // harness tax per chunk at sf0.1.
         // A single partitionBy write stages all chunks at once: each
         // chunk keeps its own ≤StP files (the per-chunk coalesce runs
         // BEFORE the union, so union partition provenance pins every
@@ -134,14 +121,13 @@ object QueriesStreaming {
         val tag = "__graft_chunk"
         // a pre-existing column of the tag's name would be silently
         // REPLACED by withColumn and then stripped from the file
-        // contents by partitionBy — fail loudly instead (ADVICE r21)
-        require(!chunks.head.columns.contains(tag),
-          s"fileIngest: chunk schema already has a '$tag' column")
+        // contents by partitionBy — fail loudly instead, on any chunk
+        require(chunks.forall(!_.columns.contains(tag)),
+          s"fileIngest: a chunk schema already has a '$tag' column")
         val tagged = chunks.zipWithIndex
           .map { case (c, i) => c.coalesce(StP).withColumn(tag, lit(i)) }
           .reduce(_.unionByName(_))
-        phase("stage")(
-          tagged.write.mode("overwrite").partitionBy(tag).parquet(staging.toString))
+        tagged.write.mode("overwrite").partitionBy(tag).parquet(staging.toString)
         chunks.indices.foreach { i =>
           val stag = staging.resolve(s"$tag=$i")
           // an all-empty chunk writes no partition dir — the old shape
@@ -150,14 +136,9 @@ object QueriesStreaming {
           // same behavior either way
           if (java.nio.file.Files.isDirectory(stag))
             java.nio.file.Files.move(stag, dir.resolve(s"chunk-$i"))
-          phase(s"drain-$i")(query.processAllAvailable())
+          query.processAllAvailable()
         }
-      } finally {
-        if (dbg) query.recentProgress.foreach { p =>
-          System.err.println(s"[ingest] batch ${p.batchId} durationMs=${p.durationMs}")
-        }
-        phase("stop")(query.stop())
-      }
+      } finally query.stop()
     } finally {
       cache.foreach(_.unpersist(blocking = false))
       import scala.jdk.CollectionConverters._
@@ -207,10 +188,9 @@ object QueriesStreaming {
         import scala.concurrent.ExecutionContext.Implicits.global
         import scala.concurrent.duration.Duration
         val tag = "__graft_chunk"
-        // same collision guard as fileIngest (ADVICE r21)
-        require(!aChunks.head.columns.contains(tag) &&
-            !bChunks.head.columns.contains(tag),
-          s"fileIngest2: chunk schema already has a '$tag' column")
+        // same every-chunk collision guard as fileIngest, both sides
+        require((aChunks ++ bChunks).forall(!_.columns.contains(tag)),
+          s"fileIngest2: a chunk schema already has a '$tag' column")
         def staged(chunks: Seq[org.apache.spark.sql.DataFrame],
                    stag: java.nio.file.Path): Future[Unit] = Future {
           chunks.zipWithIndex

@@ -253,7 +253,7 @@ object QueriesText {
     // materialized behind an exchange, like shingleSets — the trigram
     // hash expression must not be re-inlined into both join sides
     val tri = docs.select(col("doc_id").as("doc"),
-        array_sort(TextFunctions.charNgramHashes(col("text"), 3)).cast("array<int>").as("tri"))
+        array_sort(TextFunctions.charNgramHashes(col("text"), 3)).cast(Dedup.IntSet).as("tri"))
       .repartition(col("doc")).persist()
     Dedup.lshCandidatePairs(bands)
       .join(tri.select(col("doc").as("doc_a"), col("tri").as("tri_a")), "doc_a")
@@ -301,7 +301,7 @@ object QueriesText {
     val docs = Tables.load(s, dir, "documents")
     val bands = Dedup.minHashBands(docs, col("doc_id"), shingleSet, dedupK, dedupR)
     val tri = docs.select(col("doc_id").as("doc"),
-        array_sort(TextFunctions.charNgramHashes(col("text"), 3)).cast("array<int>").as("tri"))
+        array_sort(TextFunctions.charNgramHashes(col("text"), 3)).cast(Dedup.IntSet).as("tri"))
       .repartition(col("doc")).persist()
     Dedup.lshCandidatePairs(bands, maxBucket = d5bMaxBucket)
       .join(tri.select(col("doc").as("doc_a"), col("tri").as("tri_a")), "doc_a")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Executed recall/cost ladders for BOTH approximate-NN routes:
@@ -83,14 +83,7 @@ object RecallLadder {
       s"sf dirs must have distinct basenames (artifact rows are keyed by " +
         s"them); got ${bases.mkString(", ")}")
     val iters = sys.env.getOrElse("SPARK_GRAFT_RECALL_ITERS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-recall-ladder")
       // local[n] is ONE JVM: a long full-GC pause during the sf10
       // brute-truth sorts can exceed the default 120 s heartbeat and
       // kill the context mid-ladder — at these single-box sizes the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-node throughput of THIS engine on the exact workload
   * `scripts/bench_reference.py` times on the reference implementation:
   * GRINCH build + flat cut at θ=0.25 over the sf0.1 embeddings fixture
@@ -14,9 +12,8 @@ object RefCompare {
   def main(args: Array[String]): Unit = {
     val fixture = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = args.drop(1).headOption.map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder().master("local[4]")
+    val spark = GraftSession.builder("graft-ref-compare").master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Empirical scale smoke (VERDICT r7 #2): run the iterative/wide
   * catalog queries at two or more scale-factor directories and emit
@@ -71,20 +70,13 @@ object ScaleSmoke {
         // sequential, the reference's own execution shape), so their
         // sf1 rows pin constancy, not growth
         "h4_grinch_by_label", "h9_grinch_graft_tree", "h11_grinch_prune_cut"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder("graft-scale-smoke")
       // the streaming harness queries land in MEMORY sinks (the test
       // sink — production would write files/Kafka), so at the 1000×
       // smoke their linear OUTPUT exceeds the 1g default result cap
       // (st6's capped candidate set hit it at sf100); the cap guards
       // accidental driver collects, which PlanAuditSpec already pins
       .config("spark.driver.maxResultSize", "8g")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** st6 at scale with a FILE sink — the sf100 evidence harness the
@@ -30,14 +29,7 @@ object St6FileSinkSmoke {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: St6FileSinkSmoke <sfDir>")
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder("graft-st6-file-sink")
       // single-JVM local[32] at 2M docs takes real full-GC pauses; the
       // r19 48 g attempt died to a 139 s pause tripping the default
       // 120 s heartbeat/network timeouts, not to memory
@@ -75,7 +67,7 @@ object St6FileSinkSmoke {
     // driver-side row collect)
     val rows = spark.read.parquet(outDir.toString).count()
     val store = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs-default")
-    println(f"""{"st6_file_sink":{"sf":"$dir%s","store":"$store%s","wall":$wall%.3f,"rows":$rows%d,"cpus":$cpus%s}}""")
+    println(f"""{"st6_file_sink":{"sf":"$dir%s","store":"$store%s","wall":$wall%.3f,"rows":$rows%d,"cpus":${GraftSession.cpus}%s}}""")
     StreamingShutdown.closeStateStores()
     spark.stop()
     import scala.jdk.CollectionConverters._

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType}
 
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions.P
@@ -32,6 +33,10 @@ object Dedup {
     df.withColumn("canonical_id", min(id).over(Window.partitionBy(text)))
       .withColumn("is_dup", id =!= col("canonical_id"))
 
+  /** Element type of a stored shingle/trigram set: non-null ints, so the
+    * kernels skip null checks (the string form "array<int>" is nullable). */
+  private[graft] val IntSet = ArrayType(IntegerType, containsNull = false)
+
   /** Materialize the per-doc distinct shingle-hash set ONCE, behind an
     * exchange barrier. Without the barrier, Catalyst's projection
     * collapse inlines the (interpreted, per-char) hash expression into
@@ -56,7 +61,7 @@ object Dedup {
     // minhash fold and the merge kernel widen back to long per
     // element, and t7's explode coerces in its pmod arithmetic —
     // every emitted value is bit-identical to the long form.
-    df.select(id.as("doc"), array_sort(shingleSet).cast("array<int>").as("hs"))
+    df.select(id.as("doc"), array_sort(shingleSet).cast(IntSet).as("hs"))
       .repartition(col("doc"))
       // The set relation feeds the signature branch AND both sides of
       // the verify join: persist it (dimension-sized: id + ~30 longs per
@@ -297,20 +302,25 @@ object Dedup {
     * existence check proves it small — labels is node-sized (bounded
     * by the pair graph, typically ≪ corpus), docs is the corpus, and
     * the default SortMergeJoin shuffled the corpus to meet it. Same
-    * absolute-row-count gate pattern as the v16b rerank broadcasts:
-    * labels comes out of [[connectedComponents]] localCheckpoint-
-    * materialized, so `limit(cap+1).count()` is one cheap bounded
-    * scan, not a recompute. Past the cap the SortMergeJoin fallback
-    * stays — scale-safe by default, never a driver-sized broadcast of
-    * an unbounded relation.
+    * absolute-row-count gate ([[Broadcasts.boundedCount]]) as the v16b
+    * rerank broadcasts. Past the cap the SortMergeJoin fallback stays —
+    * scale-safe by default, never a driver-sized broadcast of an
+    * unbounded relation. `maxBroadcastRows <= 0` never broadcasts and
+    * runs no count job.
+    *
+    * Contract: `labels` is COUNTED EAGERLY (one bounded Spark job, at
+    * call time, before the returned frame is used), so it should
+    * arrive materialized — as [[connectedComponents]] returns it,
+    * localCheckpoint-materialized — or the count recomputes its whole
+    * lineage, and the join then recomputes it again.
     */
   private[graft] val KeepBestMaxBroadcastRows = 2000000L
 
   def keepBestPerComponent(docs: DataFrame, idCol: String, scoreCol: String,
                            labels: DataFrame,
                            maxBroadcastRows: Long = KeepBestMaxBroadcastRows): DataFrame = {
-    val cap = math.min(maxBroadcastRows, Int.MaxValue - 1L)
-    val under = cap > 0 && labels.limit((cap + 1).toInt).count() <= cap
+    val cap = Broadcasts.cap(maxBroadcastRows)
+    val under = cap > 0 && Broadcasts.boundedCount(labels, cap) <= cap
     val labelSide = if (under) broadcast(labels) else labels
     val assigned = docs.join(labelSide, docs(idCol) === labels("node"), "left")
       .select(col(idCol), col(scoreCol),

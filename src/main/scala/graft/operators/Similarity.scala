@@ -251,14 +251,12 @@ object Similarity {
     * `nTables`/`targetOccupancy` configure only that fallback.
     */
   def cosineTopK(corpus: DataFrame, queries: DataFrame, id: Column, vec: Column, k: Int,
-                 maxBroadcastRows: Long = 100000L, dim: Int = 64,
+                 maxBroadcastRows: Long = Broadcasts.MaxRows, dim: Int = 64,
                  seed: Long = 42L, nTables: Int = AutoTables,
                  targetOccupancy: Int = AutoOccupancy,
                  exactOnly: Boolean = false): DataFrame = {
-    // bounded existence check: CollectLimit stops after cap+1 rows
-    // (cap clamped so the +1 can't overflow Int)
-    val cap = math.min(maxBroadcastRows, Int.MaxValue - 1L).toInt
-    val over = queries.limit(cap + 1).count() > cap
+    val cap = Broadcasts.cap(maxBroadcastRows)
+    val over = Broadcasts.boundedCount(queries, cap) > cap
     // exactOnly callers (recall-truth computation) must never receive
     // LSH output masquerading as ground truth — fail loudly, the same
     // contract HammingRoute.Exact pins on the binary side
@@ -808,7 +806,7 @@ object Similarity {
     */
   def binaryHammingTopK(df: DataFrame, id: Column, vec: Column, k: Int,
                         isQuery: Column => Column,
-                        maxBroadcastRows: Long = 100000L,
+                        maxBroadcastRows: Long = Broadcasts.MaxRows,
                         prefixBits: Int = 8,
                         route: HammingRoute = HammingRoute.Auto): DataFrame = {
     require(prefixBits >= 1 && prefixBits <= 32,
@@ -818,15 +816,13 @@ object Similarity {
       .select(col("vid"), col("code.hi").as("hi"), col("code.lo").as("lo"))
     val qs = base.where(isQuery(col("vid")))
       .select(col("vid").as("qid"), col("hi").as("qhi"), col("lo").as("qlo"))
-    // same absolute-count broadcast cap as cosineTopK: bounded existence
-    // check (CollectLimit stops after cap+1 rows), never a corpus
-    // fraction — a proportional query side scales with the data and is
-    // a guaranteed executor OOM at 100×. HammingRoute.Bucketed skips
-    // the check entirely (no count() job, bucket path by construction).
-    val cap = math.min(maxBroadcastRows, Int.MaxValue - 1L).toInt
+    // same absolute-count broadcast gate as cosineTopK.
+    // HammingRoute.Bucketed skips the check entirely (no count() job,
+    // bucket path by construction).
+    val cap = Broadcasts.cap(maxBroadcastRows)
     val over = route match {
       case HammingRoute.Bucketed => true
-      case _                     => qs.limit(cap + 1).count() > cap
+      case _                     => Broadcasts.boundedCount(qs, cap) > cap
     }
     if (over && route == HammingRoute.Exact)
       throw new IllegalStateException(
@@ -1602,7 +1598,7 @@ object Similarity {
                        topK: Int, isQuery: Column => Column,
                        nProbe: Int = IvfAutoProbe,
                        shortlistFrac: Int = AdcShortlistFrac,
-                       maxBroadcastRows: Long = 100000L,
+                       maxBroadcastRows: Long = Broadcasts.MaxRows,
                        knownQueryCount: Option[Long] = None): DataFrame = {
     // ADVICE r19: topK <= 0 used to silently return an empty frame
     // (shortlist >= topK passes at 0)
@@ -1638,21 +1634,16 @@ object Similarity {
     // per distinct query, the same containment contract as the probe).
     // Round 21 (VERDICT r20 #5a): those bounds are corpus-dependent, so
     // the broadcasts are now GATED on the same absolute-row-count
-    // contract as cosineTopK — a bounded existence check on the query
-    // side (CollectLimit stops after cap+1 rows; one cheap pruned scan,
-    // no windows) plus the arithmetic shortlist ceiling
-    // nQ × max(shortlist, ceil(n/frac)) from the index's corpus count.
-    // Past the cap every hint drops and the rerank runs as plain
+    // contract as cosineTopK — a bounded count of the query side (one
+    // cheap pruned scan, no windows) plus the arithmetic shortlist
+    // ceiling nQ × max(shortlist, ceil(n/frac)) from the index's corpus
+    // count. Past the cap every hint drops and the rerank runs as plain
     // shuffle joins — same rows, no single-executor relation.
-    val cap = math.min(maxBroadcastRows, Int.MaxValue - 1L)
-    // Round 22 (ADVICE r21 / VERDICT r21 #7): the bounded existence
-    // count is one driver-blocking job per call — callers that serve
-    // many requests over one memoized index pass the count they
-    // already know (clamped to the same cap so the gate semantics are
-    // identical to measuring it here).
-    val nQ = knownQueryCount
-      .map(n => math.min(n, cap + 1))
-      .getOrElse(v.where(isQuery(col("fid"))).limit((cap + 1).toInt).count())
+    // Callers that serve many requests over one memoized index pass
+    // the query count they already know (`knownQueryCount`), which
+    // saves the one driver-blocking job per call and gates identically.
+    val cap = Broadcasts.cap(maxBroadcastRows)
+    val nQ = Broadcasts.boundedCount(v.where(isQuery(col("fid"))), cap, knownQueryCount)
     val perQuery = math.max(shortlist.toLong,
       if (shortlistFrac <= 0) shortlist.toLong
       else (aix.ix.n + shortlistFrac - 1) / shortlistFrac)

@@ -368,9 +368,23 @@ class DedupSpec extends SparkSpec {
           .linesIterator.count(_.contains("BroadcastExchange"))
       bcasts(under) should be >= 1
       bcasts(over) shouldBe 0
+      // the boundary: labels has exactly 3 rows (nodes 1, 2, 3) — a cap
+      // of exactly 3 routes under it, 2 (one row short) over it
+      labels.count() shouldBe 3L
+      val atCap = Dedup.keepBestPerComponent(docs, "doc_id", "score", labels,
+        maxBroadcastRows = 3L)
+      val pastCap = Dedup.keepBestPerComponent(docs, "doc_id", "score", labels,
+        maxBroadcastRows = 2L)
+      bcasts(atCap) should be >= 1
+      bcasts(pastCap) shouldBe 0
+      // cap 0 never broadcasts (and runs no count job)
+      val zero = Dedup.keepBestPerComponent(docs, "doc_id", "score", labels,
+        maxBroadcastRows = 0L)
+      bcasts(zero) shouldBe 0
       val u = under.orderBy("component").collect().map(_.toSeq)
       val o = over.orderBy("component").collect().map(_.toSeq)
       u shouldBe o
+      Seq(atCap, pastCap, zero).foreach(_.orderBy("component").collect().map(_.toSeq) shouldBe u)
       // semantic pin: component 1 keeps doc 2 (score 30, min id
       // tie-break), singletons keep themselves
       u.map(s => (s(0), s(1))) shouldBe Array((1L, 2L), (4L, 4L), (9L, 9L))

@@ -82,4 +82,26 @@ class FileIngestSpec extends SparkSpec {
     }
     ex.getMessage should include("ingest contract is violated")
   }
+
+  test("the chunk-tag collision guard checks every chunk, not only the head") {
+    // a '__graft_chunk' column on any chunk would be silently replaced
+    // by the staging tag and stripped from the files: fail loudly, even
+    // when the head chunk is clean
+    val base = (0L until 20L).map(i => (0L, i)).toDF("k", "id")
+    val clean = base.where(col("id") < 10)
+    val tagged = base.where(col("id") >= 10).withColumn("__graft_chunk", lit(7))
+    def sink(stream: org.apache.spark.sql.DataFrame) =
+      stream.writeStream.format("memory").queryName("fi_tag_sink").outputMode("append").start()
+    val e1 = intercept[IllegalArgumentException] {
+      QueriesStreaming.fileIngest(spark, Seq(clean, tagged))(sink)
+    }
+    e1.getMessage should include("__graft_chunk")
+    // fileIngest2: the tag on the second chunk of the B side only
+    val e2 = intercept[IllegalArgumentException] {
+      QueriesStreaming.fileIngest2(spark, Seq(clean, clean), Seq(clean, tagged)) { (a, _) =>
+        sink(a)
+      }
+    }
+    e2.getMessage should include("__graft_chunk")
+  }
 }

@@ -77,6 +77,30 @@ class PlanAuditSpec extends SparkSpec {
     "v12_prototypicality" -> "broadcast cell centroids (nCells rows)",
     "v13_binary_hamming" -> "bounded broadcast query side over the 8-byte code scan")
 
+  test("one session factory: no builder outside GraftSession, test session = GraftSession + named overrides") {
+    // the plans this suite audits must be the plans Bench times and
+    // Explain prints — all of them come from one GraftSession.builder
+    import scala.jdk.CollectionConverters._
+    val builderCall = """SparkSession\s*\.\s*builder""".r
+    val sources = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    sources.size should be > 50 // the scan must actually see the tree
+    val text = sources.map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
+    text.collect { case (f, t) if builderCall.findFirstIn(t).isDefined => f } shouldBe
+      Seq("GraftSession.scala")
+    // and only the factory reads the thread-count knob
+    text.collect { case (f, t) if t.contains("\"SPARK_GRAFT_CPUS\"") => f } shouldBe
+      Seq("GraftSession.scala")
+    // launch-time spark.sql.* settings (the SparkContext's conf, which
+    // no test's runtime spark.conf.set can touch)
+    val launched = spark.sparkContext.getConf.getAll.toMap
+      .filter(_._1.startsWith("spark.sql.")) -- SparkSpec.sqlOverrides
+    launched shouldBe GraftSession.sqlConf -- SparkSpec.sqlOverrides
+  }
+
   test("scans prune columns and push filters (representative queries)") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/documents.parquet").exists())

@@ -12,17 +12,18 @@ trait SparkSpec extends AnyFunSuite with Matchers {
 }
 
 object SparkSpec {
+  /** The only `spark.sql.*` settings where the test session departs from
+    * [[GraftSession]]: 4 shuffle partitions for `local[4]`, and a
+    * throwaway warehouse dir. PlanAuditSpec pins that there are no others.
+    */
+  val sqlOverrides: Set[String] = Set("spark.sql.shuffle.partitions", "spark.sql.warehouse.dir")
+
   lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .appName("graft-test")
+    val s = GraftSession.builder("graft-test")
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -191,6 +191,18 @@ class VectorSpec extends SparkSpec {
     Similarity.cosineTopK(df, df, col("vec_id"), col("embedding"),
       k = 3, maxBroadcastRows = 100L, dim = 4, exactOnly = true)
       .count() should be > 0L
+    // the boundary: exactly cap query rows (20) stays exact, cap+1 is over
+    Similarity.cosineTopK(df, df, col("vec_id"), col("embedding"),
+      k = 3, maxBroadcastRows = 20L, dim = 4, exactOnly = true)
+      .count() should be > 0L
+    intercept[IllegalStateException] {
+      Similarity.cosineTopK(df, df, col("vec_id"), col("embedding"),
+        k = 3, maxBroadcastRows = 19L, dim = 4, exactOnly = true)
+    }
+    // an empty query side is under any cap, even 0: the exact path runs
+    Similarity.cosineTopK(df, df.where(lit(false)), col("vec_id"), col("embedding"),
+      k = 3, maxBroadcastRows = 0L, dim = 4, exactOnly = true)
+      .count() shouldBe 0L
   }
 
   test("autoIvfCells: integer ceil-sqrt of ceil(n/50), clamped [4, 4096]") {
@@ -1126,6 +1138,23 @@ class VectorSpec extends SparkSpec {
     withClue("over-cap plan must carry strictly fewer broadcast exchanges: ") {
       bcasts(over) should be < bcasts(under)
     }
+    // the boundary sits on the shortlist bound nQ x perQuery: 20 queries
+    // (ids % 12 == 0 below 240) x max(shortlist 8, ceil(240 / 10)) = 480
+    // rows. A cap of exactly 480 routes under it, 479 over it — and the
+    // memoized-count route (knownQueryCount, as v16b passes it) decides
+    // the same as the measured one
+    val nQ = df.where(isQ(col("vec_id"))).count()
+    nQ shouldBe 20L
+    def rerank(cap: Long, known: Option[Long]): Int =
+      bcasts(Similarity.ivfAdcRerankTopKFromAdc(aix, df, col("vec_id"), col("embedding"),
+        shortlist = 8, topK = 3, isQuery = isQ, nProbe = 2,
+        maxBroadcastRows = cap, knownQueryCount = known))
+    rerank(480L, None) should be > rerank(479L, None)
+    Seq(480L, 479L).foreach { cap =>
+      withClue(s"cap=$cap: ") { rerank(cap, Some(nQ)) shouldBe rerank(cap, None) }
+    }
+    // the known count is what decides: one query more tips 480 over
+    rerank(480L, Some(nQ + 1)) shouldBe rerank(479L, None)
     aix.release(blocking = true)
   }
 }
