@@ -6,115 +6,113 @@ import org.apache.spark.sql.functions._
 /** Coreference-evaluation metric suite (SURVEY.md §2.5 A1-A4) over a
   * cluster-assignment relation: one row per element with a true-cluster
   * column and a predicted-cluster column. All metrics are label-invariant
-  * (`/root/reference/tests/eval_clusters_test.py:7-8`).
+  * (the reference's `tests/eval_clusters_test.py:7-8`).
   *
-  * Scale design: every metric reduces the input with key-partitioned hash
-  * aggregations (map-side partials, one shuffle on the cluster key); the
-  * only non-distributed step is CEAF-e's optimal matching, which runs on
-  * the #true×#pred cluster-level matrix — clusters ≪ elements, mirroring
-  * the reference's own sparse-matrix shortcut
-  * (`meercat/eval_clusters.py:101-112`).
+  * Scale design: every field needs only the sparse (true, pred)
+  * contingency counts, the reference's own shortcut
+  * (`meercat/eval_clusters.py:101-112`). Each entry point is eager: it
+  * runs ONE aggregation job, collects the contingency, computes its
+  * fields on the driver and returns a one-row local DataFrame. The driver
+  * holds one row per distinct (true, pred) pair: at most the element
+  * count, and at most the #true×#pred matrix CEAF-e builds anyway. The
+  * catalog's a1/a2 (5 langs × 20 sources) hold ≤ 100 rows at any scale.
+  * A null label or an empty relation throws `IllegalArgumentException`.
   *
-  * Oracle-exactness: MUC emits single divisions of exact longs (with the
-  * reference's +1e-13 epsilons, `meercat/eval_clusters.py:54,66,70`);
-  * B³'s per-element fraction sum — the one inherently rational reduction —
-  * is computed in scaled integer arithmetic (see [[bCubed]]) so the
-  * result is order-independent and bit-identical across engines.
+  * Oracle-exactness: MUC divides exact longs (with the reference's +1e-13
+  * epsilons, `meercat/eval_clusters.py:54,66,70`); B³ sums in scaled
+  * integers (see [[B3Scale]]), order-independent and bit-identical.
   */
 object Metrics {
 
-  /** A1 — MUC precision/recall/F1 (`meercat/eval_clusters.py:44-74`).
-    *
-    * P = Σ_pred (|c| − #true partitions hit) / Σ_pred (|c| − 1), R is the
-    * mirror image, F1 the harmonic mean; denominators carry the
-    * reference's +1e-13.
-    */
-  def muc(df: DataFrame, trueCol: Column, predCol: Column): DataFrame = {
-    val p = df.groupBy(predCol.as("c"))
-      .agg(count(lit(1)).as("sz"), countDistinct(trueCol).as("parts"))
-      .agg(sum(col("sz") - col("parts")).as("pn"), sum(col("sz") - 1).as("pd"))
-    val r = df.groupBy(trueCol.as("c"))
-      .agg(count(lit(1)).as("sz"), countDistinct(predCol).as("parts"))
-      .agg(sum(col("sz") - col("parts")).as("rn"), sum(col("sz") - 1).as("rd"))
-    val prec = col("pn").cast("double") / (col("pd").cast("double") + lit(1e-13))
-    val rec = col("rn").cast("double") / (col("rd").cast("double") + lit(1e-13))
-    p.crossJoin(r).select(
-      prec.as("muc_p"),
-      rec.as("muc_r"),
-      (lit(2.0) * prec * rec / (prec + rec + lit(1e-13))).as("muc_f1"))
+  /** `(true, pred, count)` cells, labels cast to string after grouping. */
+  private final class Contingency(cells: Array[(String, String, Long)]) {
+    val n: Long = cells.iterator.map(_._3).sum
+    val trueSize: Map[String, Long] = cells.groupMapReduce(_._1)(_._3)(_ + _)
+    val predSize: Map[String, Long] = cells.groupMapReduce(_._2)(_._3)(_ + _)
+
+    // Σ_pred (|c| − #true parts hit) = n − #cells; Σ_pred (|c| − 1) = n − #pred
+    def muc: (Double, Double, Double) = {
+      val prec = (n - cells.length).toDouble / ((n - predSize.size).toDouble + 1e-13)
+      val rec = (n - cells.length).toDouble / ((n - trueSize.size).toDouble + 1e-13)
+      (prec, rec, 2.0 * prec * rec / (prec + rec + 1e-13))
+    }
+
+    // Σ_cells (c²·SCALE) div size, exact: c²·SCALE as a long overflows once
+    // a cell exceeds ~3e6 rows; DuckDB's HUGEINT floor-divides the same
+    def bCubed: (Double, Double, Double) = {
+      var pnum, rnum = BigInt(0)
+      cells.foreach { case (t, p, c) =>
+        val num = BigInt(c) * c * B3Scale
+        pnum += num / predSize(p)
+        rnum += num / trueSize(t)
+      }
+      val prec = pnum.toDouble / (B3Scale.toDouble * n.toDouble)
+      val rec = rnum.toDouble / (B3Scale.toDouble * n.toDouble)
+      (prec, rec, 2.0 * prec * rec / (prec + rec))
+    }
+
+    def ceafE: (Double, Double, Double) = {
+      // sorted ids: the total sums matched weights in column order, so
+      // sorting makes the float-sum order (hence the last ULP) fixed
+      val trueIds = trueSize.keys.toArray.sorted.zipWithIndex.toMap
+      val predIds = predSize.keys.toArray.sorted.zipWithIndex.toMap
+      val phi = Array.ofDim[Double](trueIds.size, predIds.size)
+      cells.foreach { case (t, p, c) => phi(trueIds(t))(predIds(p)) = 2.0 * c / (trueSize(t) + predSize(p)) }
+      val total = hungarianMax(phi)
+      val prec = total / trueIds.size
+      val rec = total / predIds.size
+      (prec, rec, 2 * prec * rec / (prec + rec))
+    }
+
+    // Spark's `median` (percentile 0.5): the middle size, or 0.5·lower + 0.5·upper
+    def medianTrueSize: Double = {
+      val s = trueSize.values.toArray.sorted
+      val mid = s.length / 2
+      if (s.length % 2 == 1) s(mid).toDouble else 0.5 * s(mid - 1) + 0.5 * s(mid)
+    }
   }
+
+  /** The one job; null labels and an empty relation fail on its cells. */
+  private def contingency(df: DataFrame, trueCol: Column, predCol: Column): Contingency = {
+    val cells = df.groupBy(trueCol.as("t"), predCol.as("p")).agg(count(lit(1)).as("c"))
+      .select(col("t").cast("string"), col("p").cast("string"), col("c"))
+      .collect()
+      .map { r =>
+        require(!r.isNullAt(0), s"Metrics: null label in the true-cluster column $trueCol")
+        require(!r.isNullAt(1), s"Metrics: null label in the predicted-cluster column $predCol")
+        (r.getString(0), r.getString(1), r.getLong(2))
+      }
+    require(cells.nonEmpty, "Metrics: empty assignment relation, nothing to score")
+    new Contingency(cells)
+  }
+
+  private def oneRow(df: DataFrame, v: (Double, Double, Double), names: String*): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    Seq(v).toDF(names: _*)
+  }
+
+  /** A1 — MUC precision/recall/F1 (`meercat/eval_clusters.py:44-74`):
+    * P = Σ_pred (|c| − #true partitions hit) / Σ_pred (|c| − 1), R is the
+    * mirror image, F1 the harmonic mean. */
+  def muc(df: DataFrame, trueCol: Column, predCol: Column): DataFrame =
+    oneRow(df, contingency(df, trueCol, predCol).muc, "muc_p", "muc_r", "muc_f1")
 
   /** Fixed-point scale for B³'s fraction sum: contributions are summed as
-    * `(c²·SCALE) div clusterSize` longs, making the reduction exact and
-    * order-independent (a naive double sum is partition-order-dependent).
-    * Error vs the real-valued metric is < #pairs·1e-9.
-    */
+    * `(c²·SCALE) div clusterSize` integers, exact and order-independent.
+    * Error vs the real-valued metric is < #pairs·1e-9. */
   val B3Scale: Long = 1000000000L
 
-  /** A2 — B³ precision/recall/F1 (`meercat/eval_clusters.py:77-98`).
-    *
-    * Per element: |true∩pred|/|pred| (precision) and /|true| (recall),
-    * averaged over all elements. Grouping by the (true,pred) pair turns
-    * the per-element sum into Σ_pairs c²/size — three hash aggregations
-    * and two broadcast-sized joins on cluster ids.
-    */
-  def bCubed(df: DataFrame, trueCol: Column, predCol: Column): DataFrame = {
-    val pairs = df.groupBy(trueCol.as("t"), predCol.as("p")).agg(count(lit(1)).as("c"))
-    val psz = pairs.groupBy(col("p")).agg(sum("c").as("ps"))
-    val tsz = pairs.groupBy(col("t")).agg(sum("c").as("ts"))
-    val joined = pairs.join(psz, "p").join(tsz, "t")
-    // c²·SCALE in decimal(38,0): a long product would overflow once a
-    // (true,pred) pair exceeds ~3e6 rows — real at the 100 TB target.
-    // DuckDB's c*c*SCALE promotes to HUGEINT and floor-divides the same.
-    val agg = joined.agg(
-      sum(expr(s"(cast(c as decimal(38,0)) * c * ${B3Scale}L) div ps")).as("pnum"),
-      sum(expr(s"(cast(c as decimal(38,0)) * c * ${B3Scale}L) div ts")).as("rnum"),
-      sum(col("c")).as("n"))
-    val prec = col("pnum").cast("double") / (lit(B3Scale).cast("double") * col("n").cast("double"))
-    val rec = col("rnum").cast("double") / (lit(B3Scale).cast("double") * col("n").cast("double"))
-    agg.select(
-      prec.as("b3_p"),
-      rec.as("b3_r"),
-      (lit(2.0) * prec * rec / (prec + rec)).as("b3_f1"))
-  }
+  /** A2 — B³ precision/recall/F1 (`meercat/eval_clusters.py:77-98`): per
+    * element |true∩pred|/|pred| (P) and /|true| (R), averaged over elements. */
+  def bCubed(df: DataFrame, trueCol: Column, predCol: Column): DataFrame =
+    oneRow(df, contingency(df, trueCol, predCol).bCubed, "b3_p", "b3_r", "b3_f1")
 
-  /** A3 — CEAF-e (`meercat/eval_clusters.py:101-144`): cluster-level
-    * φ4(k,r) = 2|k∩r|/(|k|+|r|), optimal 1:1 matching (Hungarian), then —
-    * exactly as the reference divides — P = Σφ4/#true, R = Σφ4/#pred.
-    *
-    * The distributed part computes the sparse overlap triples
-    * (true, pred, |∩|, |true|, |pred|); the matching runs on the driver
-    * over the #clusters² matrix, like the reference's
-    * `linear_sum_assignment` call.
-    */
-  def ceafE(df: DataFrame, trueCol: Column, predCol: Column): DataFrame = {
-    val spark = df.sparkSession
-    val pairs = df.groupBy(trueCol.as("t"), predCol.as("p")).agg(count(lit(1)).as("c"))
-    val psz = pairs.groupBy(col("p")).agg(sum("c").as("ps"))
-    val tsz = pairs.groupBy(col("t")).agg(sum("c").as("ts"))
-    val triples = pairs.join(psz, "p").join(tsz, "t")
-      .select(col("t").cast("string"), col("p").cast("string"), col("c"), col("ts"), col("ps"))
-      .collect()
-
-    // sorted ids: collect order varies with partitioning, and the final
-    // total sums matched weights in column order — sorting makes the
-    // float-sum order (hence the last ULP) run-deterministic
-    val trueIds = triples.map(_.getString(0)).distinct.sorted.zipWithIndex.toMap
-    val predIds = triples.map(_.getString(1)).distinct.sorted.zipWithIndex.toMap
-    val nT = trueIds.size
-    val nP = predIds.size
-    val phi = Array.ofDim[Double](nT, nP)
-    triples.foreach { r =>
-      val i = trueIds(r.getString(0)); val j = predIds(r.getString(1))
-      phi(i)(j) = 2.0 * r.getLong(2) / (r.getLong(3) + r.getLong(4))
-    }
-    val total = hungarianMax(phi)
-    val prec = total / nT
-    val rec = total / nP
-    val f1 = 2 * prec * rec / (prec + rec)
-    import spark.implicits._
-    Seq((prec, rec, f1)).toDF("ceafe_p", "ceafe_r", "ceafe_f1")
-  }
+  /** A3 — CEAF-e (`meercat/eval_clusters.py:101-144`): φ4(k,r) =
+    * 2|k∩r|/(|k|+|r|), optimal 1:1 matching ([[hungarianMax]]), then — as
+    * the reference divides — P = Σφ4/#true, R = Σφ4/#pred. */
+  def ceafE(df: DataFrame, trueCol: Column, predCol: Column): DataFrame =
+    oneRow(df, contingency(df, trueCol, predCol).ceafE, "ceafe_p", "ceafe_r", "ceafe_f1")
 
   /** Maximum-weight 1:1 assignment over a (possibly rectangular) dense
     * weight matrix; returns the optimal total weight. Classic O(n²m)
@@ -193,15 +191,15 @@ object Metrics {
     * reference's printed number.
     */
   def evalSummary(df: DataFrame, trueCol: Column, predCol: Column): DataFrame = {
-    val m = muc(df, trueCol, predCol)
-    val b = bCubed(df, trueCol, predCol)
-    val c = ceafE(df, trueCol, predCol)
-    val census = df.groupBy(trueCol.as("t")).agg(count(lit(1)).as("sz"))
-      .agg(
-        count(lit(1)).cast("long").as("n_true_clusters"),
-        median(col("sz")).cast("double").as("median_true_size"))
-    val nPred = df.agg(countDistinct(predCol).cast("long").as("n_pred_clusters"))
-    m.crossJoin(b).crossJoin(c).crossJoin(census).crossJoin(nPred)
-      .withColumn("mean_f1", (col("muc_f1") + col("b3_f1") + col("ceafe_f1")) / 3.0)
+    val k = contingency(df, trueCol, predCol)
+    val (mp, mr, mf) = k.muc
+    val (bp, br, bf) = k.bCubed
+    val (cp, cr, cf) = k.ceafE
+    val spark = df.sparkSession
+    import spark.implicits._
+    Seq((mp, mr, mf, bp, br, bf, cp, cr, cf,
+        k.trueSize.size.toLong, k.medianTrueSize, k.predSize.size.toLong, (mf + bf + cf) / 3.0))
+      .toDF("muc_p", "muc_r", "muc_f1", "b3_p", "b3_r", "b3_f1", "ceafe_p", "ceafe_r", "ceafe_f1",
+        "n_true_clusters", "median_true_size", "n_pred_clusters", "mean_f1")
   }
 }

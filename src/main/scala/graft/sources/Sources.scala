@@ -299,8 +299,9 @@ object Sources {
       .select(concat_ws(", ", col(trueCol), col(predCol)).as("value"))
       .write.mode("overwrite").text(path)
 
+  // declared schema: no inference job; a line without two fields fails the read
   def readClusterPairs(spark: SparkSession, path: String): DataFrame =
-    spark.read.csv(path).toDF("true_id", "pred_id")
+    spark.read.schema("true_id string, pred_id string").option("mode", "FAILFAST").csv(path)
       .select(trim(col("true_id")).as("true_id"), trim(col("pred_id")).as("pred_id"))
 
   // ------------------------------------------------------------ S11

@@ -31,6 +31,13 @@ class MetricsGoldenSpec extends SparkSpec {
       b.getDouble(0) shouldBe bp +- 1e-8
       b.getDouble(1) shouldBe br +- 1e-8
       b.getDouble(2) shouldBe bf +- 1e-8
+      val s = Metrics.evalSummary(df, col("t"), col("p")).collect().head
+      Seq("muc_p" -> mp, "muc_r" -> mr, "muc_f1" -> mf).foreach { case (f, v) =>
+        withClue(s"evalSummary $f: ")(s.getAs[Double](f) shouldBe v +- 1e-12)
+      }
+      Seq("b3_p" -> bp, "b3_r" -> br, "b3_f1" -> bf).foreach { case (f, v) =>
+        withClue(s"evalSummary $f: ")(s.getAs[Double](f) shouldBe v +- 1e-8)
+      }
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 
 import graft.operators.{Metrics, Trees}
@@ -86,6 +86,62 @@ class MetricsSpec extends SparkSpec {
     // more rows than columns: only min(n,m) matches count
     Metrics.hungarianMax(Array(Array(2.0), Array(7.0), Array(1.0))) shouldBe 7.0 +- 1e-12
     Metrics.hungarianMax(Array.empty[Array[Double]]) shouldBe 0.0
+  }
+
+  private val entryPoints: Seq[(String, (DataFrame, Column, Column) => DataFrame)] = Seq(
+    "muc" -> Metrics.muc, "bCubed" -> Metrics.bCubed, "ceafE" -> Metrics.ceafE,
+    "evalSummary" -> Metrics.evalSummary)
+
+  test("null labels fail loudly in every entry point, naming the column") {
+    // scored inconsistently before: MUC's countDistinct skipped the null,
+    // B³ and the census counted it as a cluster
+    val nullTrue = Seq(("a", "x"), (null, "x"), ("b", "y")).toDF("t", "p")
+    val nullPred = Seq(("a", "x"), ("a", null), ("b", "y")).toDF("t", "p")
+    entryPoints.foreach { case (name, f) =>
+      withClue(s"$name: ") {
+        intercept[IllegalArgumentException](f(nullTrue, col("t"), col("p"))).getMessage should
+          include ("true-cluster column t")
+        intercept[IllegalArgumentException](f(nullPred, col("t"), col("p"))).getMessage should
+          include ("predicted-cluster column p")
+      }
+    }
+  }
+
+  test("an empty assignment relation fails loudly in every entry point") {
+    val empty = Seq.empty[(String, String)].toDF("t", "p")
+    entryPoints.foreach { case (name, f) =>
+      withClue(s"$name: ") {
+        intercept[IllegalArgumentException](f(empty, col("t"), col("p"))).getMessage should
+          include ("empty assignment relation")
+      }
+    }
+  }
+
+  test("evalSummary and muc each launch at most 2 Spark jobs (one contingency aggregation)") {
+    val df = assign(luoTrue, Map("x" -> Seq("1", "2", "3", "4", "5"), "y" -> Seq("6", "7", "8", "9", "A", "B", "C")))
+    // count only this test's job group, and drain the listener bus first
+    val group = "metricsspec-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (group == j.properties.getProperty("spark.jobGroup.id")) jobs.incrementAndGet()
+    }
+    def jobsOf(run: => Unit): Int = {
+      jobs.set(0)
+      spark.sparkContext.setJobGroup(group, "metrics job count", false)
+      try run finally spark.sparkContext.clearJobGroup()
+      // listenerBus is private[spark] in source but public in bytecode
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val summary = jobsOf(Metrics.evalSummary(df, col("t"), col("p")).collect())
+      val muc = jobsOf(Metrics.muc(df, col("t"), col("p")).collect())
+      withClue("evalSummary: ")(summary should (be >= 1 and be <= 2))
+      withClue("muc: ")(muc should (be >= 1 and be <= 2))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("dendrogram purity: reference toy tree = 0.75") {

@@ -22,8 +22,6 @@ class PlanAuditSpec extends SparkSpec {
 
   /** Batch queries whose plan legitimately serializes to one partition. */
   private val singlePartitionOk: Map[String, String] = Map(
-    "a1_muc" -> "global one-row metric aggregate (map-side partials, one final row)",
-    "a2_b3" -> "global one-row metric aggregate",
     "a5_conflated_divided" -> "global rollup over the aggregated cluster relation",
     "a6_census" -> "census over the aggregated (bounded) cluster-size histogram",
     "a8_max_active" -> "global max over per-day aggregates (bounded by #days)",
@@ -51,7 +49,6 @@ class PlanAuditSpec extends SparkSpec {
     * fitted codebooks — never corpus x corpus).
     */
   private val bnljOk: Map[String, String] = Map(
-    "a1_muc" -> "one-row aggregate crossed back as a scalar",
     "a5_conflated_divided" -> "one-row totals crossed back",
     "a13_triplets" -> "negative sampling vs the broadcast entity dimension",
     "d9_semantic_dedup" -> "broadcast cell representatives (nCells rows)",

@@ -51,6 +51,17 @@ class PropertySpec extends SparkSpec {
         val relabeled = rows.map { case (t, p) => (t, "z" + p + "q") }.toDF("t", "p")
         val b2 = Metrics.bCubed(relabeled, col("t"), col("p")).collect().head
         assert(math.abs(b.getDouble(2) - b2.getDouble(2)) < 1e-12)
+        // the summary row agrees with the entry points and is label-invariant too
+        val s = Metrics.evalSummary(df, col("t"), col("p")).collect().head
+        val s2 = Metrics.evalSummary(relabeled, col("t"), col("p")).collect().head
+        (0 until 3).foreach { i =>
+          assert(s.getDouble(i) == m.getDouble(i) && s.getDouble(3 + i) == b.getDouble(i) &&
+            s.getDouble(6 + i) == c.getDouble(i), s"evalSummary field $i disagrees with its entry point")
+        }
+        s2.toSeq.zip(s.toSeq).foreach {
+          case (x: Double, y: Double) => assert(math.abs(x - y) < 1e-12, s"evalSummary not label-invariant: $s vs $s2")
+          case (x, y) => assert(x == y, s"evalSummary not label-invariant: $s vs $s2")
+        }
       }
     }
   }

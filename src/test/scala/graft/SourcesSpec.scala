@@ -69,6 +69,18 @@ class SourcesSpec extends SparkSpec {
     back.toSet shouldBe Set(("a", "x"), ("b", "y"))
   }
 
+  test("cluster-pairs reader fails on a line without exactly two fields (S10)") {
+    // a 3-field line, and a 1-field line that is not the first: both
+    // used to be truncated or null-filled silently
+    Seq("a, x\nb, y, z\n", "a, x\nb\n").foreach { text =>
+      val dir = Files.createTempDirectory("graft-pairs-bad")
+      Files.writeString(dir.resolve("part-0.csv"), text)
+      withClue(text) {
+        intercept[Exception](Sources.readClusterPairs(spark, dir.toString).collect())
+      }
+    }
+  }
+
   test("dendrogram TSV roundtrip feeds dendrogramPurity (S11 + A4)") {
     val dir = Files.createTempDirectory("graft-tree").toString + "/tree"
     val tree = Seq(
