@@ -784,11 +784,9 @@ object QueriesRelational {
     val obs = slidingHllObs(s, dir)
     val chunks = QueriesStreaming.rangeChunks(obs, "day")
 
-    QueriesStreaming.withShufflePartitions(s, 4) {
-      QueriesStreaming.fileIngest(s, chunks, cache = Seq(obs)) { stream =>
-        StreamingSketch.dailyRegisters(stream.as[DayRhoEvent])
-          .writeStream.format("memory").queryName("st24_sink").outputMode("append").start()
-      }
+    QueriesStreaming.fileIngest(s, chunks, cache = Seq(obs)) { stream =>
+      StreamingSketch.dailyRegisters(stream.as[DayRhoEvent])
+        .writeStream.format("memory").queryName("st24_sink").outputMode("append").start()
     }
 
     val r = s.table("st24_sink")

@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.GreedyClustering.Params
 import graft.streaming.StreamingClustering
@@ -15,204 +21,136 @@ import graft.streaming.StreamingClustering.MentionEvent
 object QueriesStreaming {
   import QueriesRelational.Q
 
-  /** Run `body` with a reduced shuffle-partition count. Stateful
-    * streaming operators open one state store per shuffle partition per
-    * micro-batch; at the harness's data sizes 32 partitions means mostly
-    * EMPTY stores whose checkpoint upkeep dominates wall time. Results
-    * are partition-invariant (every query orders its output). The conf
-    * is restored afterwards; streams capture it at start.
-    *
-    * State-store provider toggle: `spark.graft.stateStore=rocksdb`
-    * (session conf, or the SPARK_GRAFT_STATE_STORE env var) routes
-    * every streaming twin through RocksDBStateStoreProvider instead of
-    * the default HDFS-backed in-memory provider. At 100 TB streaming
-    * state the RocksDB provider is the production choice (state spills
-    * to local disk instead of executor heap, incremental checkpoints);
-    * outputs are provider-invariant — StreamingSpec runs st17 under
-    * both and asserts identical results.
-    */
-  private[graft] def withShufflePartitions[T](
-      s: org.apache.spark.sql.SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val pKey = "spark.sql.streaming.stateStore.providerClass"
-    val rocks = sys.env.get("SPARK_GRAFT_STATE_STORE")
-      .orElse(s.conf.getOption("spark.graft.stateStore"))
-      .exists(_.equalsIgnoreCase("rocksdb"))
-    val prev = s.conf.get(key)
-    val prevP = s.conf.getOption(pKey)
-    s.conf.set(key, n.toString)
-    if (rocks) s.conf.set(pKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally {
-      s.conf.set(key, prev)
-      if (rocks) prevP match {
-        case Some(p) => s.conf.set(pKey, p)
-        case None => s.conf.unset(pKey)
-      }
-    }
-  }
-
-  // State stores per micro-batch = shuffle partitions. Round-6 A/B at
-  // sf0.1 under the repaired median protocol: st-family 23.4 s at 4 vs
-  // 25.6 s at 2 — the round-4 choice of 4 stands (and keeps the plans
-  // genuinely distributed).
+  // State stores per micro-batch = shuffle partitions: at the harness's
+  // data sizes 32 partitions means mostly EMPTY stores whose checkpoint
+  // upkeep dominates wall time, and results are partition-invariant
+  // (every query orders its output). Round-6 A/B at sf0.1 under the
+  // repaired median protocol: st-family 23.4 s at 4 vs 25.6 s at 2 —
+  // the round-4 choice of 4 stands (and keeps the plans genuinely
+  // distributed).
   private[graft] val StP = 4
 
   // Ingest staging root: tmpfs when available (the same choice the
   // bench makes for checkpoints) — these are throwaway per-run feeds,
   // and the measured path should time the STREAM, not /tmp disk flushes.
-  private[graft] def ingestRoot: java.nio.file.Path = {
+  private[graft] def ingestRoot: Path = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite) shm.toPath
-    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    else Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
-  /** Drive a streaming query from a FILE SOURCE: each chunk DataFrame is
-    * appended (executor-side parquet write, never a driver collect) into
-    * a temp ingest dir and drained with processAllAvailable, so one
-    * chunk = one micro-batch and the measured stream READS FILES — the
+  /** Delete `d` and everything under it, deepest entries first. */
+  private[graft] def rmRf(d: Path): Unit = {
+    val walk = Files.walk(d)
+    try walk.iterator().asScala.toList.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
+    finally walk.close()
+  }
+
+  /** Single-source [[fileIngest]]: one chunk list feeding one query. */
+  private[graft] def fileIngest(s: SparkSession, chunks: Seq[DataFrame],
+                                cache: Seq[DataFrame] = Nil)
+                               (start: DataFrame => StreamingQuery): Unit =
+    fileIngest(s, Seq(chunks), cache)(in => Seq(start(in.head)))
+
+  /** The ingest protocol every streaming twin replays its input through:
+    * each chunk DataFrame is written executor-side as parquet (never a
+    * driver collect) and renamed into a directory a FILE SOURCE
+    * watches, then the queries drain with processAllAvailable — one
+    * chunk = one micro-batch, and the measured stream READS FILES, the
     * honest 100 TB ingest shape. MemoryStream twins remain in
-    * StreamingSpec for the batching-independence properties; this
-    * helper is what the driver-benched st queries use so no corpus ever
-    * materializes on the driver.
+    * StreamingSpec for the batching-independence properties.
     *
-    * `start` receives the streaming DataFrame (schema = chunks.head's)
-    * and must return a STARTED query writing to a memory sink; the
-    * helper stops it and deletes the ingest dir before returning.
-    * FileStreamSource ignores `_`-prefixed files, so parquet's _SUCCESS
-    * markers never enter a batch; with no maxFilesPerTrigger every file
-    * appended since the last drain lands in a single micro-batch.
+    * `sides` holds one chunk list per file source, all of one length.
+    * `start` receives one streaming DataFrame per side (schema = that
+    * side's head chunk) and returns its STARTED queries. Chunk i of
+    * every side lands before drain i, so aligned sides advance their
+    * watermarks together (what lets a stream-stream join evict state
+    * live), and each drain runs the queries in the order returned, so a
+    * query reading another's sink sees that chunk's output in the same
+    * drain. FileStreamSource ignores `_`-prefixed files, so parquet's
+    * _SUCCESS markers never enter a batch; with no maxFilesPerTrigger
+    * every file renamed in since the last drain lands in one batch.
+    *
+    * The whole body runs at [[StP]] shuffle partitions, and on the
+    * RocksDB state store when the session conf sets
+    * `spark.graft.stateStore=rocksdb` (the HDFS-backed in-memory
+    * provider otherwise — at 100 TB state RocksDB is the production
+    * choice: state spills to local disk, checkpoints are incremental;
+    * outputs are provider-invariant, StreamingSpec runs st17 under
+    * both). Streams capture both settings at start; both are restored
+    * on exit. `cache` lists the chunks' shared prep, persisted so the
+    * chunk writes don't each recompute it. The helper stops every query
+    * and deletes its ingest dirs before returning, also on failure.
+    * (The DummyImplicit only keeps this overload distinct from the
+    * single-source one after erasure.)
     */
-  private[graft] def fileIngest(s: org.apache.spark.sql.SparkSession,
-                                chunks: Seq[org.apache.spark.sql.DataFrame],
-                                cache: Seq[org.apache.spark.sql.DataFrame] = Nil)
-                               (start: org.apache.spark.sql.DataFrame =>
-                                 org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    // `cache`: the chunks' shared event-prep parent(s) — persisted so
-    // the N chunk writes don't each recompute the prep from the source
-    // (the local[n] form of staging the prepared feed once; unpersist
-    // is non-blocking, a plan still referencing the frame recomputes
-    // lazily).
-    cache.foreach(_.persist())
-    val dir = java.nio.file.Files.createTempDirectory(ingestRoot, "graft-ingest-")
-    val staging = java.nio.file.Files.createTempDirectory(ingestRoot, "graft-staging-")
+  private[graft] def fileIngest(s: SparkSession, sides: Seq[Seq[DataFrame]],
+                                cache: Seq[DataFrame])
+                               (start: Seq[DataFrame] => Seq[StreamingQuery])
+                               (implicit d: DummyImplicit): Unit = {
+    require(sides.nonEmpty && sides.forall(_.length == sides.head.length),
+      "fileIngest: chunk lists must align")
+    // a pre-existing column of the staging tag's name would be silently
+    // REPLACED by withColumn and then stripped from the file contents
+    // by partitionBy — fail loudly instead, on any chunk of any side
+    val tag = "__graft_chunk"
+    require(sides.flatten.forall(!_.columns.contains(tag)),
+      s"fileIngest: a chunk schema already has a '$tag' column")
+    val rocks = s.conf.getOption("spark.graft.stateStore").exists(_.equalsIgnoreCase("rocksdb"))
+    val settings = Seq("spark.sql.shuffle.partitions" -> StP.toString) ++
+      (if (rocks) Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+       else Nil)
+    val saved = settings.map { case (k, _) => k -> s.conf.getOption(k) }
+    val root = Files.createTempDirectory(ingestRoot, "graft-ingest-")
     try {
-      // watch one level of chunk SUBDIRECTORIES (glob): each chunk is
-      // written to a staging dir and atomically RENAMED into the
-      // watched tree, so the continuously-polling source can never
+      settings.foreach { case (k, v) => s.conf.set(k, v) }
+      cache.foreach(_.persist())
+      // each source watches one level of chunk SUBDIRECTORIES (glob):
+      // a chunk is written to a staging dir and atomically RENAMED into
+      // the watched tree, so the continuously-polling source can never
       // list a chunk mid-job-commit and split it across two
-      // micro-batches — which would both break the one-chunk-one-batch
-      // protocol and (for order-contract operators like the pack) leak
-      // commit-order as arrival-order
-      val stream = s.readStream.schema(chunks.head.schema).parquet(dir.toString + "/*")
-      val query = start(stream)
+      // micro-batches — which would both break one-chunk-one-batch and
+      // (for order-contract operators like the pack) leak commit order
+      // as arrival order
+      val watched = sides.indices.map(k => Files.createDirectory(root.resolve(s"in-$k")))
+      val staging = sides.indices.map(k => root.resolve(s"staging-$k"))
+      val queries = start(sides.zip(watched).map { case (chunks, dir) =>
+        s.readStream.schema(chunks.head.schema).parquet(dir.toString + "/*")
+      })
       try {
-        // PRE-STAGE every chunk in ONE write job (round 21): the old
-        // shape paid one Spark job + parquet commit protocol per chunk,
-        // interleaved with the drains — measured ~0.2-0.45 s of pure
-        // harness tax per chunk at sf0.1.
-        // A single partitionBy write stages all chunks at once: each
-        // chunk keeps its own ≤StP files (the per-chunk coalesce runs
-        // BEFORE the union, so union partition provenance pins every
-        // task to one chunk dir), the partition column never appears
-        // in the file contents, and the atomic RENAME into the watched
-        // tree remains the batch boundary — one-chunk-one-batch and
-        // arrival order are byte-identical to the per-chunk writes.
-        val tag = "__graft_chunk"
-        // a pre-existing column of the tag's name would be silently
-        // REPLACED by withColumn and then stripped from the file
-        // contents by partitionBy — fail loudly instead, on any chunk
-        require(chunks.forall(!_.columns.contains(tag)),
-          s"fileIngest: a chunk schema already has a '$tag' column")
-        val tagged = chunks.zipWithIndex
-          .map { case (c, i) => c.coalesce(StP).withColumn(tag, lit(i)) }
-          .reduce(_.unionByName(_))
-        tagged.write.mode("overwrite").partitionBy(tag).parquet(staging.toString)
-        chunks.indices.foreach { i =>
-          val stag = staging.resolve(s"$tag=$i")
-          // an all-empty chunk writes no partition dir — the old shape
-          // landed a dir holding only the (ignored, _-prefixed)
-          // _SUCCESS marker, so "nothing new for this batch" is the
-          // same behavior either way
-          if (java.nio.file.Files.isDirectory(stag))
-            java.nio.file.Files.move(stag, dir.resolve(s"chunk-$i"))
-          query.processAllAvailable()
-        }
-      } finally query.stop()
-    } finally {
-      cache.foreach(_.unpersist(blocking = false))
-      import scala.jdk.CollectionConverters._
-      Seq(dir, staging).foreach { d =>
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-  }
-
-  /** Two-source variant of [[fileIngest]] for stream-stream joins: the
-    * i-th chunk of each side lands before the i-th drain, so both
-    * streams advance their watermarks together (time-aligned ingest —
-    * what lets the join evict state live).
-    */
-  private[graft] def fileIngest2(s: org.apache.spark.sql.SparkSession,
-                                 aChunks: Seq[org.apache.spark.sql.DataFrame],
-                                 bChunks: Seq[org.apache.spark.sql.DataFrame],
-                                 cache: Seq[org.apache.spark.sql.DataFrame] = Nil)
-                                (start: (org.apache.spark.sql.DataFrame,
-                                         org.apache.spark.sql.DataFrame) =>
-                                  org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    require(aChunks.length == bChunks.length, "chunk lists must align")
-    cache.foreach(_.persist())
-    val dirA = java.nio.file.Files.createTempDirectory(ingestRoot, "graft-ingest-a-")
-    val dirB = java.nio.file.Files.createTempDirectory(ingestRoot, "graft-ingest-b-")
-    def rmRf(d: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(d).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-    val stagA = java.nio.file.Files.createTempDirectory(ingestRoot, "graft-staging-a-")
-    val stagB = java.nio.file.Files.createTempDirectory(ingestRoot, "graft-staging-b-")
-    try {
-      // same staged-write + atomic-rename protocol as fileIngest (no
-      // mid-commit chunk splits), on both sides
-      val sa = s.readStream.schema(aChunks.head.schema).parquet(dirA.toString + "/*")
-      val sb = s.readStream.schema(bChunks.head.schema).parquet(dirB.toString + "/*")
-      val query = start(sa, sb)
-      try {
-        // same one-job pre-staging as fileIngest (round 21), one write
-        // per SIDE instead of one per (side, chunk) — the two sides'
-        // jobs stay concurrent (both staged before any rename, which is
-        // more than the time-aligned arrival contract needs: chunk i of
-        // each side still lands before drain i)
+        // PRE-STAGE every chunk of a side in ONE partitionBy write job
+        // (one job per chunk cost ~0.2-0.45 s of harness tax per chunk
+        // at sf0.1); the sides' jobs run concurrently. The per-chunk
+        // coalesce runs BEFORE the union, so union partition provenance
+        // pins every task to one chunk dir, and the tag never appears
+        // in the file contents.
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
         import scala.concurrent.duration.Duration
-        val tag = "__graft_chunk"
-        // same every-chunk collision guard as fileIngest, both sides
-        require((aChunks ++ bChunks).forall(!_.columns.contains(tag)),
-          s"fileIngest2: a chunk schema already has a '$tag' column")
-        def staged(chunks: Seq[org.apache.spark.sql.DataFrame],
-                   stag: java.nio.file.Path): Future[Unit] = Future {
-          chunks.zipWithIndex
-            .map { case (c, i) => c.coalesce(StP).withColumn(tag, lit(i)) }
-            .reduce(_.unionByName(_))
-            .write.mode("overwrite").partitionBy(tag).parquet(stag.toString)
-        }
-        val wa = staged(aChunks, stagA)
-        val wb = staged(bChunks, stagB)
-        Await.result(wa, Duration.Inf); Await.result(wb, Duration.Inf)
-        aChunks.indices.foreach { i =>
-          Seq((stagA, dirA), (stagB, dirB)).foreach { case (stag, dir) =>
-            val p = stag.resolve(s"$tag=$i")
-            if (java.nio.file.Files.isDirectory(p))
-              java.nio.file.Files.move(p, dir.resolve(s"chunk-$i"))
+        val writes = sides.zip(staging).map { case (chunks, stag) =>
+          Future {
+            chunks.zipWithIndex
+              .map { case (c, i) => c.coalesce(StP).withColumn(tag, lit(i)) }
+              .reduce(_.unionByName(_))
+              .write.mode("overwrite").partitionBy(tag).parquet(stag.toString)
           }
-          query.processAllAvailable()
         }
-      } finally query.stop()
+        writes.map(Await.ready(_, Duration.Inf).value.get).foreach(_.get)
+        sides.head.indices.foreach { i =>
+          staging.zip(watched).foreach { case (stag, dir) =>
+            // an all-empty chunk writes no partition dir: nothing new
+            // for this batch, the same as a chunk of _SUCCESS only
+            val p = stag.resolve(s"$tag=$i")
+            if (Files.isDirectory(p)) Files.move(p, dir.resolve(s"chunk-$i"))
+          }
+          queries.foreach(_.processAllAvailable())
+        }
+      } finally queries.foreach(_.stop())
     } finally {
       cache.foreach(_.unpersist(blocking = false))
-      rmRf(dirA); rmRf(dirB); rmRf(stagA); rmRf(stagB)
+      rmRf(root)
+      saved.foreach { case (k, v) => v.fold(s.conf.unset(k))(s.conf.set(k, _)) }
     }
   }
 
@@ -225,8 +163,8 @@ object QueriesStreaming {
     * row materialization; hash-distributed columns split evenly, dense
     * ids nearly so, and uneven chunks only skew micro-batch sizes.
     */
-  private[graft] def rangeChunks(df: org.apache.spark.sql.DataFrame, ord: String,
-                                 n: Int = 3): Seq[org.apache.spark.sql.DataFrame] = {
+  private[graft] def rangeChunks(df: DataFrame, ord: String,
+                                 n: Int = 3): Seq[DataFrame] = {
     val r = df.agg(min(col(ord)), max(col(ord))).head()
     require(!r.isNullAt(0), s"rangeChunks: empty input (no $ord values)")
     val (lo, hi) = (r.getLong(0), r.getLong(1))
@@ -255,13 +193,11 @@ object QueriesStreaming {
         col("vec_id").as("order"), col("embedding").as("vec"))
     val chunks = rangeChunks(events, "order")
 
-    withShufflePartitions(s, StP) {
-      fileIngest(s, chunks, cache = Seq(events)) { stream =>
-        StreamingClustering.greedyCluster(
-          stream.as[MentionEvent],
-          Params("backwards", limit = -1, threshold = Theta, cosine = true))
-          .writeStream.format("memory").queryName("st1_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(events)) { stream =>
+      StreamingClustering.greedyCluster(
+        stream.as[MentionEvent],
+        Params("backwards", limit = -1, threshold = Theta, cosine = true))
+        .writeStream.format("memory").queryName("st1_sink").outputMode("append").start()
     }
 
     s.table("st1_sink")
@@ -311,13 +247,11 @@ object QueriesStreaming {
         col("vec_id").as("order"), col("embedding").as("vec"))
     val chunks = rangeChunks(events, "order")
 
-    withShufflePartitions(s, StP) {
-      fileIngest(s, chunks, cache = Seq(events)) { stream =>
-        StreamingGrinch.flatCluster(
-          stream.as[PointEvent],
-          graft.operators.Grinch.Params(sim = "dot", norm = "l2"), threshold = Theta)
-          .writeStream.format("memory").queryName("st2_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(events)) { stream =>
+      StreamingGrinch.flatCluster(
+        stream.as[PointEvent],
+        graft.operators.Grinch.Params(sim = "dot", norm = "l2"), threshold = Theta)
+        .writeStream.format("memory").queryName("st2_sink").outputMode("append").start()
     }
 
     val w = org.apache.spark.sql.expressions.Window
@@ -345,11 +279,9 @@ object QueriesStreaming {
         col("user_id").cast("string").as("entity"))
     val chunks = rangeChunks(events, "order")
 
-    withShufflePartitions(s, StP) {
-      fileIngest(s, chunks, cache = Seq(events)) { stream =>
-        StreamingVocab.dictEncode(stream.as[TokenEvent])
-          .writeStream.format("memory").queryName("st3_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(events)) { stream =>
+      StreamingVocab.dictEncode(stream.as[TokenEvent])
+        .writeStream.format("memory").queryName("st3_sink").outputMode("append").start()
     }
 
     s.table("st3_sink")
@@ -387,7 +319,7 @@ object QueriesStreaming {
         round(col("value") * 100, 0).cast("long").as("cents"))
     // bounded scalar probe (the sentinel needs the max event time)
     val maxNs = base.agg(max(col("ns"))).head().getLong(0)
-    def toTs(c: org.apache.spark.sql.DataFrame) =
+    def toTs(c: DataFrame) =
       // integer div — a double roundtrip would lose ns precision (ns
       // epoch values exceed double's 53-bit exact-integer range)
       c.select(timestamp_micros(expr("ns div 1000")).as("ts"),
@@ -398,13 +330,11 @@ object QueriesStreaming {
     val cuts = rangeChunks(base, "ns").map(toTs)
     val chunks = cuts.init :+ cuts.last.unionAll(sentinel)
 
-    withShufflePartitions(s, StP) {
-      fileIngest(s, chunks, cache = Seq(base)) { stream =>
-        StreamingAnalytics.windowedEventStats(
-          stream, col("ts"), col("event_type"), col("cents"),
-          window = "1 hour", slide = "1 hour", watermark = "1 minute")
-          .writeStream.format("memory").queryName("st4_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(base)) { stream =>
+      StreamingAnalytics.windowedEventStats(
+        stream, col("ts"), col("event_type"), col("cents"),
+        window = "1 hour", slide = "1 hour", watermark = "1 minute")
+        .writeStream.format("memory").queryName("st4_sink").outputMode("append").start()
     }
 
     s.table("st4_sink")
@@ -436,13 +366,11 @@ object QueriesStreaming {
     val chunks = (0 until 3).map(i =>
       base.where(pmod(col("doc_id"), lit(3)) === i))
 
-    withShufflePartitions(s, StP) {
-      fileIngest(s, chunks, cache = Seq(base)) { stream =>
-        stream
-          .dropDuplicates("text")
-          .select(graft.functions.TextFunctions.stringHash(col("text")).as("text_hash"))
-          .writeStream.format("memory").queryName("st5_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(base)) { stream =>
+      stream
+        .dropDuplicates("text")
+        .select(graft.functions.TextFunctions.stringHash(col("text")).as("text_hash"))
+        .writeStream.format("memory").queryName("st5_sink").outputMode("append").start()
     }
 
     s.table("st5_sink").orderBy("text_hash")
@@ -473,13 +401,11 @@ object QueriesStreaming {
         col("vec_id").as("order"), col("embedding").as("vec"))
     val chunks = rangeChunks(events, "order")
 
-    withShufflePartitions(s, StP) {
-      fileIngest(s, chunks, cache = Seq(events)) { stream =>
-        StreamingClustering.greedyCluster(
-          stream.as[MentionEvent],
-          Params("diversity-cache", limit = 50, threshold = Theta, cosine = true))
-          .writeStream.format("memory").queryName("st7_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(events)) { stream =>
+      StreamingClustering.greedyCluster(
+        stream.as[MentionEvent],
+        Params("diversity-cache", limit = 50, threshold = Theta, cosine = true))
+        .writeStream.format("memory").queryName("st7_sink").outputMode("append").start()
     }
 
     s.table("st7_sink")
@@ -505,11 +431,9 @@ object QueriesStreaming {
         col("ts").cast("long").as("ts"))
     val chunks = rangeChunks(events, "ts")
 
-    withShufflePartitions(s, StP) {
-      fileIngest(s, chunks, cache = Seq(events)) { stream =>
-        StreamingSessions.sessionize(stream.as[SessionEvent], gapNs = 3600L * 1000000000L)
-          .writeStream.format("memory").queryName("st9_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(events)) { stream =>
+      StreamingSessions.sessionize(stream.as[SessionEvent], gapNs = 3600L * 1000000000L)
+        .writeStream.format("memory").queryName("st9_sink").outputMode("append").start()
     }
 
     s.table("st9_sink")
@@ -541,12 +465,9 @@ object QueriesStreaming {
     val chunks = (0 until 3).map(i =>
       rows.where(pmod(col("event_id"), lit(3)) === i).drop("event_id"))
 
-    withShufflePartitions(s, StP) {
-      import s.implicits._
-      fileIngest(s, chunks, cache = Seq(rows)) { stream =>
-        StreamingSketch.hllDistinct(stream.as[HashEvent])
-          .writeStream.format("memory").queryName("st10_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(rows)) { stream =>
+      StreamingSketch.hllDistinct(stream.as[HashEvent])
+        .writeStream.format("memory").queryName("st10_sink").outputMode("append").start()
     }
 
     val w = org.apache.spark.sql.expressions.Window
@@ -565,9 +486,9 @@ object QueriesStreaming {
     * rows equal the batch tree, so each twin hash-matches its batch
     * query's recursive-CTE oracle.
     */
-  private def streamingGrinchTwin(s: org.apache.spark.sql.SparkSession, dir: String,
+  private def streamingGrinchTwin(s: SparkSession, dir: String,
       sinkName: String, rowFilter: org.apache.spark.sql.Column, dim: Option[Int],
-      scaleDiv: Double, p: graft.operators.Grinch.Params): org.apache.spark.sql.DataFrame = {
+      scaleDiv: Double, p: graft.operators.Grinch.Params): DataFrame = {
     import s.implicits._
     import graft.streaming.StreamingGrinch
     import graft.streaming.StreamingGrinch.PointEvent
@@ -585,11 +506,9 @@ object QueriesStreaming {
       col("pos").as("order"), expr("transform(q, x -> cast(x as float))").as("vec"))
     val chunks = rangeChunks(events, "order")
 
-    withShufflePartitions(s, StP) {
-      fileIngest(s, chunks, cache = Seq(posed)) { stream =>
-        StreamingGrinch.dendrogram(stream.as[PointEvent], p)
-          .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(posed)) { stream =>
+      StreamingGrinch.dendrogram(stream.as[PointEvent], p)
+        .writeStream.format("memory").queryName(sinkName).outputMode("append").start()
     }
 
     val labels = posed.select(col("pos").as("luid"), col("label").as("llabel"))
@@ -684,12 +603,10 @@ object QueriesStreaming {
       col("pos").as("order"), expr("transform(q, x -> cast(x as float))").as("vec"))
     val chunks = rangeChunks(events, "order")
 
-    withShufflePartitions(s, StP) {
-      fileIngest(s, chunks, cache = Seq(posed)) { stream =>
-        StreamingGrinch.flatCluster(stream.as[PointEvent],
-          QueriesGrinch.GraftP.copy(minGrafts = 0), QueriesGrinch.H10Theta)
-          .writeStream.format("memory").queryName("st15_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(posed)) { stream =>
+      StreamingGrinch.flatCluster(stream.as[PointEvent],
+        QueriesGrinch.GraftP.copy(minGrafts = 0), QueriesGrinch.H10Theta)
+        .writeStream.format("memory").queryName("st15_sink").outputMode("append").start()
     }
 
     val vecIds = posed.select(col("pos").as("pid"), col("vec_id"))
@@ -728,12 +645,10 @@ object QueriesStreaming {
       col("pos").as("order"), expr("transform(q, x -> cast(x as float))").as("vec"))
     val chunks = rangeChunks(events, "order")
 
-    withShufflePartitions(s, StP) {
-      fileIngest(s, chunks, cache = Seq(posed)) { stream =>
-        StreamingGrinch.flatCluster(stream.as[PointEvent],
-          QueriesGrinch.PruneP.copy(minPrunes = 0), QueriesGrinch.H11Theta)
-          .writeStream.format("memory").queryName("st16_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(posed)) { stream =>
+      StreamingGrinch.flatCluster(stream.as[PointEvent],
+        QueriesGrinch.PruneP.copy(minPrunes = 0), QueriesGrinch.H11Theta)
+        .writeStream.format("memory").queryName("st16_sink").outputMode("append").start()
     }
 
     val vecIds = posed.select(col("pos").as("pid"), col("vec_id"))
@@ -775,11 +690,9 @@ object QueriesStreaming {
     val chunks = (0 until 3).map(i =>
       feed.where(pmod(col("event_id"), lit(3)) === i).select("cell"))
 
-    withShufflePartitions(s, StP) {
-      fileIngest(s, chunks, cache = Seq(feed)) { stream =>
-        StreamingSketch.runningCounts(stream.as[IncEvent])
-          .writeStream.format("memory").queryName("st17_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(feed)) { stream =>
+      StreamingSketch.runningCounts(stream.as[IncEvent])
+        .writeStream.format("memory").queryName("st17_sink").outputMode("append").start()
     }
 
     val w = org.apache.spark.sql.expressions.Window
@@ -823,11 +736,9 @@ object QueriesStreaming {
     val chunks = (0 until 3).map(i =>
       feed.where(pmod(col("doc_id"), lit(3)) === i).select("cell"))
 
-    withShufflePartitions(s, StP) {
-      fileIngest(s, chunks, cache = Seq(feed)) { stream =>
-        StreamingSketch.runningCounts(stream.as[IncEvent])
-          .writeStream.format("memory").queryName("st18_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(feed)) { stream =>
+      StreamingSketch.runningCounts(stream.as[IncEvent])
+        .writeStream.format("memory").queryName("st18_sink").outputMode("append").start()
     }
 
     val w = org.apache.spark.sql.expressions.Window
@@ -857,7 +768,7 @@ object QueriesStreaming {
     import graft.streaming.StreamingAnalytics
     // fixed user subset (the st4 convention): the twin pins semantics
     // on a bounded slice while the batch j6 covers the full corpus.
-    // File-source ingest on BOTH sides (fileIngest2): chunks are ts
+    // File-source ingest on BOTH sides (two-source fileIngest): chunks are ts
     // RANGES cut at the same ns boundary on both streams, so the
     // time-aligned arrival that lets the join evict state live is by
     // construction (a window can never be evicted before its probe
@@ -875,21 +786,20 @@ object QueriesStreaming {
     // subset's span) — bounded two-scalar probe
     val r = evBase.agg(min(col("ns")), max(col("ns"))).head()
     val cut = r.getLong(0) + (r.getLong(1) - r.getLong(0)) / 2 + 1
-    def halves(df: org.apache.spark.sql.DataFrame) =
+    def halves(df: DataFrame) =
       Seq(df.where(col("ns") < cut), df.where(col("ns") >= cut))
     val evChunks = halves(evBase).map(_.select(col("event_id"),
       timestamp_micros(expr("ns div 1000")).as("ev_ts"), col("cents")))
     val winChunks = halves(winBase).map(_.select(col("win_id"),
       timestamp_micros(expr("ns div 1000")).as("w_start")))
 
-    withShufflePartitions(s, StP) {
-      fileIngest2(s, evChunks, winChunks, cache = Seq(evBase, winBase)) { (evIn, winIn) =>
-        StreamingAnalytics.intervalJoin(
+    fileIngest(s, Seq(evChunks, winChunks), cache = Seq(evBase, winBase)) {
+      case Seq(evIn, winIn) =>
+        Seq(StreamingAnalytics.intervalJoin(
           evIn, winIn,
           "ev_ts", "w_start", windowSeconds = 600L, watermark = "1 minute")
           .select(col("win_id"), col("event_id"), col("cents"))
-          .writeStream.format("memory").queryName("st19_sink").outputMode("append").start()
-      }
+          .writeStream.format("memory").queryName("st19_sink").outputMode("append").start())
     }
 
     s.table("st19_sink").orderBy("win_id", "event_id")
@@ -931,12 +841,9 @@ object QueriesStreaming {
           .otherwise(-1).cast("int").as("step"))
     val chunks = rangeChunks(feed, "tsUs")
 
-    withShufflePartitions(s, StP) {
-      import s.implicits._
-      fileIngest(s, chunks, cache = Seq(feed)) { stream =>
-        StreamingFunnel.funnel(stream.as[FunnelEvent], 3)
-          .writeStream.format("memory").queryName("st20_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(feed)) { stream =>
+      StreamingFunnel.funnel(stream.as[FunnelEvent], 3)
+        .writeStream.format("memory").queryName("st20_sink").outputMode("append").start()
     }
 
     val w = org.apache.spark.sql.expressions.Window
@@ -971,12 +878,9 @@ object QueriesStreaming {
         expr("ts div 86400000000000L").as("day"), col("ts").cast("long").as("ns"))
     val chunks = rangeChunks(base, "ns").map(_.select("userId", "day"))
 
-    withShufflePartitions(s, StP) {
-      import s.implicits._
-      fileIngest(s, chunks, cache = Seq(base)) { stream =>
-        StreamingRetention.cohortOffsets(stream.as[DayEvent])
-          .writeStream.format("memory").queryName("st22_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(base)) { stream =>
+      StreamingRetention.cohortOffsets(stream.as[DayEvent])
+        .writeStream.format("memory").queryName("st22_sink").outputMode("append").start()
     }
 
     s.table("st22_sink")
@@ -1024,13 +928,10 @@ object QueriesStreaming {
     val chunks = (0 until 3).map(i =>
       events.where(pmod(expr("qid div 10"), lit(3)) === i))
 
-    withShufflePartitions(s, StP) {
-      import s.implicits._
-      fileIngest(s, chunks, cache = Seq(events, corpus)) { stream =>
-        StreamingAnn.hammingTopK(stream.as[QueryEvent], corpus, k = 3,
-          prefixBits = pBits)
-          .writeStream.format("memory").queryName("st25_sink").outputMode("append").start()
-      }
+    fileIngest(s, chunks, cache = Seq(events, corpus)) { stream =>
+      StreamingAnn.hammingTopK(stream.as[QueryEvent], corpus, k = 3,
+        prefixBits = pBits)
+        .writeStream.format("memory").queryName("st25_sink").outputMode("append").start()
     }
 
     s.table("st25_sink")

@@ -1080,25 +1080,6 @@ object QueriesText {
   // component most exposed to corpus growth. The emitted pair set
   // hash-matches the capped batch-join oracle — streaming = batch =
   // SQL for the dedup pack's candidate stage.
-  /** st6's band-event prep — capped minhash bands composed to one
-    * bucket key plus the three doc-keyed ingest chunks. Shared with
-    * [[graft.St6FileSinkSmoke]] (the sf100 file-sink scale harness) so
-    * its "IDENTICAL st6 pipeline" claim is enforced by this one
-    * definition, not by a hand-copy that can drift (ADVICE r20).
-    * Returns (events, chunks): persist `events` around the chunk
-    * writes (fileIngest's `cache` arg) so the prep runs once.
-    */
-  private[graft] def st6BandEvents(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.sql.DataFrame]) = {
-    val events = Dedup.bucketGuard(
-      Dedup.minHashBands(
-        Tables.load(s, dir, "documents"), col("doc_id"), shingleSet, dedupK, dedupR),
-      maxBucket = d3bMaxBucket)
-      .select((col("band").cast("long") * 2000000011L + col("band_hash")).as("bucket"),
-        col("doc").as("docId"), col("doc").as("order"))
-    (events, (0 until 3).map(i => events.where(pmod(col("docId"), lit(3)) === i)))
-  }
-
   val st6StreamingNeardup: Q = (s, dir) => {
     import s.implicits._
     import graft.streaming.StreamingNearDup
@@ -1112,15 +1093,19 @@ object QueriesText {
     // arrival-order-independent anyway, which is what the batch-d2
     // oracle hash-pins. MemoryStream twins stay in StreamingSpec for
     // the batching-independence properties.
-    val (events, chunks) = st6BandEvents(s, dir)
+    val events = Dedup.bucketGuard(
+      Dedup.minHashBands(
+        Tables.load(s, dir, "documents"), col("doc_id"), shingleSet, dedupK, dedupR),
+      maxBucket = d3bMaxBucket)
+      .select((col("band").cast("long") * 2000000011L + col("band_hash")).as("bucket"),
+        col("doc").as("docId"), col("doc").as("order"))
+    val chunks = (0 until 3).map(i => events.where(pmod(col("docId"), lit(3)) === i))
 
-    QueriesStreaming.withShufflePartitions(s, 4) {
-      QueriesStreaming.fileIngest(s, chunks, cache = Seq(events)) { stream =>
-        StreamingNearDup.lshCandidates(stream.as[BandEvent])
-          .toDF("doc_a", "doc_b")
-          .dropDuplicates("doc_a", "doc_b")
-          .writeStream.format("memory").queryName("st6_sink").outputMode("append").start()
-      }
+    QueriesStreaming.fileIngest(s, chunks, cache = Seq(events)) { stream =>
+      StreamingNearDup.lshCandidates(stream.as[BandEvent])
+        .toDF("doc_a", "doc_b")
+        .dropDuplicates("doc_a", "doc_b")
+        .writeStream.format("memory").queryName("st6_sink").outputMode("append").start()
     }
 
     s.table("st6_sink").orderBy("doc_a", "doc_b")
@@ -1164,12 +1149,10 @@ object QueriesText {
     val chunks = (0 until 3).map(i =>
       events.where(pmod(col("a") + col("b"), lit(3)) === i))
 
-    QueriesStreaming.withShufflePartitions(s, 4) {
-      import s.implicits._
-      QueriesStreaming.fileIngest(s, chunks, cache = Seq(events)) { stream =>
-        StreamingComponents.connectedComponents(stream.as[EdgeEvent])
-          .writeStream.format("memory").queryName("st8_sink").outputMode("append").start()
-      }
+    import s.implicits._
+    QueriesStreaming.fileIngest(s, chunks, cache = Seq(events)) { stream =>
+      StreamingComponents.connectedComponents(stream.as[EdgeEvent])
+        .writeStream.format("memory").queryName("st8_sink").outputMode("append").start()
     }
 
     val w = org.apache.spark.sql.expressions.Window
@@ -1218,24 +1201,22 @@ object QueriesText {
     // independent, so any chunking yields the same final table
     val chunks = (0 until 3).map(i => feed.where(pmod(col("doc_n"), lit(3)) === i))
 
-    QueriesStreaming.withShufflePartitions(s, 4) {
-      // the static relations are joined by EVERY micro-batch — persist
-      // them (via fileIngest's cache hook) or each of the 3 batches
-      // recomputes the full snapshot band/set prep (measured ~3x the
-      // batch d11 wall at sf10 uncached)
-      QueriesStreaming.fileIngest(s, chunks,
-        cache = Seq(feed, big, snapB, snapSets, newSets)) { stream =>
-        stream
-          .join(big, Seq("band", "band_hash"), "left_anti")
-          .join(snapB, Seq("band", "band_hash"))
-          .join(newSets, Seq("doc_n"))
-          .join(snapSets, Seq("doc_o"))
-          .withColumn("j_num", TextFunctions.sortedIntersectCount(col("hs_n"), col("hs_o")))
-          .withColumn("j_den", (size(col("hs_n")) + size(col("hs_o"))).cast("long") - col("j_num"))
-          .where(col("j_num") * 2 >= col("j_den") * 1)
-          .select(col("doc_n"), col("doc_o"))
-          .writeStream.format("memory").queryName("st27_sink").outputMode("append").start()
-      }
+    // the static relations are joined by EVERY micro-batch — persist
+    // them (via fileIngest's cache hook) or each of the 3 batches
+    // recomputes the full snapshot band/set prep (measured ~3x the
+    // batch d11 wall at sf10 uncached)
+    QueriesStreaming.fileIngest(s, chunks,
+      cache = Seq(feed, big, snapB, snapSets, newSets)) { stream =>
+      stream
+        .join(big, Seq("band", "band_hash"), "left_anti")
+        .join(snapB, Seq("band", "band_hash"))
+        .join(newSets, Seq("doc_n"))
+        .join(snapSets, Seq("doc_o"))
+        .withColumn("j_num", TextFunctions.sortedIntersectCount(col("hs_n"), col("hs_o")))
+        .withColumn("j_den", (size(col("hs_n")) + size(col("hs_o"))).cast("long") - col("j_num"))
+        .where(col("j_num") * 2 >= col("j_den") * 1)
+        .select(col("doc_n"), col("doc_o"))
+        .writeStream.format("memory").queryName("st27_sink").outputMode("append").start()
     }
 
     val m = s.table("st27_sink").groupBy(col("doc_n")).agg(min(col("doc_o")).as("m"))
@@ -1466,12 +1447,10 @@ object QueriesText {
       rows.where(col("h") >= cut1 && col("h") < cut2),
       rows.where(col("h") >= cut2))
 
-    QueriesStreaming.withShufflePartitions(s, 4) {
-      import s.implicits._
-      QueriesStreaming.fileIngest(s, chunks, cache = Seq(rows)) { stream =>
-        StreamingPacking.pack(stream.as[PackEvent], packSeqLen)
-          .writeStream.format("memory").queryName("st23_sink").outputMode("append").start()
-      }
+    import s.implicits._
+    QueriesStreaming.fileIngest(s, chunks, cache = Seq(rows)) { stream =>
+      StreamingPacking.pack(stream.as[PackEvent], packSeqLen)
+        .writeStream.format("memory").queryName("st23_sink").outputMode("append").start()
     }
 
     s.table("st23_sink")
@@ -1524,27 +1503,16 @@ object QueriesText {
       base.where(col("h") >= cut1 && col("h") < cut2),
       base.where(col("h") >= cut2)).map(_.drop("h"))
 
-    QueriesStreaming.withShufflePartitions(s, 4) {
-      base.persist()
-      val inDir = java.nio.file.Files.createTempDirectory(
-        QueriesStreaming.ingestRoot, "graft-st26-in-")
-      val stagDir = java.nio.file.Files.createTempDirectory(
-        QueriesStreaming.ingestRoot, "graft-st26-stag-")
-      val midDir = java.nio.file.Files.createTempDirectory(
-        QueriesStreaming.ingestRoot, "graft-st26-mid-")
-      val ckA = java.nio.file.Files.createTempDirectory(
-        QueriesStreaming.ingestRoot, "graft-st26-ck-")
-      def rmRf(d: java.nio.file.Path): Unit = {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      try {
-        // staged-write + atomic-rename chunk delivery (fileIngest's
-        // protocol): the polling source can't split a chunk mid-commit.
-        // B's source needs no staging — it reads stage A's FileStreamSink
-        // output, whose _spark_metadata log exposes only COMMITTED files.
-        val aStream = s.readStream.schema(chunks.head.schema).parquet(inDir.toString + "/*")
+    // stage A's parquet topic and checkpoint; the input chunks ride
+    // fileIngest's staged-write + atomic-rename delivery, and B's source
+    // needs no staging — it reads stage A's FileStreamSink output, whose
+    // _spark_metadata log exposes only COMMITTED files. Each drain runs
+    // A then B, so every chunk passes both stages in its own batch.
+    val topic = java.nio.file.Files.createTempDirectory(
+      QueriesStreaming.ingestRoot, "graft-st26-")
+    val midDir = java.nio.file.Files.createDirectory(topic.resolve("mid"))
+    try {
+      QueriesStreaming.fileIngest(s, Seq(chunks), cache = Seq(base)) { case Seq(aStream) =>
         val toks = TextFunctions.tokens(col("text"))
         val nTokRaw = size(toks).cast("long")
         val stopCnt = TextFunctions.stopwordCount(toks).cast("long")
@@ -1561,27 +1529,16 @@ object QueriesText {
             col("order").as("h"), size(TextFunctions.tokens(col("text"))).cast("long").as("nTok"))
         val qA = aOut.writeStream.format("parquet")
           .option("path", midDir.toString)
-          .option("checkpointLocation", ckA.toString)
+          .option("checkpointLocation", topic.resolve("ck").toString)
           .outputMode("append").start()
         val bStream = s.readStream
           .schema(org.apache.spark.sql.Encoders.product[PackEvent].schema)
           .parquet(midDir.toString)
         val qB = StreamingPacking.pack(bStream.as[PackEvent], packSeqLen)
           .writeStream.format("memory").queryName("st26_sink").outputMode("append").start()
-        try {
-          chunks.zipWithIndex.foreach { case (c, i) =>
-            val stag = stagDir.resolve(s"chunk-$i")
-            c.coalesce(4).write.mode("overwrite").parquet(stag.toString)
-            java.nio.file.Files.move(stag, inDir.resolve(s"chunk-$i"))
-            qA.processAllAvailable()
-            qB.processAllAvailable()
-          }
-        } finally { qA.stop(); qB.stop() }
-      } finally {
-        base.unpersist(blocking = false)
-        rmRf(inDir); rmRf(stagDir); rmRf(midDir); rmRf(ckA)
+        Seq(qA, qB)
       }
-    }
+    } finally QueriesStreaming.rmRf(topic)
 
     s.table("st26_sink")
       .select(col("docId").as("doc_id"), col("shard"),
@@ -1643,12 +1600,10 @@ object QueriesText {
       .select(lit("all").as("key"), col("doc_id").as("id"), col("h"))
     val chunks = (0 until 3).map(i => rows.where(pmod(col("id"), lit(3)) === i))
 
-    QueriesStreaming.withShufflePartitions(s, 4) {
-      import s.implicits._
-      QueriesStreaming.fileIngest(s, chunks, cache = Seq(rows)) { stream =>
-        StreamingSampling.bottomK(stream.as[SampleEvent], bottomK)
-          .writeStream.format("memory").queryName("st21_sink").outputMode("append").start()
-      }
+    import s.implicits._
+    QueriesStreaming.fileIngest(s, chunks, cache = Seq(rows)) { stream =>
+      StreamingSampling.bottomK(stream.as[SampleEvent], bottomK)
+        .writeStream.format("memory").queryName("st21_sink").outputMode("append").start()
     }
 
     // the sample = the LAST batch's whole-reservoir snapshot (an id

@@ -21,12 +21,6 @@ class CheckpointRecoverySpec extends SparkSpec {
   private def tmp(prefix: String): java.nio.file.Path =
     java.nio.file.Files.createTempDirectory(prefix)
 
-  private def rmRf(d: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(d).iterator().asScala.toSeq
-      .sortBy(-_.getNameCount).foreach(java.nio.file.Files.deleteIfExists(_))
-  }
-
   test("dedup state survives a stop/restart: a duplicate arriving after recovery is still dropped") {
     val in = tmp("ck-dedup-in-"); val out = tmp("ck-dedup-out-"); val ck = tmp("ck-dedup-ck-")
     try {
@@ -40,24 +34,22 @@ class CheckpointRecoverySpec extends SparkSpec {
           .option("checkpointLocation", ck.toString)
           .outputMode("append").start()
       }
-      QueriesStreaming.withShufflePartitions(spark, 2) {
-        // life 1: "aa" and "bb" enter state
-        Seq(DocEvent("aa", 3L, 30L), DocEvent("bb", 1L, 10L)).toDF()
-          .coalesce(1).write.mode("append").parquet(in.toString)
-        val q1 = start()
-        try q1.processAllAvailable() finally q1.stop()
-        // life 2 (new query, same checkpoint): a redelivered "aa" must
-        // be dropped — only possible if the keyed state was recovered —
-        // while the unseen "cc" emits normally
-        Seq(DocEvent("aa", 9L, 90L), DocEvent("cc", 7L, 70L)).toDF()
-          .coalesce(1).write.mode("append").parquet(in.toString)
-        val q2 = start()
-        try q2.processAllAvailable() finally q2.stop()
-      }
+      // life 1: "aa" and "bb" enter state
+      Seq(DocEvent("aa", 3L, 30L), DocEvent("bb", 1L, 10L)).toDF()
+        .coalesce(1).write.mode("append").parquet(in.toString)
+      val q1 = start()
+      try q1.processAllAvailable() finally q1.stop()
+      // life 2 (new query, same checkpoint): a redelivered "aa" must
+      // be dropped — only possible if the keyed state was recovered —
+      // while the unseen "cc" emits normally
+      Seq(DocEvent("aa", 9L, 90L), DocEvent("cc", 7L, 70L)).toDF()
+        .coalesce(1).write.mode("append").parquet(in.toString)
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
       val got = spark.read.parquet(out.toString)
         .as[(String, Long, Long)].collect().toSet
       got shouldBe Set(("aa", 3L, 30L), ("bb", 1L, 10L), ("cc", 7L, 70L))
-    } finally { rmRf(in); rmRf(out); rmRf(ck) }
+    } finally Seq(in, out, ck).foreach(QueriesStreaming.rmRf)
   }
 
   test("packing offsets survive a stop/restart: post-recovery documents continue the shard's token stream") {
@@ -73,24 +65,22 @@ class CheckpointRecoverySpec extends SparkSpec {
           .option("checkpointLocation", ck.toString)
           .outputMode("append").start()
       }
-      QueriesStreaming.withShufflePartitions(spark, 2) {
-        // life 1: shard 0 packs 7 tokens
-        Seq(PackEvent(0L, 1L, 5L, 7L)).toDF()
-          .coalesce(1).write.mode("append").parquet(in.toString)
-        val q1 = start()
-        try q1.processAllAvailable() finally q1.stop()
-        // life 2: the next document must start at offset 7, not 0 —
-        // only possible if the per-shard running offset was recovered
-        Seq(PackEvent(0L, 2L, 6L, 4L)).toDF()
-          .coalesce(1).write.mode("append").parquet(in.toString)
-        val q2 = start()
-        try q2.processAllAvailable() finally q2.stop()
-      }
+      // life 1: shard 0 packs 7 tokens
+      Seq(PackEvent(0L, 1L, 5L, 7L)).toDF()
+        .coalesce(1).write.mode("append").parquet(in.toString)
+      val q1 = start()
+      try q1.processAllAvailable() finally q1.stop()
+      // life 2: the next document must start at offset 7, not 0 —
+      // only possible if the per-shard running offset was recovered
+      Seq(PackEvent(0L, 2L, 6L, 4L)).toDF()
+        .coalesce(1).write.mode("append").parquet(in.toString)
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
       spark.read.parquet(out.toString).count() shouldBe 2
       val rows = spark.read.parquet(out.toString)
         .select("docId", "tokStart", "tokEnd").as[(Long, Long, Long)].collect().toSet
       rows shouldBe Set((1L, 0L, 7L), (2L, 7L, 11L))
-    } finally { rmRf(in); rmRf(out); rmRf(ck) }
+    } finally Seq(in, out, ck).foreach(QueriesStreaming.rmRf)
   }
 
   test("greedy clustering state survives a stop/restart: a post-recovery mention joins a pre-restart cluster") {
@@ -116,14 +106,12 @@ class CheckpointRecoverySpec extends SparkSpec {
       val life2 = Seq(
         MentionEvent(0L, 3L, 2L, Array(0.99f, 0.1f)),
         MentionEvent(0L, 4L, 3L, Array(-1f, 0f)))
-      QueriesStreaming.withShufflePartitions(spark, 2) {
-        life1.toDF().coalesce(1).write.mode("append").parquet(in.toString)
-        val q1 = start()
-        try q1.processAllAvailable() finally q1.stop()
-        life2.toDF().coalesce(1).write.mode("append").parquet(in.toString)
-        val q2 = start()
-        try q2.processAllAvailable() finally q2.stop()
-      }
+      life1.toDF().coalesce(1).write.mode("append").parquet(in.toString)
+      val q1 = start()
+      try q1.processAllAvailable() finally q1.stop()
+      life2.toDF().coalesce(1).write.mode("append").parquet(in.toString)
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
       val got = spark.read.parquet(out.toString)
         .as[Assignment].collect().map(a => (a.id, a.predCluster)).toSet
       // reference: the SAME operator folded over all 4 events in one
@@ -135,7 +123,7 @@ class CheckpointRecoverySpec extends SparkSpec {
       withClue("the post-restart mention must have joined the pre-restart cluster: ") {
         got should contain((3L, 1L))
       }
-    } finally { rmRf(in); rmRf(out); rmRf(ck) }
+    } finally Seq(in, out, ck).foreach(QueriesStreaming.rmRf)
   }
 
   test("GRINCH replay-log survives a stop/restart: the post-recovery tree equals an uninterrupted build") {
@@ -158,14 +146,12 @@ class CheckpointRecoverySpec extends SparkSpec {
       val life2 = Seq(
         PointEvent(0L, 2L, 2L, Array(0f, 4f)),
         PointEvent(0L, 3L, 3L, Array(1f, 3f)))
-      QueriesStreaming.withShufflePartitions(spark, 2) {
-        life1.toDF().coalesce(1).write.mode("append").parquet(in.toString)
-        val q1 = start()
-        try q1.processAllAvailable() finally q1.stop()
-        life2.toDF().coalesce(1).write.mode("append").parquet(in.toString)
-        val q2 = start()
-        try q2.processAllAvailable() finally q2.stop()
-      }
+      life1.toDF().coalesce(1).write.mode("append").parquet(in.toString)
+      val q1 = start()
+      try q1.processAllAvailable() finally q1.stop()
+      life2.toDF().coalesce(1).write.mode("append").parquet(in.toString)
+      val q2 = start()
+      try q2.processAllAvailable() finally q2.stop()
       val rows = spark.read.parquet(out.toString)
         .select("uid", "parentUid", "step").as[(Long, Option[Long], Long)].collect()
       // step = points inserted so far: reaching 4 is only possible if
@@ -177,6 +163,6 @@ class CheckpointRecoverySpec extends SparkSpec {
       val uninterrupted = StreamingGrinch.dendrogram((life1 ++ life2).toDS(), p)
         .collect().map(t => (t.uid, t.parentUid)).toSet
       finalTree shouldBe uninterrupted
-    } finally { rmRf(in); rmRf(out); rmRf(ck) }
+    } finally Seq(in, out, ck).foreach(QueriesStreaming.rmRf)
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryException}
 
@@ -39,18 +41,16 @@ class FileIngestSpec extends SparkSpec {
     val base = (0L until 30L).map(i => (0L, i)).toDF("k", "id")
     val chunks = (0 until 3).map(i =>
       base.where(col("id") >= i * 10 && col("id") < (i + 1) * 10))
-    QueriesStreaming.withShufflePartitions(spark, 2) {
-      QueriesStreaming.fileIngest(spark, chunks) { stream =>
-        stream.as[(Long, Long)].groupByKey(_._1)
-          .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-            (_: Long, it: Iterator[(Long, Long)], st: GroupState[Long]) =>
-              val step = st.getOption.getOrElse(0L) + 1
-              st.update(step)
-              it.map(e => (step, e._2))
-          }
-          .toDF("step", "id")
-          .writeStream.format("memory").queryName("fi_sink").outputMode("append").start()
-      }
+    QueriesStreaming.fileIngest(spark, chunks) { stream =>
+      stream.as[(Long, Long)].groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+          (_: Long, it: Iterator[(Long, Long)], st: GroupState[Long]) =>
+            val step = st.getOption.getOrElse(0L) + 1
+            st.update(step)
+            it.map(e => (step, e._2))
+        }
+        .toDF("step", "id")
+        .writeStream.format("memory").queryName("fi_sink").outputMode("append").start()
     }
     val got = spark.table("fi_sink").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -72,15 +72,75 @@ class FileIngestSpec extends SparkSpec {
     val descending = Seq(
       events.where(col("h") >= 20), events.where(col("h") >= 10 && col("h") < 20),
       events.where(col("h") < 10))
-    val ex = intercept[StreamingQueryException] {
-      QueriesStreaming.withShufflePartitions(spark, 2) {
+    // and the failure unwinds the harness: the session's partition count
+    // is back (a value other than StP, so the restore is observable)
+    // and no ingest dir is left behind
+    def ingestDirs(): Set[String] = {
+      val ls = java.nio.file.Files.list(QueriesStreaming.ingestRoot)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("graft-ingest-") || n.startsWith("graft-staging-")).toSet
+      finally ls.close()
+    }
+    val key = "spark.sql.shuffle.partitions"
+    val sessionValue = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try {
+      val before = ingestDirs()
+      val ex = intercept[StreamingQueryException] {
         QueriesStreaming.fileIngest(spark, descending) { stream =>
+          spark.conf.get(key) shouldBe QueriesStreaming.StP.toString
           StreamingPacking.pack(stream.as[PackEvent], seqLen = 16)
             .writeStream.format("memory").queryName("fi_bad_sink").outputMode("append").start()
         }
       }
+      ex.getMessage should include("ingest contract is violated")
+      spark.conf.get(key) shouldBe "3"
+      ingestDirs() -- before shouldBe empty
+    } finally spark.conf.set(key, sessionValue)
+  }
+
+  test("fileIngest: a file source feeding a parquet topic feeding a second query, one batch per chunk in each") {
+    // st26's shape: query A reads the ingest files and writes a parquet
+    // topic, query B reads the topic. A per-key batch counter in each
+    // query tags every row with the micro-batch it arrived in; chunk i
+    // must be batch i in A AND in B (each drain runs A, then B)
+    val base = (0L until 30L).map(i => (0L, i)).toDF("k", "id")
+    val chunks = (0 until 3).map(i =>
+      base.where(col("id") >= i * 10 && col("id") < (i + 1) * 10))
+    val topic = java.nio.file.Files.createTempDirectory("fi-topic-")
+    try {
+      val mid = java.nio.file.Files.createDirectory(topic.resolve("mid"))
+      QueriesStreaming.fileIngest(spark, Seq(chunks), Nil) { case Seq(in) =>
+        val qA = in.as[(Long, Long)].groupByKey(_._1)
+          .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+            (_: Long, it: Iterator[(Long, Long)], st: GroupState[Long]) =>
+              val step = st.getOption.getOrElse(0L) + 1
+              st.update(step)
+              it.map(e => (e._1, e._2, step))
+          }
+          .toDF("k", "id", "stepA")
+          .writeStream.format("parquet")
+          .option("path", mid.toString)
+          .option("checkpointLocation", topic.resolve("ck").toString)
+          .outputMode("append").start()
+        val qB = spark.readStream.schema("k LONG, id LONG, stepA LONG").parquet(mid.toString)
+          .as[(Long, Long, Long)].groupByKey(_._1)
+          .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+            (_: Long, it: Iterator[(Long, Long, Long)], st: GroupState[Long]) =>
+              val step = st.getOption.getOrElse(0L) + 1
+              st.update(step)
+              it.map(e => (e._2, e._3, step))
+          }
+          .toDF("id", "stepA", "stepB")
+          .writeStream.format("memory").queryName("fi_chain_sink").outputMode("append").start()
+        Seq(qA, qB)
+      }
+    } finally QueriesStreaming.rmRf(topic)
+    val got = spark.table("fi_chain_sink").as[(Long, Long, Long)].collect()
+    got.map(_._1).sorted.toSeq shouldBe (0L until 30L) // every row through both stages, once
+    got.foreach { case (id, stepA, stepB) =>
+      withClue(s"id $id: ") { (stepA, stepB) shouldBe ((id / 10 + 1, id / 10 + 1)) }
     }
-    ex.getMessage should include("ingest contract is violated")
   }
 
   test("the chunk-tag collision guard checks every chunk, not only the head") {
@@ -96,10 +156,10 @@ class FileIngestSpec extends SparkSpec {
       QueriesStreaming.fileIngest(spark, Seq(clean, tagged))(sink)
     }
     e1.getMessage should include("__graft_chunk")
-    // fileIngest2: the tag on the second chunk of the B side only
+    // two sources: the tag on the second chunk of side 2 only
     val e2 = intercept[IllegalArgumentException] {
-      QueriesStreaming.fileIngest2(spark, Seq(clean, clean), Seq(clean, tagged)) { (a, _) =>
-        sink(a)
+      QueriesStreaming.fileIngest(spark, Seq(Seq(clean, clean), Seq(clean, tagged)), Nil) { ins =>
+        Seq(sink(ins.head))
       }
     }
     e2.getMessage should include("__graft_chunk")

@@ -91,6 +91,16 @@ class PlanAuditSpec extends SparkSpec {
     // and only the factory reads the thread-count knob
     text.collect { case (f, t) if t.contains("\"SPARK_GRAFT_CPUS\"") => f } shouldBe
       Seq("GraftSession.scala")
+    // SPARK_GRAFT_* env knobs belong to the entry points, never to
+    // query code, and only the ingest harness (streaming partitions and
+    // state-store provider) and Bench (per-run checkpoint dir) change
+    // the session conf at runtime
+    val mainText = sources.zip(text).collect { case (p, ft) if p.startsWith("src/main") => ft }
+    val envRead = """(sys\.env\S*|System\.getenv)\(\s*"SPARK_GRAFT_""".r
+    mainText.collect { case (f, t) if envRead.findFirstIn(t).isDefined => f }.sorted shouldBe
+      Seq("Bench.scala", "GraftSession.scala", "RecallLadder.scala", "ScaleSmoke.scala")
+    mainText.collect { case (f, t) if t.contains("conf.set(") => f }.sorted shouldBe
+      Seq("Bench.scala", "QueriesStreaming.scala")
     // launch-time spark.sql.* settings (the SparkContext's conf, which
     // no test's runtime spark.conf.set can touch)
     val launched = spark.sparkContext.getConf.getAll.toMap

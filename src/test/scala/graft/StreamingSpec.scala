@@ -323,16 +323,17 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("spark.graft.stateStore=rocksdb routes streams through RocksDBStateStoreProvider") {
+    val provider = "spark.sql.streaming.stateStore.providerClass"
     spark.conf.set("spark.graft.stateStore", "rocksdb")
     try {
-      QueriesStreaming.withShufflePartitions(spark, 4) {
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass") should
-          include("RocksDBStateStoreProvider")
+      QueriesStreaming.fileIngest(spark, Seq(Seq((0L, 1L)).toDF("k", "id"))) { stream =>
+        // the provider a stream started here captures
+        spark.conf.get(provider) should include("RocksDBStateStoreProvider")
+        stream.writeStream.format("memory").queryName("rocks_route_sink").outputMode("append").start()
       }
       // restored on exit — later streams are back on the default
       // provider (conf.get falls back to the HDFS-backed default)
-      spark.conf.get("spark.sql.streaming.stateStore.providerClass") should
-        not include "RocksDB"
+      spark.conf.get(provider) should not include "RocksDB"
     } finally spark.conf.unset("spark.graft.stateStore")
   }
 
