@@ -142,38 +142,20 @@ object Bench {
     // (it is also the outlier-pass reference below).
     val outDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench")
     val canonicalPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_CANONICAL", "bench_queries.json")
-    // Streaming-harness amortization (bench-side; engine untouched):
-    // every st-query start/stop pays checkpoint-dir + state-store IO per
-    // micro-batch. Route checkpoints to tmpfs when available and retain
-    // the minimum state versions (these are throwaway per-run streams —
-    // durability is not part of what the bench measures), and stretch
-    // the background maintenance the short-lived streams never need.
-    val ckRoot = {
-      val shm = new java.io.File("/dev/shm")
-      val base = if (shm.isDirectory && shm.canWrite) shm.toPath
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      java.nio.file.Files.createTempDirectory(base, "graft-bench-ck").toString
-    }
-    val spark = GraftSession.builder("graft-bench")
-      .config("spark.sql.streaming.checkpointLocation", ckRoot)
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm the session (codegen, parquet footers, streaming state
-    // store) so the first timed query doesn't absorb startup cost.
+    // store) so the first timed query doesn't absorb startup cost. The
+    // warm-up stream goes through the ingest path the st queries use,
+    // which also gives it its own checkpoint under the ingest root.
     Tables.names.foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count() catch { case _: Throwable => () }
     }
     try {
-      import spark.implicits._
-      implicit val sqlCtx = spark.sqlContext
-      val warm = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val q = warm.toDS().groupByKey(identity).count()
-        .writeStream.format("memory").queryName("__warmup").outputMode("complete").start()
-      warm.addData(1L, 2L)
-      q.processAllAvailable()
-      q.stop()
+      QueriesStreaming.fileIngest(spark, Seq(spark.range(2).toDF("v"))) { in =>
+        in.groupBy("v").count()
+          .writeStream.format("memory").queryName("__warmup").outputMode("complete").start()
+      }
     } catch { case _: Throwable => () }
     // One-shot timings under a shared JVM are dominated by GC/JIT/run-order
     // noise (round-4 showed 3-18x swings on unchanged code). Protocol:
@@ -205,16 +187,8 @@ object Bench {
     if (canonical.isEmpty)
       System.err.println(s"[bench] WARNING: no canonical entries parsed from " +
         s"$canonicalPath — the outlier retry pass is disarmed for this run")
-    def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                  tag: String): Seq[Double] =
+    def timeQuery(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[Double] =
       (0 until iters).flatMap { i =>
-        // unique checkpoint path per (query, iteration): with a FIXED
-        // conf root, iteration 2's .start() of an append-mode memory
-        // sink finds iteration 1's offsets under <root>/<queryName> and
-        // throws (no checkpoint recovery for append memory sinks) — the
-        // catch below would silently degrade the median back to the
-        // one-shot timing this protocol exists to kill
-        spark.conf.set("spark.sql.streaming.checkpointLocation", s"$ckRoot/$name/$tag$i")
         val t0 = System.nanoTime()
         // toRdd.count(), not count(): count() collapses to count(1) and
         // Catalyst prunes unused projections/windows/sorts, so pure-
@@ -288,7 +262,7 @@ object Bench {
         System.gc(); Thread.sleep(50)
         famLoad(prevFamily) = (loadavg(), -1.0)
       }
-      val times = timeQuery(name, fn, "it")
+      val times = timeQuery(fn)
       if (times.isEmpty) { errors ::= name; name -> (-1.0, -1.0) }
       else {
         if (times.length < iters) partial ::= name
@@ -312,7 +286,7 @@ object Bench {
         case Some(c) if med > 0 && c > 0 && med > retryFactor(name) * c && med >= 0.75 =>
           retried ::= name
           System.gc(); Thread.sleep(50)
-          val again = timeQuery(name, SparkEntry.queries(name), "retry")
+          val again = timeQuery(SparkEntry.queries(name))
           if (again.isEmpty) name -> (med, mn)
           else {
             val med2 = medianOf(again)
@@ -413,28 +387,5 @@ object Bench {
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","queries":$famJson,"value":${fmt(total)},"batch_total":${fmt(batchTotal)},"streaming_total":${fmt(stTotal)},"adc_build_cold":${fmt(adcBuildCold)},"unit":"sec","iters":$iters,"errors":$errJson,"partial":$partJson,"retried":$retryJson,"sf":"$sfDir"}""")
     spark.stop()
-    // conf-rooted checkpoints are NOT auto-deleted on stop (that only
-    // happens for Spark-managed temp dirs) — without this, every bench
-    // run leaks RAM-backed state files under /dev/shm until reboot.
-    // The walk stream is closed before deleting, and each deletion
-    // catches on its own: one straggling state file must not abandon
-    // the rest of the cleanup (nor leak the stream's dir handles).
-    try {
-      val root = java.nio.file.Paths.get(ckRoot)
-      val walk = java.nio.file.Files.walk(root)
-      val paths =
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .collect(java.util.stream.Collectors.toList[java.nio.file.Path])
-        finally walk.close()
-      var failed = 0
-      paths.forEach { p =>
-        try java.nio.file.Files.deleteIfExists(p)
-        catch { case _: Throwable => failed += 1 }
-      }
-      if (failed > 0)
-        System.err.println(s"[bench] checkpoint cleanup left $failed paths under $ckRoot")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] checkpoint cleanup failed under $ckRoot: ${e.getMessage}")
-    }
   }
 }

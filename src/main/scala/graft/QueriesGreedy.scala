@@ -18,17 +18,10 @@ import graft.operators.GreedyClustering.Params
   */
 object QueriesGreedy {
   import QueriesRelational.Q
+  import QueriesVector.{sqlDot, sqlNorm}
 
   private val Theta = 0.25
   private val Dim = 64
-
-  private def sqlDot(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, $Dim), " +
-      s"i -> $a[i]::DOUBLE * $b[i]::DOUBLE)), (acc, x) -> acc + x)"
-
-  private def sqlNorm(a: String): String =
-    s"sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, $Dim), " +
-      s"i -> $a[i]::DOUBLE * $a[i]::DOUBLE)), (acc, x) -> acc + x))"
 
   // ---------------------------------------------------------------- g1
   // C3 backwards-unlimited greedy clustering, cosine > 0.25.
@@ -40,9 +33,14 @@ object QueriesGreedy {
       .select(col("id").as("vec_id"), col("pred_cluster"))
       .orderBy("vec_id")
 
-  val g1GreedyNnSql: String =
+  val g1GreedyNnSql: String = greedyNnSql("")
+
+  /** g1's recursive-CTE oracle over the embeddings rows `where` keeps
+    * (st1, the streaming twin, reads the first rows only).
+    */
+  private[graft] def greedyNnSql(where: String): String =
     s"""WITH RECURSIVE e AS (
-       |  SELECT vec_id, embedding, ${sqlNorm("embedding")} AS nrm FROM embeddings),
+       |  SELECT vec_id, embedding, ${sqlNorm("embedding")} AS nrm FROM embeddings $where),
        |p AS (
        |  SELECT j.vec_id AS j,
        |         coalesce(max(CASE WHEN ${sqlDot("i.embedding", "j.embedding")} / (i.nrm * j.nrm) > $Theta

@@ -30,20 +30,32 @@ object QueriesStreaming {
   // distributed).
   private[graft] val StP = 4
 
-  // Ingest staging root: tmpfs when available (the same choice the
-  // bench makes for checkpoints) — these are throwaway per-run feeds,
-  // and the measured path should time the STREAM, not /tmp disk flushes.
+  // Ingest root: tmpfs when available — the staged chunks and the
+  // streams' checkpoints are throwaway per-run files, and the measured
+  // path should time the STREAM, not /tmp disk flushes.
   private[graft] def ingestRoot: Path = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite) shm.toPath
     else Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
-  /** Delete `d` and everything under it, deepest entries first. */
+  /** Delete `d` and everything under it, deepest entries first. A
+    * killed task of a just-failed stream can still be writing its last
+    * state file under the checkpoint, so a walk that races it is retried
+    * (up to 2 s) before the error propagates.
+    */
   private[graft] def rmRf(d: Path): Unit = {
-    val walk = Files.walk(d)
-    try walk.iterator().asScala.toList.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
-    finally walk.close()
+    def attempt(left: Int): Unit =
+      try {
+        val walk = Files.walk(d)
+        try walk.iterator().asScala.toList.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
+        finally walk.close()
+      } catch {
+        case _: java.io.IOException | _: java.io.UncheckedIOException if left > 1 =>
+          Thread.sleep(100)
+          attempt(left - 1)
+      }
+    attempt(20)
   }
 
   /** Single-source [[fileIngest]]: one chunk list feeding one query. */
@@ -77,10 +89,15 @@ object QueriesStreaming {
     * provider otherwise — at 100 TB state RocksDB is the production
     * choice: state spills to local disk, checkpoints are incremental;
     * outputs are provider-invariant, StreamingSpec runs st17 under
-    * both). Streams capture both settings at start; both are restored
-    * on exit. `cache` lists the chunks' shared prep, persisted so the
-    * chunk writes don't each recompute it. The helper stops every query
-    * and deletes its ingest dirs before returning, also on failure.
+    * both). Its streams checkpoint under the ingest root, keep the
+    * minimum 2 state versions and stretch background state maintenance
+    * to 600 s (throwaway per-run streams: durability is not what they
+    * compute), so every runner times the same checkpoint path and a
+    * named query re-runs from a fresh checkpoint. Streams capture these
+    * settings at start; all are restored on exit. `cache` lists the
+    * chunks' shared prep, persisted so the chunk writes don't each
+    * recompute it. The helper stops every query and deletes its ingest
+    * dirs, checkpoints included, before returning, also on failure.
     * (The DummyImplicit only keeps this overload distinct from the
     * single-source one after erasure.)
     */
@@ -97,12 +114,16 @@ object QueriesStreaming {
     require(sides.flatten.forall(!_.columns.contains(tag)),
       s"fileIngest: a chunk schema already has a '$tag' column")
     val rocks = s.conf.getOption("spark.graft.stateStore").exists(_.equalsIgnoreCase("rocksdb"))
-    val settings = Seq("spark.sql.shuffle.partitions" -> StP.toString) ++
+    val root = Files.createTempDirectory(ingestRoot, "graft-ingest-")
+    val settings = Seq(
+      "spark.sql.shuffle.partitions" -> StP.toString,
+      "spark.sql.streaming.checkpointLocation" -> root.resolve("ck").toString,
+      "spark.sql.streaming.minBatchesToRetain" -> "2",
+      "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s") ++
       (if (rocks) Seq("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
        else Nil)
     val saved = settings.map { case (k, _) => k -> s.conf.getOption(k) }
-    val root = Files.createTempDirectory(ingestRoot, "graft-ingest-")
     try {
       settings.foreach { case (k, v) => s.conf.set(k, v) }
       cache.foreach(_.persist())
@@ -178,7 +199,6 @@ object QueriesStreaming {
   }
 
   private val Theta = 0.25
-  private val Dim = 64
   private val N = 50L
 
   val st1StreamingGreedy: Q = (s, dir) => {
@@ -205,29 +225,7 @@ object QueriesStreaming {
       .orderBy("vec_id")
   }
 
-  private def sqlDot(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, $Dim), " +
-      s"i -> $a[i]::DOUBLE * $b[i]::DOUBLE)), (acc, x) -> acc + x)"
-
-  private def sqlNorm(a: String): String =
-    s"sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, $Dim), " +
-      s"i -> $a[i]::DOUBLE * $a[i]::DOUBLE)), (acc, x) -> acc + x))"
-
-  val st1StreamingGreedySql: String =
-    s"""WITH RECURSIVE e AS (
-       |  SELECT vec_id, embedding, ${sqlNorm("embedding")} AS nrm
-       |  FROM embeddings WHERE vec_id < $N),
-       |p AS (
-       |  SELECT j.vec_id AS j,
-       |         coalesce(max(CASE WHEN ${sqlDot("i.embedding", "j.embedding")} / (i.nrm * j.nrm) > $Theta
-       |                          THEN i.vec_id END), j.vec_id) AS parent
-       |  FROM e j LEFT JOIN e i ON i.vec_id < j.vec_id
-       |  GROUP BY j.vec_id),
-       |r(j, cur) AS (
-       |  SELECT j, j FROM p
-       |  UNION ALL
-       |  SELECT r.j, p.parent FROM r JOIN p ON r.cur = p.j WHERE p.parent <> r.cur)
-       |SELECT j AS vec_id, min(cur) AS pred_cluster FROM r GROUP BY j ORDER BY vec_id""".stripMargin
+  val st1StreamingGreedySql: String = QueriesGreedy.greedyNnSql(s"WHERE vec_id < $N")
 
   /** st2 — GRINCH as a real streaming query (three micro-batches through
     * flatMapGroupsWithState, replay-log state): the final (max-step)

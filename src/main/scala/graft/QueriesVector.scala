@@ -22,12 +22,14 @@ object QueriesVector {
   private val Seed = 42L
   private val AnnBits = 8
 
-  /** DuckDB fragment: dot(a,b) as left fold over element order. */
-  private def sqlDot(a: String, b: String): String =
+  /** DuckDB fragment: dot(a,b) as left fold over element order — the
+    * one copy every embeddings oracle (v, g and st rows) builds on.
+    */
+  private[graft] def sqlDot(a: String, b: String): String =
     s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, $Dim), " +
       s"i -> $a[i]::DOUBLE * $b[i]::DOUBLE)), (acc, x) -> acc + x)"
 
-  private def sqlNorm(a: String): String =
+  private[graft] def sqlNorm(a: String): String =
     s"sqrt(list_reduce(list_prepend(0.0::DOUBLE, list_transform(generate_series(1, $Dim), " +
       s"i -> $a[i]::DOUBLE * $a[i]::DOUBLE)), (acc, x) -> acc + x))"
 

@@ -470,15 +470,9 @@ object Cli {
           encoded, col("uid"), col("embedding"), col("uid"), p.copy(threshold = th))
         val theta = flags.get("threshold").map(_.toDouble).getOrElse {
           val target = encoded.agg(countDistinct(col("entity_id"))).collect().head.getLong(0)
-          val eps = encoded.count() / 1000.0
-          var lo = 0.0; var hi = 1.0; var th = 0.5; var nc = -1L; var it = 0
-          while (math.abs(nc - target) > eps && it < 12) {
-            th = (lo + hi) / 2
-            nc = scalarAt(th).agg(countDistinct(col("pred_cluster"))).collect().head.getLong(0)
-            if (nc < target) lo = th else hi = th
-            it += 1
-          }
-          th
+          ClusterFold.bisect(encoded.count(), target, maxIters = 12) { th =>
+            scalarAt(th).agg(countDistinct(col("pred_cluster"))).collect().head.getLong(0)
+          }._1
         }
         writePairs(spark, encoded.select(col("uid"), col("entity_id")), scalarAt(theta), out)
         encoded.unpersist()

@@ -36,6 +36,16 @@ import org.apache.spark.sql.functions._
   */
 object GreedyClustering {
 
+  /** Strict left fold of float→double products in element order — the
+    * similarity both the masked fold and the scalar loop score with.
+    */
+  private def dot(a: Array[Float], b: Array[Float]): Double = {
+    var s = 0.0
+    var k = 0
+    while (k < a.length) { s += a(k).toDouble * b(k).toDouble; k += 1 }
+    s
+  }
+
   /** limit < 0 ⇒ unlimited. `cosine=true` scores dot/(‖a‖‖b‖) (the
     * reference's normalize-on-load default, `nn_thresh.py:172-173`);
     * false ⇒ raw dot (its --dot_prod mode).
@@ -80,13 +90,6 @@ object GreedyClustering {
       }
       i = s.step
       this
-    }
-
-    private def dot(a: Array[Float], b: Array[Float]): Double = {
-      var s = 0.0
-      var k = 0
-      while (k < a.length) { s += a(k).toDouble * b(k).toDouble; k += 1 }
-      s
     }
 
     private def norm(a: Array[Float]): Double = math.sqrt(dot(a, a))
@@ -173,9 +176,7 @@ object GreedyClustering {
   def clusterSorted(df: DataFrame, id: Column, vec: Column, order: Column, p: Params): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(id.cast("long").as("_1"), vec.cast("array<float>").as("_2"), order.cast("long").as("_3"))
-      .as[(Long, Array[Float], Long)]
-      .repartition(1).sortWithinPartitions(col("_3"))
+    ClusterFold.single[(Long, Array[Float], Long)](df, id, vec, order)
       .mapPartitions { it =>
         val state = new State(p)
         it.map { case (rid, arr, _) => (rid, state.step(rid, arr)) }
@@ -197,17 +198,10 @@ object GreedyClustering {
                           p: Params): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(id.cast("long").as("_1"), vec.cast("array<float>").as("_2"), order.cast("long").as("_3"))
-      .as[(Long, Array[Float], Long)]
-      .repartition(1).sortWithinPartitions(col("_3"))
+    ClusterFold.single[(Long, Array[Float], Long)](df, id, vec, order)
       .mapPartitions { it =>
         val rows = it.toArray
         val n = rows.length
-        def dot(a: Array[Float], b: Array[Float]): Double = {
-          var s = 0.0; var k = 0
-          while (k < a.length) { s += a(k).toDouble * b(k).toDouble; k += 1 }
-          s
-        }
         val nrm = rows.map(r => math.sqrt(dot(r._2, r._2)))
         val cl = Array.tabulate(n)(identity)
         var i = 0
@@ -235,9 +229,7 @@ object GreedyClustering {
   def clusterByKey(df: DataFrame, key: Column, id: Column, vec: Column, order: Column, p: Params): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(key.cast("long").as("_1"), id.cast("long").as("_2"), vec.cast("array<float>").as("_3"), order.cast("long").as("_4"))
-      .as[(Long, Long, Array[Float], Long)]
-      .repartition(col("_1")).sortWithinPartitions(col("_1"), col("_4"))
+    ClusterFold.keyed[(Long, Long, Array[Float], Long)](df, key, id, vec, order)
       .mapPartitions { it =>
         var curKey = Long.MinValue
         var state: State = null
@@ -249,10 +241,9 @@ object GreedyClustering {
       .toDF("key", "id", "pred_cluster")
   }
 
-  /** C8 — threshold bisection (`nn_thresh.py:118-135`): binary-search
-    * θ ∈ [0,1] until the cluster count is within ε = n/1000 of `target`.
-    * Always iteration-capped (3 of the reference's 4 copies can loop
-    * forever — SURVEY §7.4). Returns (threshold, nClusters).
+  /** C8 — threshold bisection (`nn_thresh.py:118-135`): θ ∈ [0,1]
+    * toward `target` clusters with ε = n/1000 and at most `maxIters`
+    * probes ([[ClusterFold.bisect]]). Returns (threshold, nClusters).
     *
     * The sorted single-partition Dataset is materialized ONCE and
     * reused across every bisection iteration — only the cheap fold
@@ -262,31 +253,16 @@ object GreedyClustering {
                     base: Params, target: Long, maxIters: Int = 30): (Double, Long) = {
     val spark = df.sparkSession
     import spark.implicits._
-    val sorted = df
-      .select(id.cast("long").as("_1"), vec.cast("array<float>").as("_2"), order.cast("long").as("_3"))
-      .as[(Long, Array[Float], Long)]
-      .repartition(1).sortWithinPartitions(col("_3"))
-      .persist()
+    val sorted = ClusterFold.single[(Long, Array[Float], Long)](df, id, vec, order).persist()
     try {
-      val n = sorted.count()
-      val epsilon = n / 1000.0
-      var lo = 0.0
-      var hi = 1.0
-      var nClusters = -1L
-      var threshold = 0.5
-      var it = 0
-      while (math.abs(nClusters - target) > epsilon && it < maxIters) {
-        threshold = (lo + hi) / 2
+      ClusterFold.bisect(sorted.count(), target, maxIters) { threshold =>
         val p = base.copy(threshold = threshold)
         val clusters = sorted.mapPartitions { rows =>
           val state = new State(p)
           rows.map { case (rid, arr, _) => state.step(rid, arr) }
         }
-        nClusters = clusters.toDF("c").agg(countDistinct(col("c"))).collect().head.getLong(0)
-        if (nClusters < target) lo = threshold else hi = threshold
-        it += 1
+        clusters.toDF("c").agg(countDistinct(col("c"))).collect().head.getLong(0)
       }
-      (threshold, nClusters)
     } finally sorted.unpersist()
   }
 }

@@ -546,34 +546,21 @@ object Grinch {
     g
   }
 
-  private def build(points: Array[Array[Float]], p: Params): Grinch = buildFrom(points, p)
-
   /** Flat clustering of one stream at `threshold`: (id, pred_cluster). */
   def flatCluster(df: DataFrame, id: Column, vec: Column, order: Column,
                   p: Params, threshold: Double): DataFrame =
     flatClusterAuto(df, id, vec, order, p, Some(threshold), target = 0L)
 
   /** The reference's bisection (`cluster_w_grinch.py:21-34`): cut the
-    * already-built tree toward `target` clusters, θ ∈ [0,1],
-    * tolerance n/1000, ≤ `maxIters` cuts. Runs where the tree lives.
+    * already-built tree toward `target` clusters ([[ClusterFold.bisect]],
+    * ≤ `maxIters` cuts) and return the last cut. Runs where the tree
+    * lives. When no cut runs (n ≥ 1000·(target+1) satisfies the
+    * tolerance up front, where the reference would crash on an unbound
+    * variable), the tree is cut once at the returned θ = 0.5.
     */
   private def bisectCut(g: Grinch, n: Int, target: Long, maxIters: Int): Array[Int] = {
-    val epsilon = n / 1000.0
-    var lo = 0.0; var hi = 1.0
-    var nClusters = -1L
-    var best: Array[Int] = null
-    var i = 0
-    while (math.abs(nClusters.toDouble - target.toDouble) > epsilon && i < maxIters) {
-      i += 1
-      val t = (lo + hi) / 2
-      best = g.flatClustering(t)
-      nClusters = best.distinct.length.toLong
-      if (nClusters < target) lo = t else hi = t
-    }
-    // n >= 1000·(target+1) can satisfy the tolerance before any cut —
-    // the reference would crash on an unbound variable there; cut once
-    if (best == null) best = g.flatClustering(0.5)
-    best
+    val (t, _) = ClusterFold.bisect(n, target, maxIters)(t => g.flatClustering(t).distinct.length.toLong)
+    g.flatClustering(t)
   }
 
   /** Flat clustering with the reference CLI's threshold handling
@@ -588,14 +575,12 @@ object Grinch {
                       maxIters: Int = 100): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(id.cast("long").as("_1"), vec.cast("array<float>").as("_2"), order.cast("long").as("_3"))
-      .as[(Long, Array[Float], Long)]
-      .repartition(1).sortWithinPartitions(col("_3"))
+    ClusterFold.single[(Long, Array[Float], Long)](df, id, vec, order)
       .mapPartitions { it =>
         val rows = it.toArray
         if (rows.isEmpty) Iterator.empty
         else {
-          val g = build(rows.map(_._2), p)
+          val g = buildFrom(rows.map(_._2), p)
           val assign = threshold match {
             case Some(t) => g.flatClustering(t)
             case None => bisectCut(g, rows.length, target, maxIters)
@@ -615,15 +600,11 @@ object Grinch {
                        p: Params, threshold: Double): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(key.cast("long").as("_1"), id.cast("long").as("_2"),
-        vec.cast("array<float>").as("_3"), order.cast("long").as("_4"))
-      .as[(Long, Long, Array[Float], Long)]
-      .repartition(col("_1")).sortWithinPartitions(col("_1"), col("_4"))
+    ClusterFold.keyed[(Long, Long, Array[Float], Long)](df, key, id, vec, order)
       .mapPartitions { it =>
-        it.toArray.groupBy(_._1).iterator.flatMap { case (k, rows) =>
-          val g = build(rows.map(_._3), p)
-          val assign = g.flatClustering(threshold)
-          rows.iterator.zipWithIndex.map { case ((_, rid, _, _), i) => (k, rid, assign(i).toLong) }
+        ClusterFold.keyRuns(it)(_._1).flatMap { rows =>
+          val assign = buildFrom(rows.map(_._3), p).flatClustering(threshold)
+          rows.iterator.zipWithIndex.map { case ((k, rid, _, _), i) => (k, rid, assign(i).toLong) }
         }
       }
       .toDF("key", "id", "pred_cluster")
@@ -655,15 +636,12 @@ object Grinch {
                             maxIters: Int = 100): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(id.cast("long").as("_1"), vec.cast("array<float>").as("_2"),
-        order.cast("long").as("_3"), label.cast("string").as("_4"))
-      .as[(Long, Array[Float], Long, String)]
-      .repartition(1).sortWithinPartitions(col("_3"))
+    ClusterFold.single[(Long, Array[Float], Long, String)](df, id, vec, order, label.cast("string"))
       .mapPartitions { it =>
         val rows = it.toArray
         if (rows.isEmpty) Iterator.empty
         else {
-          val g = build(rows.map(_._2), p)
+          val g = buildFrom(rows.map(_._2), p)
           val nodes = g.treeNodes(i => Option(rows(i)._4)).iterator
             .map(t => ("node", t.uid, t.parentUid.orNull, t.label.orNull,
               null.asInstanceOf[java.lang.Long], null.asInstanceOf[java.lang.Long]))

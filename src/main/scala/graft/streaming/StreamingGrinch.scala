@@ -44,9 +44,27 @@ object StreamingGrinch {
   implicit private val outEnc: Encoder[TreeAssignment] = Encoders.product[TreeAssignment]
   implicit private val rowEnc: Encoder[TreeRow] = Encoders.product[TreeRow]
 
-  /** Apply to a streaming (or batch) Dataset[PointEvent]; emits the
-    * refreshed flat clustering of each touched key per micro-batch.
+  /** One replay-log step per key and micro-batch: append the batch's
+    * points in `order` to the logged ones, store the log, rebuild the
+    * tree from it and emit `out(key, tree, log)`; an empty log emits
+    * nothing. Shared by every GRINCH streaming relation, so they all
+    * hold the same state.
     */
+  private def replayed[O: Encoder](events: Dataset[PointEvent], p: Grinch.Params)
+                                  (out: (Long, Grinch, List[(Long, Array[Float])]) => Iterator[O]): Dataset[O] = {
+    import events.sparkSession.implicits._
+    events
+      .groupByKey(_.key)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (key: Long, batch: Iterator[PointEvent], state: GroupState[TreeLog]) =>
+          val prior = state.getOption.map(_.entries).getOrElse(Nil)
+          val log = prior ++ batch.toSeq.sortBy(_.order).map(e => (e.id, e.vec))
+          state.update(TreeLog(log))
+          if (log.isEmpty) Iterator.empty
+          else out(key, Grinch.buildFrom(log.map(_._2).toArray, p), log)
+      }
+  }
+
   /** The evolving DENDROGRAM of each key: every micro-batch re-emits
     * the key's full current (uid, parent) relation stamped with the
     * step; consumers keep the max-step row per uid. Same replay-log
@@ -54,46 +72,23 @@ object StreamingGrinch {
     * construction, so under the h5 restricted integer config the
     * max-step output hash-matches h5's closed-form SQL oracle.
     */
-  def dendrogram(events: Dataset[PointEvent], p: Grinch.Params): Dataset[TreeRow] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, batch: Iterator[PointEvent], state: GroupState[TreeLog]) =>
-          val prior = state.getOption.map(_.entries).getOrElse(Nil)
-          val incoming = batch.toSeq.sortBy(_.order).map(e => (e.id, e.vec))
-          val log = prior ++ incoming
-          state.update(TreeLog(log))
-          if (log.isEmpty) Iterator.empty
-          else {
-            val g = Grinch.buildFrom(log.map(_._2).toArray, p)
-            val step = log.length.toLong
-            g.treeNodes(_ => None).iterator.map(t =>
-              TreeRow(key, t.uid.toLong, t.parentUid.map(_.toLong), step))
-          }
-      }
-  }
+  def dendrogram(events: Dataset[PointEvent], p: Grinch.Params): Dataset[TreeRow] =
+    replayed(events, p) { (key, g, log) =>
+      val step = log.length.toLong
+      g.treeNodes(_ => None).iterator.map(t =>
+        TreeRow(key, t.uid.toLong, t.parentUid.map(_.toLong), step))
+    }
 
+  /** Apply to a streaming (or batch) Dataset[PointEvent]; emits the
+    * refreshed flat clustering of each touched key per micro-batch.
+    */
   def flatCluster(events: Dataset[PointEvent], p: Grinch.Params,
-                  threshold: Double): Dataset[TreeAssignment] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, batch: Iterator[PointEvent], state: GroupState[TreeLog]) =>
-          val prior = state.getOption.map(_.entries).getOrElse(Nil)
-          val incoming = batch.toSeq.sortBy(_.order).map(e => (e.id, e.vec))
-          val log = prior ++ incoming
-          state.update(TreeLog(log))
-          if (log.isEmpty) Iterator.empty
-          else {
-            val g = Grinch.buildFrom(log.map(_._2).toArray, p)
-            val assign = g.flatClustering(threshold)
-            val step = log.length.toLong
-            log.iterator.zipWithIndex.map { case ((id, _), i) =>
-              TreeAssignment(key, id, assign(i).toLong, step)
-            }
-          }
+                  threshold: Double): Dataset[TreeAssignment] =
+    replayed(events, p) { (key, g, log) =>
+      val assign = g.flatClustering(threshold)
+      val step = log.length.toLong
+      log.iterator.zipWithIndex.map { case ((id, _), i) =>
+        TreeAssignment(key, id, assign(i).toLong, step)
       }
-  }
+    }
 }

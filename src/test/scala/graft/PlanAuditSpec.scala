@@ -92,15 +92,21 @@ class PlanAuditSpec extends SparkSpec {
     text.collect { case (f, t) if t.contains("\"SPARK_GRAFT_CPUS\"") => f } shouldBe
       Seq("GraftSession.scala")
     // SPARK_GRAFT_* env knobs belong to the entry points, never to
-    // query code, and only the ingest harness (streaming partitions and
-    // state-store provider) and Bench (per-run checkpoint dir) change
-    // the session conf at runtime
+    // query code, and only the ingest harness (streaming partitions,
+    // state-store provider and checkpoint placement) changes the
+    // session conf at runtime
     val mainText = sources.zip(text).collect { case (p, ft) if p.startsWith("src/main") => ft }
     val envRead = """(sys\.env\S*|System\.getenv)\(\s*"SPARK_GRAFT_""".r
     mainText.collect { case (f, t) if envRead.findFirstIn(t).isDefined => f }.sorted shouldBe
       Seq("Bench.scala", "GraftSession.scala", "RecallLadder.scala", "ScaleSmoke.scala")
     mainText.collect { case (f, t) if t.contains("conf.set(") => f }.sorted shouldBe
-      Seq("Bench.scala", "QueriesStreaming.scala")
+      Seq("QueriesStreaming.scala")
+    // the clusterers' arrival order is decided in one prep: no other
+    // operator sorts within partitions
+    sources.zip(text).collect {
+      case (p, (f, t)) if p.startsWith("src/main/scala/graft/operators") &&
+        t.contains("sortWithinPartitions(") => f
+    } shouldBe Seq("ClusterFold.scala")
     // launch-time spark.sql.* settings (the SparkContext's conf, which
     // no test's runtime spark.conf.set can touch)
     val launched = spark.sparkContext.getConf.getAll.toMap

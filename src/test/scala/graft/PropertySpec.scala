@@ -180,21 +180,36 @@ class PropertySpec extends SparkSpec {
     val p = Grinch.Params(rotateCap = 0, graftCap = 0, sim = "dot",
       norm = "none", activeLeafLimit = 12, pruningStrategy = "least_recent")
     val rnd = new scala.util.Random(5)
+    def vec() = Array.fill(8)((rnd.nextInt(127) - 63).toFloat)
+    def keyedEqualsSingle(df: org.apache.spark.sql.DataFrame): Unit = {
+      val keyed = Grinch.flatClusterByKey(df, col("k"), col("id"), col("vec"), col("id"), p,
+          threshold = 0.25)
+        .select(col("key"), col("id"), col("pred_cluster"))
+        .as[(Long, Long, Long)].collect().toSeq.sortBy(_._2)
+      val keys = df.select("k").distinct().as[Long].collect().sorted.toSeq
+      val single = keys.flatMap { k =>
+        Grinch.flatCluster(df.where(col("k") === k), col("id"), col("vec"), col("id"), p,
+            threshold = 0.25)
+          .as[(Long, Long)].collect().toSeq.map { case (id, c) => (k, id, c) }
+      }.sortBy(_._2)
+      keyed shouldBe single
+    }
     val rows = for {
       k <- 0L to 2L
       i <- 0 until 60
-    } yield (k, k * 100 + i, Array.fill(8)((rnd.nextInt(127) - 63).toFloat))
-    val df = rows.toDF("k", "id", "vec")
-    val keyed = Grinch.flatClusterByKey(df, col("k"), col("id"), col("vec"), col("id"), p,
-        threshold = 0.25)
-      .select(col("key"), col("id"), col("pred_cluster"))
-      .as[(Long, Long, Long)].collect().toSeq.sortBy(_._2)
-    val single = (0L to 2L).flatMap { k =>
-      Grinch.flatCluster(df.where(col("k") === k), col("id"), col("vec"), col("id"), p,
-          threshold = 0.25)
-        .as[(Long, Long)].collect().toSeq.map { case (id, c) => (k, id, c) }
-    }.sortBy(_._2)
-    keyed shouldBe single
+    } yield (k, k * 100 + i, vec())
+    keyedEqualsSingle(rows.toDF("k", "id", "vec"))
+    // one shuffle partition: every key run shares it, and the input
+    // interleaves keys of uneven lengths (one a single point), so each
+    // tree must come from its own contiguous run of the sorted partition
+    val lens = Seq(1, 7, 40, 23, 55)
+    val mixed = (0 until 60).flatMap(i => lens.indices.collect {
+      case k if i < lens(k) => (k.toLong, i * 10L + k, vec())
+    })
+    val saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try keyedEqualsSingle(mixed.toDF("k", "id", "vec"))
+    finally spark.conf.set("spark.sql.shuffle.partitions", saved)
   }
 
   test("AQE splits a skewed sort-merge join at runtime (the automatic half of the skew story)") {

@@ -24,29 +24,41 @@ class StreamingSpec extends SparkSpec {
     MentionEvent(1L, 10L, 0L, Array(1f, 0f)),
     MentionEvent(1L, 11L, 1L, Array(1f, 0f)))
 
-  test("a named memory-sink query re-runs under per-run checkpoint paths (bench protocol)") {
-    // regression for the round-6 bench bug: with a FIXED conf
-    // checkpoint root, the second .start() of an append-mode memory
-    // sink with the same queryName finds the first run's offsets and
-    // throws — Bench must (and now does) point each iteration at a
-    // fresh path. This pins that the re-run pattern actually works;
-    // losing it silently degrades every streaming median to one-shot.
-    val ckRoot = java.nio.file.Files.createTempDirectory("graft-ck-rerun").toString
-    val counts = (0 until 2).map { i =>
-      spark.conf.set("spark.sql.streaming.checkpointLocation", s"$ckRoot/it$i")
-      try {
-        val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long](spark)
-        val q = input.toDS().toDF("v")
-          .writeStream.format("memory").queryName("rerun_sink")
-          .outputMode("append").start()
-        try {
-          input.addData(1L, 2L, 3L)
-          q.processAllAvailable()
-          spark.table("rerun_sink").count()
-        } finally q.stop()
-      } finally spark.conf.unset("spark.sql.streaming.checkpointLocation")
+  test("fileIngest re-runs a named memory-sink query under a fixed checkpoint root") {
+    // with only a FIXED session checkpoint root, the second start of an
+    // append-mode memory sink with the same queryName finds the first
+    // run's offsets under <root>/<queryName> and throws — a runner that
+    // times each query more than once would silently degrade to
+    // one-shot timings. fileIngest checkpoints its streams under its own
+    // ingest root instead, deletes that on exit and restores the conf.
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val key = "spark.sql.streaming.checkpointLocation"
+    val fixed = java.nio.file.Files.createTempDirectory("graft-ck-fixed")
+    spark.conf.set(key, fixed.toString)
+    try {
+      val chunks = Seq(Seq(1L, 2L).toDF("v"), Seq(3L).toDF("v"))
+      val runs = (0 until 2).map { _ =>
+        var ck = ""
+        QueriesStreaming.fileIngest(spark, chunks) { in =>
+          val q = in.writeStream.format("memory").queryName("rerun_sink")
+            .outputMode("append").start()
+          ck = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.resolvedCheckpointRoot
+          q
+        }
+        (spark.table("rerun_sink").as[Long].collect().sorted.toSeq, new java.net.URI(ck).getPath)
+      }
+      runs.map(_._1) shouldBe Seq(Seq(1L, 2L, 3L), Seq(1L, 2L, 3L))
+      runs.map(_._2).distinct.length shouldBe 2
+      runs.foreach { case (_, ck) =>
+        ck should include ("/graft-ingest-")
+        java.nio.file.Files.exists(java.nio.file.Paths.get(ck)) shouldBe false
+      }
+      fixed.toFile.list() shouldBe empty
+      spark.conf.get(key) shouldBe fixed.toString
+    } finally {
+      spark.conf.unset(key)
+      QueriesStreaming.rmRf(fixed)
     }
-    counts shouldBe Seq(3L, 3L)
   }
 
   test("streaming greedy clustering matches the batch fold across multiple micro-batches") {
