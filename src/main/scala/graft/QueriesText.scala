@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -158,6 +158,36 @@ object QueriesText {
        |bands AS (SELECT doc_id, b AS band, (sig[${dedupR}*b+1] * 31 + sig[${dedupR}*b+2]) % $P AS band_hash
        |  FROM sig, generate_series(0, ${nBands - 1}) AS t(b))""".stripMargin
 
+  /** DuckDB replay of [[Dedup.bucketGuard]]: `kept` holds the band rows
+    * of buckets with at most `cap` members. */
+  private def sqlKept(cap: Int): String =
+    s"""bsz AS (SELECT band, band_hash, count(*) AS n FROM bands GROUP BY 1, 2),
+       |kept AS (SELECT bands.* FROM bands JOIN bsz USING (band, band_hash)
+       |  WHERE bsz.n <= $cap)""".stripMargin
+
+  /** DuckDB replay of [[Dedup.lshCandidatePairs]]: `cand` holds the
+    * distinct (doc_a < doc_b) pairs sharing a band hash, over the bands
+    * kept under cap `cap` (all bands at `cap <= 0`). */
+  private def sqlCand(cap: Int): String = {
+    val (guard, rel) = if (cap > 0) (sqlKept(cap) + ",\n", "kept") else ("", "bands")
+    s"""${guard}cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM $rel a JOIN $rel b ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id)""".stripMargin
+  }
+
+  /** DuckDB exact Jaccard(x.hs, y.hs) ≥ 1/2, cross-multiplied like
+    * `Dedup.jaccardAtLeast`. */
+  private val sqlJaccardHalf: String =
+    "len(list_intersect(x.hs, y.hs)) * 2 >= (len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs))) * 1"
+
+  /** The verified J ≥ 1/2 near-dup pairs over the documents' shingle
+    * sets under bucket cap `cap` (0 = uncapped): d3/d3b's rows and the
+    * d7/d8/st8 edge build. */
+  private def nearDupPairs(docs: DataFrame, cap: Int): DataFrame = {
+    val sets = Dedup.shingleSets(docs, col("doc_id"), shingleSet)
+    val bands = Dedup.minHashBandsFromSets(sets, dedupK, dedupR)
+    Dedup.nearDupPairsFromSets(sets, bands, 1, 2, maxBucket = cap)
+  }
+
   // ---------------------------------------------------------------- d2
   // MinHash LSH banding: k=16 hashes, 8 bands of 2 rows.
   val d2MinhashBands: Q = (s, dir) =>
@@ -172,25 +202,24 @@ object QueriesText {
   // ---------------------------------------------------------------- d3
   // Near-duplicate detection: LSH candidates verified by exact Jaccard
   // >= 1/2 over the shingle sets (the n-gram Jaccard + MinHash+LSH pair).
-  val d3MinhashNeardup: Q = (s, dir) => {
-    val sets = Dedup.shingleSets(Tables.load(s, dir, "documents"), col("doc_id"), shingleSet)
-    val bands = Dedup.minHashBandsFromSets(sets, dedupK, dedupR)
-    Dedup.nearDupPairsFromSets(sets, bands, 1, 2)
-      .orderBy("doc_a", "doc_b")
-  }
+  // d3 and d3b are one body; the cap is its one parameter.
+  private def nearDupQ(cap: Int): Q = (s, dir) =>
+    nearDupPairs(Tables.load(s, dir, "documents"), cap).orderBy("doc_a", "doc_b")
 
-  val d3MinhashNeardupSql: String =
+  private def nearDupSql(cap: Int): String =
     s"""WITH $sqlBandCtes,
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id)
+       |${sqlCand(cap)}
        |SELECT doc_a, doc_b,
        |       len(list_intersect(x.hs, y.hs))::BIGINT AS j_num,
        |       (len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs)))::BIGINT AS j_den,
        |       cast(len(list_intersect(x.hs, y.hs)) as double)
        |         / cast(len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs)) as double) AS jaccard
        |FROM cand JOIN sh x ON x.doc_id = doc_a JOIN sh y ON y.doc_id = doc_b
-       |WHERE len(list_intersect(x.hs, y.hs)) * 2 >= (len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs))) * 1
+       |WHERE $sqlJaccardHalf
        |ORDER BY doc_a, doc_b""".stripMargin
+
+  val d3MinhashNeardup: Q = nearDupQ(0)
+  val d3MinhashNeardupSql: String = nearDupSql(0)
 
   // --------------------------------------------------------------- d3b
   // d3 with the occupancy guard (lshCandidatePairs maxBucket=64): band
@@ -204,28 +233,8 @@ object QueriesText {
   // sf10 — the oracle replays the filter either way.
   private[graft] val d3bMaxBucket = 64
 
-  val d3bMinhashCapped: Q = (s, dir) => {
-    val sets = Dedup.shingleSets(Tables.load(s, dir, "documents"), col("doc_id"), shingleSet)
-    val bands = Dedup.minHashBandsFromSets(sets, dedupK, dedupR)
-    Dedup.nearDupPairsFromSets(sets, bands, 1, 2, maxBucket = d3bMaxBucket)
-      .orderBy("doc_a", "doc_b")
-  }
-
-  val d3bMinhashCappedSql: String =
-    s"""WITH $sqlBandCtes,
-       |bsz AS (SELECT band, band_hash, count(*) AS n FROM bands GROUP BY 1, 2),
-       |kept AS (SELECT bands.* FROM bands JOIN bsz USING (band, band_hash)
-       |  WHERE bsz.n <= $d3bMaxBucket),
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM kept a JOIN kept b ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id)
-       |SELECT doc_a, doc_b,
-       |       len(list_intersect(x.hs, y.hs))::BIGINT AS j_num,
-       |       (len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs)))::BIGINT AS j_den,
-       |       cast(len(list_intersect(x.hs, y.hs)) as double)
-       |         / cast(len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs)) as double) AS jaccard
-       |FROM cand JOIN sh x ON x.doc_id = doc_a JOIN sh y ON y.doc_id = doc_b
-       |WHERE len(list_intersect(x.hs, y.hs)) * 2 >= (len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs))) * 1
-       |ORDER BY doc_a, doc_b""".stripMargin
+  val d3bMinhashCapped: Q = nearDupQ(d3bMaxBucket)
+  val d3bMinhashCappedSql: String = nearDupSql(d3bMaxBucket)
 
   // ---------------------------------------------------------------- d4
   // SimHash (16-bit) per document over token hashes.
@@ -246,34 +255,30 @@ object QueriesText {
 
   // ---------------------------------------------------------------- d5
   // Character-trigram Jaccard over the LSH candidate pairs (char-shingle
-  // near-dup lens; the blocker is shared with d3).
-  val d5NgramJaccard: Q = (s, dir) => {
+  // near-dup lens; the blocker is shared with d3). d5 and d5b are one
+  // body; the cap is its one parameter. The trigram sets go through
+  // shingleSets, so the trigram hash expression is materialized once
+  // behind its exchange, never re-inlined into both join sides.
+  private def triJaccardQ(cap: Int): Q = (s, dir) => {
     val docs = Tables.load(s, dir, "documents")
     val bands = Dedup.minHashBands(docs, col("doc_id"), shingleSet, dedupK, dedupR)
-    // materialized behind an exchange, like shingleSets — the trigram
-    // hash expression must not be re-inlined into both join sides
-    val tri = docs.select(col("doc_id").as("doc"),
-        array_sort(TextFunctions.charNgramHashes(col("text"), 3)).cast(Dedup.IntSet).as("tri"))
-      .repartition(col("doc")).persist()
-    Dedup.lshCandidatePairs(bands)
-      .join(tri.select(col("doc").as("doc_a"), col("tri").as("tri_a")), "doc_a")
-      .join(tri.select(col("doc").as("doc_b"), col("tri").as("tri_b")), "doc_b")
-      .withColumn("t_num", TextFunctions.sortedIntersectCount(col("tri_a"), col("tri_b")))
-      .withColumn("t_den", (size(col("tri_a")) + size(col("tri_b"))).cast("long") - col("t_num"))
-      .select(
-        col("doc_a"), col("doc_b"), col("t_num"), col("t_den"),
-        (col("t_num").cast("double") / col("t_den").cast("double")).as("tri_jaccard"))
+    val tri = Dedup.shingleSets(docs, col("doc_id"), TextFunctions.charNgramHashes(col("text"), 3))
+    Dedup.jaccardCounts(Dedup.lshCandidatePairs(bands, cap), tri, "doc_a", "doc_b")
+      .select(col("doc_a"), col("doc_b"), col("j_num").as("t_num"), col("j_den").as("t_den"),
+        Dedup.jaccardRatio.as("tri_jaccard"))
       .orderBy("doc_a", "doc_b")
   }
 
-  val d5NgramJaccardSql: String = {
-    val triOf = s"list_distinct(list_transform(" +
+  /** DuckDB character-trigram hash set matching `charNgramHashes(text, 3)`. */
+  private val sqlTri: String =
+    s"list_distinct(list_transform(" +
       s"list_transform(generate_series(1, greatest(length(text)-2, 0)), i -> substring(text, i, 3)), " +
       s"sstr -> ${sqlStrHash("sstr")}))"
+
+  private def triJaccardSql(cap: Int): String =
     s"""WITH $sqlBandCtes,
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-       |tri AS (SELECT doc_id, $triOf AS tri FROM documents)
+       |${sqlCand(cap)},
+       |tri AS (SELECT doc_id, $sqlTri AS tri FROM documents)
        |SELECT doc_a, doc_b,
        |       len(list_intersect(x.tri, y.tri))::BIGINT AS t_num,
        |       (len(x.tri) + len(y.tri) - len(list_intersect(x.tri, y.tri)))::BIGINT AS t_den,
@@ -281,7 +286,9 @@ object QueriesText {
        |         / cast(len(x.tri) + len(y.tri) - len(list_intersect(x.tri, y.tri)) as double) AS tri_jaccard
        |FROM cand JOIN tri x ON x.doc_id = doc_a JOIN tri y ON y.doc_id = doc_b
        |ORDER BY doc_a, doc_b""".stripMargin
-  }
+
+  val d5NgramJaccard: Q = triJaccardQ(0)
+  val d5NgramJaccardSql: String = triJaccardSql(0)
 
   // --------------------------------------------------------------- d5b
   // d5 with the occupancy guard (lshCandidatePairs maxBucket=64) — the
@@ -297,42 +304,8 @@ object QueriesText {
   // same bsz/kept CTE as d3b).
   private val d5bMaxBucket = 64
 
-  val d5bJaccardCapped: Q = (s, dir) => {
-    val docs = Tables.load(s, dir, "documents")
-    val bands = Dedup.minHashBands(docs, col("doc_id"), shingleSet, dedupK, dedupR)
-    val tri = docs.select(col("doc_id").as("doc"),
-        array_sort(TextFunctions.charNgramHashes(col("text"), 3)).cast(Dedup.IntSet).as("tri"))
-      .repartition(col("doc")).persist()
-    Dedup.lshCandidatePairs(bands, maxBucket = d5bMaxBucket)
-      .join(tri.select(col("doc").as("doc_a"), col("tri").as("tri_a")), "doc_a")
-      .join(tri.select(col("doc").as("doc_b"), col("tri").as("tri_b")), "doc_b")
-      .withColumn("t_num", TextFunctions.sortedIntersectCount(col("tri_a"), col("tri_b")))
-      .withColumn("t_den", (size(col("tri_a")) + size(col("tri_b"))).cast("long") - col("t_num"))
-      .select(
-        col("doc_a"), col("doc_b"), col("t_num"), col("t_den"),
-        (col("t_num").cast("double") / col("t_den").cast("double")).as("tri_jaccard"))
-      .orderBy("doc_a", "doc_b")
-  }
-
-  val d5bJaccardCappedSql: String = {
-    val triOf = s"list_distinct(list_transform(" +
-      s"list_transform(generate_series(1, greatest(length(text)-2, 0)), i -> substring(text, i, 3)), " +
-      s"sstr -> ${sqlStrHash("sstr")}))"
-    s"""WITH $sqlBandCtes,
-       |bsz AS (SELECT band, band_hash, count(*) AS n FROM bands GROUP BY 1, 2),
-       |kept AS (SELECT bands.* FROM bands JOIN bsz USING (band, band_hash)
-       |  WHERE bsz.n <= $d5bMaxBucket),
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM kept a JOIN kept b ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-       |tri AS (SELECT doc_id, $triOf AS tri FROM documents)
-       |SELECT doc_a, doc_b,
-       |       len(list_intersect(x.tri, y.tri))::BIGINT AS t_num,
-       |       (len(x.tri) + len(y.tri) - len(list_intersect(x.tri, y.tri)))::BIGINT AS t_den,
-       |       cast(len(list_intersect(x.tri, y.tri)) as double)
-       |         / cast(len(x.tri) + len(y.tri) - len(list_intersect(x.tri, y.tri)) as double) AS tri_jaccard
-       |FROM cand JOIN tri x ON x.doc_id = doc_a JOIN tri y ON y.doc_id = doc_b
-       |ORDER BY doc_a, doc_b""".stripMargin
-  }
+  val d5bJaccardCapped: Q = triJaccardQ(d5bMaxBucket)
+  val d5bJaccardCappedSql: String = triJaccardSql(d5bMaxBucket)
 
   // ---------------------------------------------------------------- t6
   // Repetition detection (degenerate-text quality signal): the most
@@ -703,30 +676,28 @@ object QueriesText {
   private[graft] val d7MaxBucket = 64
 
   val d7CcDedup: Q = (s, dir) => {
-    val sets = Dedup.shingleSets(Tables.load(s, dir, "documents"), col("doc_id"), shingleSet)
-    val bands = Dedup.minHashBandsFromSets(sets, dedupK, dedupR)
-    val pairs = Dedup.nearDupPairsFromSets(sets, bands, 1, 2, maxBucket = d7MaxBucket)
-      .select("doc_a", "doc_b")
+    val pairs = nearDupPairs(Tables.load(s, dir, "documents"), d7MaxBucket).select("doc_a", "doc_b")
     Dedup.connectedComponents(pairs, col("doc_a"), col("doc_b"))
       .select(col("node").as("doc_id"), col("comp").as("component"),
         (col("node") === col("comp")).as("is_canonical"))
       .orderBy("doc_id")
   }
 
-  val d7CcDedupSql: String =
+  /** d7's oracle CTEs, shared with d8: the capped J ≥ 1/2 edges `ndp`,
+    * symmetrized as `edges`, and the min-label propagation `cc`. */
+  private val sqlCcCtes: String =
     s"""WITH RECURSIVE $sqlBandCtes,
-       |bsz AS (SELECT band, band_hash, count(*) AS n FROM bands GROUP BY 1, 2),
-       |kept AS (SELECT bands.* FROM bands JOIN bsz USING (band, band_hash)
-       |  WHERE bsz.n <= $d7MaxBucket),
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM kept a JOIN kept b ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
+       |${sqlCand(d7MaxBucket)},
        |ndp AS (SELECT doc_a, doc_b FROM cand JOIN sh x ON x.doc_id = doc_a JOIN sh y ON y.doc_id = doc_b
-       |  WHERE len(list_intersect(x.hs, y.hs)) * 2 >= (len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs))) * 1),
+       |  WHERE $sqlJaccardHalf),
        |edges AS (SELECT doc_a AS src, doc_b AS dst FROM ndp UNION SELECT doc_b, doc_a FROM ndp),
        |cc(node, comp) AS (
        |  SELECT DISTINCT src, src FROM edges
        |  UNION
-       |  SELECT e.dst, cc.comp FROM cc JOIN edges e ON cc.node = e.src WHERE cc.comp < e.dst)
+       |  SELECT e.dst, cc.comp FROM cc JOIN edges e ON cc.node = e.src WHERE cc.comp < e.dst)""".stripMargin
+
+  val d7CcDedupSql: String =
+    s"""$sqlCcCtes
        |SELECT node AS doc_id, min(comp) AS component, node = min(comp) AS is_canonical
        |FROM cc GROUP BY node ORDER BY doc_id""".stripMargin
 
@@ -741,31 +712,16 @@ object QueriesText {
   // (task, component), not the corpus.
   val d8KeepBest: Q = (s, dir) => {
     val docs = Tables.load(s, dir, "documents").select("doc_id", "n_chars")
-    val sets = Dedup.shingleSets(Tables.load(s, dir, "documents"), col("doc_id"), shingleSet)
-    val bands = Dedup.minHashBandsFromSets(sets, dedupK, dedupR)
     // same bucket-occupancy cap as d7: the edge build is the measured
     // 75-s-class sf10 wall, and the cap is a no-op at the gate sfs
-    val pairs = Dedup.nearDupPairsFromSets(sets, bands, 1, 2, maxBucket = d7MaxBucket)
-      .select("doc_a", "doc_b")
+    val pairs = nearDupPairs(Tables.load(s, dir, "documents"), d7MaxBucket).select("doc_a", "doc_b")
     val labels = Dedup.connectedComponents(pairs, col("doc_a"), col("doc_b"))
     Dedup.keepBestPerComponent(docs, "doc_id", "n_chars", labels)
       .orderBy("component")
   }
 
   val d8KeepBestSql: String =
-    s"""WITH RECURSIVE $sqlBandCtes,
-       |bsz AS (SELECT band, band_hash, count(*) AS n FROM bands GROUP BY 1, 2),
-       |kept AS (SELECT bands.* FROM bands JOIN bsz USING (band, band_hash)
-       |  WHERE bsz.n <= $d7MaxBucket),
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM kept a JOIN kept b ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id),
-       |ndp AS (SELECT doc_a, doc_b FROM cand JOIN sh x ON x.doc_id = doc_a JOIN sh y ON y.doc_id = doc_b
-       |  WHERE len(list_intersect(x.hs, y.hs)) * 2 >= (len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs))) * 1),
-       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM ndp UNION SELECT doc_b, doc_a FROM ndp),
-       |cc(node, comp) AS (
-       |  SELECT DISTINCT src, src FROM edges
-       |  UNION
-       |  SELECT e.dst, cc.comp FROM cc JOIN edges e ON cc.node = e.src WHERE cc.comp < e.dst),
+    s"""$sqlCcCtes,
        |lbl AS (SELECT node, min(comp) AS component FROM cc GROUP BY node),
        |asg AS (SELECT d.doc_id, d.n_chars, coalesce(l.component, d.doc_id) AS component
        |  FROM documents d LEFT JOIN lbl l ON d.doc_id = l.node),
@@ -793,32 +749,41 @@ object QueriesText {
     val docs = Tables.load(s, dir, "documents")
     val sets = Dedup.shingleSets(docs, col("doc_id"), shingleSet)
     val bands = Dedup.minHashBandsFromSets(sets, dedupK, dedupR)
-    val matches = Dedup.incrementalNearDupPairs(sets, bands,
-        _ % d11NewMod === 0, 1, 2, maxBucket = d7MaxBucket)
-      .groupBy(col("doc_n")).agg(min(col("doc_o")).as("m"))
+    dupOfNew(docs, Dedup.incrementalNearDupPairs(sets, bands,
+      _ % d11NewMod === 0, 1, 2, maxBucket = d7MaxBucket))
+  }
+
+  /** d11/st27's verdict per new doc from its (doc_n, doc_o) matches:
+    * dup_of = the smallest matched doc (itself when unique). `min` is
+    * commutative, so repeated matches are absorbed. */
+  private def dupOfNew(docs: DataFrame, matches: DataFrame): DataFrame = {
+    val m = matches.groupBy(col("doc_n")).agg(min(col("doc_o")).as("m"))
     docs.where(col("doc_id") % d11NewMod === 0).select("doc_id")
-      .join(matches, col("doc_id") === col("doc_n"), "left")
+      .join(m, col("doc_id") === col("doc_n"), "left")
       .select(col("doc_id"), coalesce(col("m"), col("doc_id")).as("dup_of"),
         (coalesce(col("m"), col("doc_id")) =!= col("doc_id")).as("is_dup"))
       .orderBy("doc_id")
   }
 
-  val d11IncrementalDedupSql: String =
+  /** d11/st27's oracle: J ≥ 1/2 matches of new docs (doc_id % 5 = 0)
+    * over the capped bands, candidates further kept by `rule` over the
+    * new doc `a` and the matched doc `b`. */
+  private def incrementalSql(rule: String): String =
     s"""WITH $sqlBandCtes,
-       |bsz AS (SELECT band, band_hash, count(*) AS n FROM bands GROUP BY 1, 2),
-       |kept AS (SELECT bands.* FROM bands JOIN bsz USING (band, band_hash)
-       |  WHERE bsz.n <= $d7MaxBucket),
+       |${sqlKept(d7MaxBucket)},
        |cand AS (SELECT DISTINCT a.doc_id AS doc_n, b.doc_id AS doc_o
        |  FROM kept a JOIN kept b ON a.band = b.band AND a.band_hash = b.band_hash
-       |  WHERE a.doc_id % $d11NewMod = 0 AND b.doc_id <> a.doc_id
-       |    AND (b.doc_id % $d11NewMod <> 0 OR b.doc_id < a.doc_id)),
+       |  WHERE a.doc_id % $d11NewMod = 0 AND $rule),
        |ndp AS (SELECT doc_n, doc_o FROM cand JOIN sh x ON x.doc_id = doc_n JOIN sh y ON y.doc_id = doc_o
-       |  WHERE len(list_intersect(x.hs, y.hs)) * 2 >= (len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs))) * 1),
+       |  WHERE $sqlJaccardHalf),
        |m AS (SELECT doc_n, min(doc_o) AS mo FROM ndp GROUP BY doc_n)
        |SELECT d.doc_id, coalesce(m.mo, d.doc_id) AS dup_of,
        |       coalesce(m.mo, d.doc_id) <> d.doc_id AS is_dup
        |FROM documents d LEFT JOIN m ON m.doc_n = d.doc_id
        |WHERE d.doc_id % $d11NewMod = 0 ORDER BY doc_id""".stripMargin
+
+  val d11IncrementalDedupSql: String =
+    incrementalSql(s"b.doc_id <> a.doc_id AND (b.doc_id % $d11NewMod <> 0 OR b.doc_id < a.doc_id)")
 
   // ---------------------------------------------------------------- t8
   // Corpus-level n-gram statistics: the global top-50 word bigrams by
@@ -1113,13 +1078,8 @@ object QueriesText {
 
   val st6StreamingNeardupSql: String =
     s"""WITH $sqlBandCtes,
-       |bsz AS (SELECT band, band_hash, count(*) AS n FROM bands GROUP BY 1, 2),
-       |kept AS (SELECT bands.* FROM bands JOIN bsz USING (band, band_hash)
-       |  WHERE bsz.n <= $d3bMaxBucket)
-       |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |FROM kept a JOIN kept b
-       |  ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-       |ORDER BY doc_a, doc_b""".stripMargin
+       |${sqlCand(d3bMaxBucket)}
+       |SELECT doc_a, doc_b FROM cand ORDER BY doc_a, doc_b""".stripMargin
 
   // ---------------------------------------------------------------- st8
   // Streaming duplicate-group assembly: the verified near-dup pairs
@@ -1137,12 +1097,10 @@ object QueriesText {
     // (doc_a·1000003 + doc_b, unique since doc_a < doc_b) leave the
     // final assignment equal to batch d7 — the same recursive-CTE
     // oracle hash-pins it.
-    val sets = Dedup.shingleSets(Tables.load(s, dir, "documents"), col("doc_id"), shingleSet)
-    val bands = Dedup.minHashBandsFromSets(sets, dedupK, dedupR)
     // same bucket-occupancy cap as the pinned oracle (d7CcDedupSql):
     // without it the engine feed and the capped oracle only agree at
     // sfs where the cap is a no-op — a latent contract divergence
-    val events = Dedup.nearDupPairsFromSets(sets, bands, 1, 2, maxBucket = d7MaxBucket)
+    val events = nearDupPairs(Tables.load(s, dir, "documents"), d7MaxBucket)
       .select(lit(0L).as("key"),
         (col("doc_a") * 1000003L + col("doc_b")).as("seq"),
         col("doc_a").as("a"), col("doc_b").as("b"))
@@ -1167,81 +1125,45 @@ object QueriesText {
   // -------------------------------------------------------------- st27
   // Streaming incremental dedup — d11's ingest contract as a LIVE
   // STREAM-STATIC pipeline (the canonical Structured Streaming ingest
-  // shape, stateless end to end): the snapshot's capped band table and
-  // shingle sets are STATIC relations; the new-doc band rows arrive
-  // from files, pass the same bucket-occupancy guard (stream-static
-  // left_anti against the tiny oversize-bucket set), candidate-join
-  // the snapshot bands (stream-static inner), and are Jaccard-verified
-  // in-stream by two more stream-static joins. No state store at all —
-  // every micro-batch is a pure join pipeline, so batching cannot
+  // shape, stateless end to end): all bands pass the bucket-occupancy
+  // guard once before ingest (occupancy is a corpus property, so the
+  // kept set is d11's and d7's); the snapshot's kept bands and the
+  // shingle sets are STATIC relations, and the new docs' kept band
+  // rows arrive from files, candidate-join the snapshot bands
+  // (stream-static inner) and are Jaccard-verified in-stream by two
+  // more stream-static joins (Dedup.snapshotMatches). No state store at
+  // all — every micro-batch is a pure join pipeline, so batching cannot
   // change the result by construction. Verified matches land in the
-  // sink; the batch side only folds min(doc_o) per new doc (min is
-  // commutative — duplicate candidate emissions via several bands are
-  // absorbed). Unlike st8/d11 the stream never sees other BATCH
-  // members, so the contract is new x snapshot only — the oracle
-  // drops d11's earlier-batch clause accordingly.
+  // sink; the batch side only folds min(doc_o) per new doc (dupOfNew —
+  // duplicate candidate emissions via several bands are absorbed).
+  // Unlike st8/d11 the stream never sees other BATCH members, so the
+  // contract is new x snapshot only — the oracle drops d11's
+  // earlier-batch clause accordingly.
   val st27StreamingIncremental: Q = (s, dir) => {
     val docs = Tables.load(s, dir, "documents")
     val sets = Dedup.shingleSets(docs, col("doc_id"), shingleSet)
-    val bands = Dedup.minHashBandsFromSets(sets, dedupK, dedupR)
-    // the guard's oversize-bucket set is computed over ALL bands —
-    // occupancy is a corpus property (same kept set as d11/d7)
-    val big = bands.groupBy("band", "band_hash").agg(count(lit(1)).as("__bsz"))
-      .where(col("__bsz") > d7MaxBucket).select("band", "band_hash")
-    val snapB = bands.where(col("doc") % d11NewMod =!= 0)
-      .join(big, Seq("band", "band_hash"), "left_anti")
-      .select(col("band"), col("band_hash"), col("doc").as("doc_o"))
-    val snapSets = sets.where(col("doc") % d11NewMod =!= 0)
-      .select(col("doc").as("doc_o"), col("hs").as("hs_o"))
-    val newSets = sets.where(col("doc") % d11NewMod === 0)
-      .select(col("doc").as("doc_n"), col("hs").as("hs_n"))
-    val feed = bands.where(col("doc") % d11NewMod === 0)
-      .select(col("doc").as("doc_n"), col("band"), col("band_hash"))
-    // key cuts (doc_n mod 3): min-fold output is arrival-order-
+    val kept = Dedup.bucketGuard(Dedup.minHashBandsFromSets(sets, dedupK, dedupR), d7MaxBucket)
+    val isNew = col("doc") % d11NewMod === 0
+    val snap = kept.where(!isNew)
+    val feed = kept.where(isNew).select("doc", "band", "band_hash")
+    // key cuts (doc mod 3): min-fold output is arrival-order-
     // independent, so any chunking yields the same final table
-    val chunks = (0 until 3).map(i => feed.where(pmod(col("doc_n"), lit(3)) === i))
+    val chunks = (0 until 3).map(i => feed.where(pmod(col("doc"), lit(3)) === i))
 
-    // the static relations are joined by EVERY micro-batch — persist
-    // them (via fileIngest's cache hook) or each of the 3 batches
-    // recomputes the full snapshot band/set prep (measured ~3x the
-    // batch d11 wall at sf10 uncached)
-    QueriesStreaming.fileIngest(s, chunks,
-      cache = Seq(feed, big, snapB, snapSets, newSets)) { stream =>
-      stream
-        .join(big, Seq("band", "band_hash"), "left_anti")
-        .join(snapB, Seq("band", "band_hash"))
-        .join(newSets, Seq("doc_n"))
-        .join(snapSets, Seq("doc_o"))
-        .withColumn("j_num", TextFunctions.sortedIntersectCount(col("hs_n"), col("hs_o")))
-        .withColumn("j_den", (size(col("hs_n")) + size(col("hs_o"))).cast("long") - col("j_num"))
-        .where(col("j_num") * 2 >= col("j_den") * 1)
-        .select(col("doc_n"), col("doc_o"))
+    // the snapshot bands are joined by EVERY micro-batch — persist the
+    // kept bands (via fileIngest's cache hook) or each of the 3 batches
+    // recomputes the full band prep and guard (measured ~3x the batch
+    // d11 wall at sf10 uncached); the sets are persisted by shingleSets
+    QueriesStreaming.fileIngest(s, chunks, cache = Seq(kept)) { stream =>
+      Dedup.snapshotMatches(stream, snap, sets, 1, 2)
         .writeStream.format("memory").queryName("st27_sink").outputMode("append").start()
     }
 
-    val m = s.table("st27_sink").groupBy(col("doc_n")).agg(min(col("doc_o")).as("m"))
-    docs.where(col("doc_id") % d11NewMod === 0).select("doc_id")
-      .join(m, col("doc_id") === col("doc_n"), "left")
-      .select(col("doc_id"), coalesce(col("m"), col("doc_id")).as("dup_of"),
-        (coalesce(col("m"), col("doc_id")) =!= col("doc_id")).as("is_dup"))
-      .orderBy("doc_id")
+    dupOfNew(docs, s.table("st27_sink"))
   }
 
   val st27StreamingIncrementalSql: String =
-    s"""WITH $sqlBandCtes,
-       |bsz AS (SELECT band, band_hash, count(*) AS n FROM bands GROUP BY 1, 2),
-       |kept AS (SELECT bands.* FROM bands JOIN bsz USING (band, band_hash)
-       |  WHERE bsz.n <= $d7MaxBucket),
-       |cand AS (SELECT DISTINCT a.doc_id AS doc_n, b.doc_id AS doc_o
-       |  FROM kept a JOIN kept b ON a.band = b.band AND a.band_hash = b.band_hash
-       |  WHERE a.doc_id % $d11NewMod = 0 AND b.doc_id % $d11NewMod <> 0),
-       |ndp AS (SELECT doc_n, doc_o FROM cand JOIN sh x ON x.doc_id = doc_n JOIN sh y ON y.doc_id = doc_o
-       |  WHERE len(list_intersect(x.hs, y.hs)) * 2 >= (len(x.hs) + len(y.hs) - len(list_intersect(x.hs, y.hs))) * 1),
-       |m AS (SELECT doc_n, min(doc_o) AS mo FROM ndp GROUP BY doc_n)
-       |SELECT d.doc_id, coalesce(m.mo, d.doc_id) AS dup_of,
-       |       coalesce(m.mo, d.doc_id) <> d.doc_id AS is_dup
-       |FROM documents d LEFT JOIN m ON m.doc_n = d.doc_id
-       |WHERE d.doc_id % $d11NewMod = 0 ORDER BY doc_id""".stripMargin
+    incrementalSql(s"b.doc_id % $d11NewMod <> 0")
 
   // --------------------------------------------------------------- p13
   // Deterministic temperature-scaled source mixing (T=2) — the corpus

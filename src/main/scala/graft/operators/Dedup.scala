@@ -35,7 +35,7 @@ object Dedup {
 
   /** Element type of a stored shingle/trigram set: non-null ints, so the
     * kernels skip null checks (the string form "array<int>" is nullable). */
-  private[graft] val IntSet = ArrayType(IntegerType, containsNull = false)
+  private val IntSet = ArrayType(IntegerType, containsNull = false)
 
   /** Materialize the per-doc distinct shingle-hash set ONCE, behind an
     * exchange barrier. Without the barrier, Catalyst's projection
@@ -95,9 +95,10 @@ object Dedup {
 
   /** The bucket-occupancy guard shared by every capped pair build:
     * drop band buckets with more than `maxBucket` members before any
-    * self-join (no-op at `maxBucket <= 0`). Exposed within the package
-    * so streaming ingest feeds (st6) can cap their candidate emission
-    * with the exact same kept set the batch oracles replay.
+    * self-join (no-op at `maxBucket <= 0`). The one place the oversize
+    * set is computed: the streaming feeds (st6, st27) guard their bands
+    * with it before ingest, so they keep the exact set the batch
+    * oracles replay.
     */
   private[graft] def bucketGuard(bands: DataFrame, maxBucket: Int): DataFrame =
     if (maxBucket <= 0) bands
@@ -114,6 +115,44 @@ object Dedup {
         .select("band", "band_hash")
       bands.join(big, Seq("band", "band_hash"), "left_anti")
     }
+
+  /** The band-key candidate join every pair build runs: `left` and
+    * `right` (doc, band, band_hash) rows meet on (band, band_hash), the
+    * docs renamed to `l` and `r`, kept where `rule(l, r)` holds. Emits
+    * one (l, r) row per shared band, no `distinct`: the batch builds
+    * add one, a stateless stream leaves the repeats to its fold.
+    */
+  private def bandJoin(left: DataFrame, right: DataFrame, l: String, r: String)
+                       (rule: (Column, Column) => Column): DataFrame = {
+    val a = left.select(col("band"), col("band_hash"), col("doc").as(l))
+    val b = right.select(col("band"), col("band_hash"), col("doc").as(r))
+    a.join(b, Seq("band", "band_hash"))
+      .where(rule(col(l), col(r)))
+      .select(l, r)
+  }
+
+  /** The exact Jaccard scorer every verify runs: attaches both docs'
+    * sorted sets from `sets` (doc, hs) as `hs_*` (named after the doc
+    * columns' suffix) and counts j_num = |A ∩ B| with the compiled merge
+    * kernel and j_den = |A ∪ B|.
+    */
+  private[graft] def jaccardCounts(pairs: DataFrame, sets: DataFrame,
+                                   l: String, r: String): DataFrame = {
+    val (hl, hr) = ("hs" + l.stripPrefix("doc"), "hs" + r.stripPrefix("doc"))
+    pairs
+      .join(sets.select(col("doc").as(l), col("hs").as(hl)), l)
+      .join(sets.select(col("doc").as(r), col("hs").as(hr)), r)
+      .withColumn("j_num", TextFunctions.sortedIntersectCount(col(hl), col(hr)))
+      .withColumn("j_den", (size(col(hl)) + size(col(hr))).cast("long") - col("j_num"))
+  }
+
+  /** j_num/j_den ≥ threshNum/threshDen, cross-multiplied: exact. */
+  private def jaccardAtLeast(threshNum: Int, threshDen: Int): Column =
+    col("j_num") * threshDen >= col("j_den") * threshNum
+
+  /** The Jaccard ratio of [[jaccardCounts]]' exact counts. */
+  private[graft] def jaccardRatio: Column =
+    col("j_num").cast("double") / col("j_den").cast("double")
 
   /** Distinct candidate pairs (a < b) from shared LSH band hashes. The
     * join shuffles on (band, band_hash) — collision buckets, not docs.
@@ -133,39 +172,9 @@ object Dedup {
     */
   def lshCandidatePairs(bands: DataFrame, maxBucket: Int = 0): DataFrame = {
     val kept = bucketGuard(bands, maxBucket)
-    val a = kept.select(col("band"), col("band_hash"), col("doc").as("doc_a"))
-    val b = kept.select(col("band"), col("band_hash"), col("doc").as("doc_b"))
-    a.join(b, Seq("band", "band_hash"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .distinct()
+    bandJoin(kept, kept, "doc_a", "doc_b")(_ < _).distinct()
   }
 
-  /** Connected components over an undirected pair relation (the
-    * canonical-document grouping a dedup pipeline runs AFTER near-dup
-    * pair detection: transitively linked docs form one duplicate group;
-    * the group's min id is its canonical representative).
-    *
-    * Iterative min-label propagation WITH pointer hopping: each round
-    * every node takes the min of its own label and its neighbors'
-    * labels, then shortcuts through its label's label
-    * (comp(v) ← comp(comp(v))), which halves the label-tree depth —
-    * convergence in O(log diameter) rounds, not O(diameter), so a
-    * templated corpus with a long near-dup chain converges in a
-    * handful of keyed shuffles instead of blowing the round cap.
-    * Round 21: the FIRST round is specialized to the identity labeling
-    * — labels₀(v) = v makes the generic round's sym ⋈ labels join a
-    * semantic no-op, so the seed collapses to one aggregation
-    * (least(src, min(dst))) plus a node-sized pointer-hop self-join;
-    * one sym-sized shuffle join cheaper at every scale, same fixpoint.
-    * Each later round is groupBy(node) + two keyed joins, nothing
-    * driver-side. `localCheckpoint` per round keeps the plan O(1)
-    * (persist alone grows the lineage exponentially with rounds).
-    * 100 TB shape: state is one (node, label) row per doc in the pair
-    * graph — linear, shuffled on node id.
-    *
-    * Returns (node, comp): comp = min node id of the component.
-    */
   /** Diagnostic only: rounds the most recent [[connectedComponents]]
     * call took to converge (driver-side, written after its loop) —
     * read by [[graft.ScaleSmoke]] to report convergence depth against
@@ -193,6 +202,31 @@ object Dedup {
   // hopping already minimized. What DID survive is the
   // identity-specialized first round below: strictly less work than
   // the generic round it replaces, no new passes over sym.
+  /** Connected components over an undirected pair relation (the
+    * canonical-document grouping a dedup pipeline runs AFTER near-dup
+    * pair detection: transitively linked docs form one duplicate group;
+    * the group's min id is its canonical representative).
+    *
+    * Iterative min-label propagation WITH pointer hopping: each round
+    * every node takes the min of its own label and its neighbors'
+    * labels, then shortcuts through its label's label
+    * (comp(v) ← comp(comp(v))), which halves the label-tree depth —
+    * convergence in O(log diameter) rounds, not O(diameter), so a
+    * templated corpus with a long near-dup chain converges in a
+    * handful of keyed shuffles instead of blowing the round cap.
+    * Round 21: the FIRST round is specialized to the identity labeling
+    * — labels₀(v) = v makes the generic round's sym ⋈ labels join a
+    * semantic no-op, so the seed collapses to one aggregation
+    * (least(src, min(dst))) plus a node-sized pointer-hop self-join;
+    * one sym-sized shuffle join cheaper at every scale, same fixpoint.
+    * Each later round is groupBy(node) + two keyed joins, nothing
+    * driver-side. `localCheckpoint` per round keeps the plan O(1)
+    * (persist alone grows the lineage exponentially with rounds).
+    * 100 TB shape: state is one (node, label) row per doc in the pair
+    * graph — linear, shuffled on node id.
+    *
+    * Returns (node, comp): comp = min node id of the component.
+    */
   def connectedComponents(pairs: DataFrame, a: Column, b: Column,
                           maxRounds: Int = 50): DataFrame = {
     // persist the directed edges BEFORE the symmetrizing union: its two
@@ -281,6 +315,9 @@ object Dedup {
     labels
   }
 
+  /** [[keepBestPerComponent]]'s default label-relation broadcast cap. */
+  private[graft] val KeepBestMaxBroadcastRows = 2000000L
+
   /** Duplicate-group representative selection — the "keep one" step
     * after [[connectedComponents]]: every doc in `docs` gets its
     * component label (docs absent from the pair graph are their own
@@ -314,8 +351,6 @@ object Dedup {
     * localCheckpoint-materialized — or the count recomputes its whole
     * lineage, and the join then recomputes it again.
     */
-  private[graft] val KeepBestMaxBroadcastRows = 2000000L
-
   def keepBestPerComponent(docs: DataFrame, idCol: String, scoreCol: String,
                            labels: DataFrame,
                            maxBroadcastRows: Long = KeepBestMaxBroadcastRows): DataFrame = {
@@ -357,20 +392,27 @@ object Dedup {
     // the capped bucket set must match the full build's (same pairs
     // dropped whether a doc arrives in the snapshot or the batch)
     val kept = bucketGuard(bands, maxBucket)
-    val a = kept.where(isNew(col("doc")))
-      .select(col("band"), col("band_hash"), col("doc").as("doc_n"))
-    val b = kept.select(col("band"), col("band_hash"), col("doc").as("doc_o"))
-    val cand = a.join(b, Seq("band", "band_hash"))
-      .where(col("doc_o") =!= col("doc_n") &&
-        (!isNew(col("doc_o")) || col("doc_o") < col("doc_n")))
-      .select("doc_n", "doc_o").distinct()
-    cand
-      .join(sets.select(col("doc").as("doc_n"), col("hs").as("hs_n")), "doc_n")
-      .join(sets.select(col("doc").as("doc_o"), col("hs").as("hs_o")), "doc_o")
-      .withColumn("j_num", TextFunctions.sortedIntersectCount(col("hs_n"), col("hs_o")))
-      .withColumn("j_den", (size(col("hs_n")) + size(col("hs_o"))).cast("long") - col("j_num"))
-      .where(col("j_num") * threshDen >= col("j_den") * threshNum)
+    val cand = bandJoin(kept.where(isNew(col("doc"))), kept, "doc_n", "doc_o") { (n, o) =>
+      o =!= n && (!isNew(o) || o < n)
+    }.distinct()
+    jaccardCounts(cand, sets, "doc_n", "doc_o")
+      .where(jaccardAtLeast(threshNum, threshDen))
       .select(col("doc_n"), col("doc_o"), col("j_num"), col("j_den"))
+  }
+
+  /** The stateless new × snapshot step of a streaming ingest (st27):
+    * `feed` holds new docs' guarded (doc, band, band_hash) rows and may
+    * be a stream; `snapBands` are the snapshot's guarded band rows and
+    * `sets` the (doc, hs) sets of both. Emits (doc_n, doc_o) once per
+    * shared band of every verified pair — pure joins, no state, so any
+    * batching of `feed` yields the same set of matches.
+    */
+  private[graft] def snapshotMatches(feed: DataFrame, snapBands: DataFrame, sets: DataFrame,
+                                     threshNum: Int, threshDen: Int): DataFrame = {
+    val cand = bandJoin(feed, snapBands, "doc_n", "doc_o")((_, _) => lit(true))
+    jaccardCounts(cand, sets, "doc_n", "doc_o")
+      .where(jaccardAtLeast(threshNum, threshDen))
+      .select("doc_n", "doc_o")
   }
 
   /** Verified near-duplicate pairs: LSH candidates whose exact Jaccard
@@ -381,15 +423,8 @@ object Dedup {
   def nearDupPairsFromSets(sets: DataFrame, bands: DataFrame,
                            threshNum: Int, threshDen: Int,
                            maxBucket: Int = 0): DataFrame = {
-    val cand = lshCandidatePairs(bands, maxBucket)
-    cand
-      .join(sets.select(col("doc").as("doc_a"), col("hs").as("hs_a")), "doc_a")
-      .join(sets.select(col("doc").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-      .withColumn("j_num", TextFunctions.sortedIntersectCount(col("hs_a"), col("hs_b")))
-      .withColumn("j_den", (size(col("hs_a")) + size(col("hs_b"))).cast("long") - col("j_num"))
-      .where(col("j_num") * threshDen >= col("j_den") * threshNum)
-      .select(
-        col("doc_a"), col("doc_b"), col("j_num"), col("j_den"),
-        (col("j_num").cast("double") / col("j_den").cast("double")).as("jaccard"))
+    jaccardCounts(lshCandidatePairs(bands, maxBucket), sets, "doc_a", "doc_b")
+      .where(jaccardAtLeast(threshNum, threshDen))
+      .select(col("doc_a"), col("doc_b"), col("j_num"), col("j_den"), jaccardRatio.as("jaccard"))
   }
 }

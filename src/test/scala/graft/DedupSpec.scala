@@ -190,6 +190,61 @@ class DedupSpec extends SparkSpec {
     pairs(0).exists { case (a, b) => a >= 2L && b >= 2L } shouldBe true
   }
 
+  test("Jaccard threshold is exact at the boundary: J = num/den kept, one shared shingle fewer dropped") {
+    // hand-built sets, each pair alone in its own band bucket, so the
+    // candidate join emits exactly the two pairs and only the verify
+    // decides. `at` meets the threshold exactly; `below` is `at` with one
+    // shared shingle removed from its second doc (same union, one less
+    // intersection).
+    def check(threshNum: Int, threshDen: Int, at: (Seq[Int], Seq[Int]), below: (Seq[Int], Seq[Int]),
+              counts: (Long, Long)): Unit = withClue(s"J >= $threshNum/$threshDen: ") {
+      val rows = Seq(1L -> at._1, 2L -> at._2, 3L -> below._1, 4L -> below._2)
+      val sets = Dedup.shingleSets(rows.toDF("id", "s"), col("id"), col("s"))
+      val bands = Seq((1L, 0, 11L), (2L, 0, 11L), (3L, 0, 22L), (4L, 0, 22L))
+        .toDF("doc", "band", "band_hash")
+      Dedup.nearDupPairsFromSets(sets, bands, threshNum, threshDen)
+        .select("doc_a", "doc_b", "j_num", "j_den").as[(Long, Long, Long, Long)]
+        .collect().toSet shouldBe Set((1L, 2L, counts._1, counts._2))
+      // even ids are new: the boundary pair is (new 2, existing 1)
+      Dedup.incrementalNearDupPairs(sets, bands, _ % 2 === 0, threshNum, threshDen)
+        .as[(Long, Long, Long, Long)].collect().toSet shouldBe Set((2L, 1L, counts._1, counts._2))
+    }
+    val (a6, a5) = (Seq(1, 2, 3, 4, 5, 6), Seq(1, 2, 3, 4, 5))
+    // 1/2: |A ∩ B| = 4 of |A ∪ B| = 8; below: 3 of 8
+    check(1, 2, (a6, Seq(1, 2, 3, 4, 7, 8)), (a6, Seq(1, 2, 3, 7, 8)), (4L, 8L))
+    // 2/3: 4 of 6; below: 3 of 6
+    check(2, 3, (a5, Seq(1, 2, 3, 4, 6)), (a5, Seq(1, 2, 3, 6)), (4L, 6L))
+  }
+
+  test("incrementalNearDupPairs equals the full build's pairs with a new member, under a biting cap") {
+    val base = "the quick brown fox jumps over the lazy dog and runs far away home tonight"
+    // ids 2-11: a 10-doc clone block, saturated past the cap of 5 in
+    // every band; ids 12-15: a 4-doc clone block that fits under it
+    val clones = Seq.fill(10)("copy paste boilerplate filler words repeated across many many documents here")
+    val small = Seq.fill(4)("a smaller block of identical lines that stays under the bucket cap today")
+    val df = (Seq(base, base.replace("tonight", "today")) ++ clones ++ small).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val sets = Dedup.shingleSets(df, col("doc_id"),
+      TextFunctions.shingleHashes(TextFunctions.tokens(col("text")), 3))
+    val bands = Dedup.minHashBandsFromSets(sets)
+    val isNew: org.apache.spark.sql.Column => org.apache.spark.sql.Column = _ % 5 === 0
+    val full = Dedup.nearDupPairsFromSets(sets, bands, 1, 2, maxBucket = 5)
+      .select("doc_a", "doc_b", "j_num", "j_den").as[(Long, Long, Long, Long)].collect().toSet
+    // d11's rule: the new doc is doc_n; between two new docs the later
+    // one is, matched to the earlier
+    val expected = full.collect {
+      case (a, b, n, d) if b % 5 == 0 => (b, a, n, d)
+      case (a, b, n, d) if a % 5 == 0 => (a, b, n, d)
+    }
+    val inc = Dedup.incrementalNearDupPairs(sets, bands, isNew, 1, 2, maxBucket = 5)
+      .as[(Long, Long, Long, Long)].collect().toSet
+    inc shouldBe expected
+    // the cap bit (no pair inside the 10-block) and the property is not
+    // vacuous: new x existing (0~1) and new x earlier-block pairs (15~12..14)
+    full.exists { case (a, b, _, _) => a >= 2L && b <= 11L } shouldBe false
+    inc.map(p => (p._1, p._2)) shouldBe Set((0L, 1L), (15L, 12L), (15L, 13L), (15L, 14L))
+  }
+
   test("simHash of identical docs matches; of disjoint docs differs") {
     val df = Seq("alpha beta gamma", "alpha beta gamma", "delta epsilon zeta eta").toDF("t")
       .select(TextFunctions.simHash(TextFunctions.tokens(col("t")), 16).as("h"))

@@ -107,6 +107,13 @@ class PlanAuditSpec extends SparkSpec {
       case (p, (f, t)) if p.startsWith("src/main/scala/graft/operators") &&
         t.contains("sortWithinPartitions(") => f
     } shouldBe Seq("ClusterFold.scala")
+    // one near-dup pair path: only Dedup sizes band buckets, and the
+    // text catalog runs no pair verify of its own — its two merge-kernel
+    // calls are t5's and e1's decontamination overlap
+    mainText.collect { case (f, t) if t.contains("groupBy(\"band\", \"band_hash\")") => f } shouldBe
+      Seq("Dedup.scala")
+    mainText.collect { case ("QueriesText.scala", t) => """sortedIntersectCount\(""".r.findAllIn(t).size } shouldBe
+      Seq(2)
     // launch-time spark.sql.* settings (the SparkContext's conf, which
     // no test's runtime spark.conf.set can touch)
     val launched = spark.sparkContext.getConf.getAll.toMap

@@ -847,29 +847,15 @@ class StreamingSpec extends SparkSpec {
     val shingleSet = TextFunctions.shingleHashes(TextFunctions.tokens(col("text")), 3)
     val sets = Dedup.shingleSets(docs, col("doc_id"), shingleSet)
     val bands = Dedup.minHashBandsFromSets(sets)
-    val big = bands.groupBy("band", "band_hash").agg(count(lit(1)).as("__bsz"))
-      .where(col("__bsz") > 64).select("band", "band_hash")
-    val snapB = bands.where(col("doc") % 5 =!= 0)
-      .join(big, Seq("band", "band_hash"), "left_anti")
-      .select(col("band"), col("band_hash"), col("doc").as("doc_o"))
-    val snapSets = sets.where(col("doc") % 5 =!= 0)
-      .select(col("doc").as("doc_o"), col("hs").as("hs_o"))
-    val newSets = sets.where(col("doc") % 5 === 0)
-      .select(col("doc").as("doc_n"), col("hs").as("hs_n"))
-    val feedRows = bands.where(col("doc") % 5 === 0)
-      .select(col("doc").as("doc_n"), col("band"), col("band_hash"))
+    // st27's prep: every band guarded once, then split into the static
+    // snapshot bands and the new-doc feed
+    val kept = Dedup.bucketGuard(bands, 64)
+    val snap = kept.where(col("doc") % 5 =!= 0)
+    val feedRows = kept.where(col("doc") % 5 === 0).select("doc", "band", "band_hash")
       .as[(Long, Int, Long)].collect().toSeq
     def run(chunks: Seq[Seq[(Long, Int, Long)]], sink: String): Set[(Long, Long)] = {
       val input = MemoryStream[(Long, Int, Long)]
-      val query = input.toDF().toDF("doc_n", "band", "band_hash")
-        .join(big, Seq("band", "band_hash"), "left_anti")
-        .join(snapB, Seq("band", "band_hash"))
-        .join(newSets, Seq("doc_n"))
-        .join(snapSets, Seq("doc_o"))
-        .withColumn("j_num", org.apache.spark.sql.functions.size(array_intersect(col("hs_n"), col("hs_o"))).cast("long"))
-        .withColumn("j_den", (org.apache.spark.sql.functions.size(col("hs_n")) + org.apache.spark.sql.functions.size(col("hs_o"))).cast("long") - col("j_num"))
-        .where(col("j_num") * 2 >= col("j_den") * 1)
-        .select(col("doc_n"), col("doc_o"))
+      val query = Dedup.snapshotMatches(input.toDF().toDF("doc", "band", "band_hash"), snap, sets, 1, 2)
         .writeStream.format("memory").queryName(sink).outputMode("append").start()
       try {
         chunks.foreach { c => input.addData(c); query.processAllAvailable() }
