@@ -225,6 +225,8 @@ object GreedyClustering {
   /** Scale-out variant: independent streams per key, clustered in
     * parallel — repartition by key, sort each partition by (key, order),
     * run one State per contiguous key run. Output adds the key column.
+    * The keys spread over the session's shuffle partitions even when
+    * AQE would merge a small input into one task ([[ClusterFold.keyed]]).
     */
   def clusterByKey(df: DataFrame, key: Column, id: Column, vec: Column, order: Column, p: Params): DataFrame = {
     val spark = df.sparkSession

@@ -595,6 +595,8 @@ object Grinch {
     * built in parallel partitions (key-partitioned sort, one automaton
     * per contiguous key run) — the same parallelism-across-streams story
     * as GreedyClustering.clusterByKey. Cluster ids are per-key indices.
+    * Tree builds cost per key, not per byte, so the keyed prep keeps
+    * one task per shuffle partition under AQE ([[ClusterFold.keyed]]).
     */
   def flatClusterByKey(df: DataFrame, key: Column, id: Column, vec: Column, order: Column,
                        p: Params, threshold: Double): DataFrame = {

@@ -250,10 +250,12 @@ object Sources {
 
   // ------------------------------------------------------------ S7/S8
   /** S7 — embedding TSV reader (`uid \t entity \t v0 … v_{d-1}`,
-    * `meercat/nn_thresh.py:159-174`).
+    * `meercat/nn_thresh.py:159-174`). The width comes from the first
+    * line; a line of any other width fails the read instead of being
+    * truncated or padded with nulls.
     */
   def readEmbeddingsTsv(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("sep", "\t").csv(path)
+    val raw = spark.read.option("sep", "\t").option("mode", "FAILFAST").csv(path)
     val vecCols = raw.columns.drop(2)
     raw.select(
       col(raw.columns(0)).cast("long").as("uid"),
@@ -291,11 +293,16 @@ object Sources {
 
   // ------------------------------------------------------------ S10
   /** S10 — cluster-pairs CSV sink: `true, pred` per row in stream order
-    * (`meercat/nn_thresh.py:192-194`).
+    * (`meercat/nn_thresh.py:192-194`), one file.
+    *
+    * One exchange into one partition, then a local sort: a global
+    * `orderBy` would first run a range-sampling job over `df`, which
+    * evaluates the whole upstream plan (a clustering fold) once more
+    * before the write evaluates it again.
     */
   def writeClusterPairs(df: DataFrame, trueCol: String, predCol: String,
                         order: String, path: String): Unit =
-    df.orderBy(col(order)).coalesce(1)
+    df.repartition(1).sortWithinPartitions(col(order))
       .select(concat_ws(", ", col(trueCol), col(predCol)).as("value"))
       .write.mode("overwrite").text(path)
 

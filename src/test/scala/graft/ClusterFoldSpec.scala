@@ -4,10 +4,11 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{ClusterFold, Grinch}
+import graft.operators.{ClusterFold, GreedyClustering, Grinch}
 
 /** The C8 bisection every threshold search calls
-  * (GreedyClustering.findThreshold, Grinch's tree cut, the CLI's combo).
+  * (GreedyClustering.findThreshold, Grinch's tree cut, the CLI's combo),
+  * and the keyed prep both per-key clusterers fold over.
   */
 class ClusterFoldSpec extends SparkSpec {
   import spark.implicits._
@@ -53,5 +54,35 @@ class ClusterFoldSpec extends SparkSpec {
     uncut shouldBe pairs(Grinch.flatCluster(df, col("id"), col("vec"), col("id"), p, threshold = 0.5))
     uncut.map(_._1) shouldBe (0L until 40L)
     uncut.map(_._2).foreach(_ should be >= 0L)
+  }
+
+  test("keyed folds keep their partitions under AQE and equal per-key single-stream runs") {
+    // the suite session coalesces small shuffles (AQE on, 4 partitions);
+    // a few KB of vectors must still fold its keys in parallel tasks
+    spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") shouldBe "true"
+    val rnd = new scala.util.Random(11)
+    val keys = 0L until 4L
+    val df = (for {
+      k <- keys
+      i <- 0 until 12
+    } yield (k, k * 100 + i, Array.fill(4)(rnd.nextFloat() - 0.5f))).toDF("k", "id", "vec")
+    def foldPartitions(out: org.apache.spark.sql.DataFrame): Long =
+      out.select(spark_partition_id()).distinct().count()
+
+    val gp = GreedyClustering.Params("backwards", -1, 0.1, cosine = true)
+    val greedy = GreedyClustering.clusterByKey(df, col("k"), col("id"), col("vec"), col("id"), gp)
+    foldPartitions(greedy) should be > 1L
+    greedy.as[(Long, Long, Long)].collect().toSeq.sortBy(_._2) shouldBe keys.flatMap { k =>
+      GreedyClustering.clusterSorted(df.where(col("k") === k), col("id"), col("vec"), col("id"), gp)
+        .as[(Long, Long)].collect().toSeq.map { case (id, c) => (k, id, c) }
+    }.sortBy(_._2)
+
+    val hp = Grinch.Params(sim = "dot", norm = "l2")
+    val grinch = Grinch.flatClusterByKey(df, col("k"), col("id"), col("vec"), col("id"), hp, threshold = 0.3)
+    foldPartitions(grinch) should be > 1L
+    grinch.as[(Long, Long, Long)].collect().toSeq.sortBy(_._2) shouldBe keys.flatMap { k =>
+      Grinch.flatCluster(df.where(col("k") === k), col("id"), col("vec"), col("id"), hp, threshold = 0.3)
+        .as[(Long, Long)].collect().toSeq.map { case (id, c) => (k, id, c) }
+    }.sortBy(_._2)
   }
 }

@@ -107,6 +107,11 @@ class PlanAuditSpec extends SparkSpec {
       case (p, (f, t)) if p.startsWith("src/main/scala/graft/operators") &&
         t.contains("sortWithinPartitions(") => f
     } shouldBe Seq("ClusterFold.scala")
+    // single-file writers shuffle into one partition and sort there: a
+    // global orderBy coalesced to one file runs a range-sampling job
+    // that evaluates its whole input an extra time
+    val sortedThenCoalesced = """\.orderBy\((?:[^()]|\([^()]*\))*\)\s*\.coalesce\(1\)""".r
+    mainText.collect { case (f, t) if sortedThenCoalesced.findFirstIn(t).isDefined => f } shouldBe empty
     // one near-dup pair path: only Dedup sizes band buckets, and the
     // text catalog runs no pair verify of its own — its two merge-kernel
     // calls are t5's and e1's decontamination overlap

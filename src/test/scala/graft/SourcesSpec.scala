@@ -52,6 +52,19 @@ class SourcesSpec extends SparkSpec {
     back(1)._2 shouldBe "C01"
   }
 
+  test("embedding TSV reader fails on a line of another width (S7)") {
+    // a 4-dim line after a 3-dim first line used to be truncated to 3
+    // dims, and a 2-dim line padded with a null
+    Seq("0\tC00\t0.5\t1.0\t2.0\n1\tC01\t0.5\t1.0\t2.0\t3.0\n",
+        "0\tC00\t0.5\t1.0\t2.0\n1\tC01\t0.5\t1.0\n").foreach { text =>
+      val dir = Files.createTempDirectory("graft-emb-bad")
+      Files.writeString(dir.resolve("part-0.tsv"), text)
+      withClue(text) {
+        intercept[Exception](Sources.readEmbeddingsTsv(spark, dir.toString).collect())
+      }
+    }
+  }
+
   test("vocab CSV writer prepends [PAD] and keeps descending order (S9)") {
     val dir = Files.createTempDirectory("graft-vocab").toString + "/vocab"
     val vocab = Seq(("C01", 17L), ("C00", 4L)).toDF("entity", "cnt")
@@ -67,6 +80,25 @@ class SourcesSpec extends SparkSpec {
     Sources.writeClusterPairs(df, "t", "p", "i", dir)
     val back = Sources.readClusterPairs(spark, dir).collect().map(r => (r.getString(0), r.getString(1)))
     back.toSet shouldBe Set(("a", "x"), ("b", "y"))
+  }
+
+  test("cluster-pairs writer evaluates its input once and writes one file in order (S10)") {
+    // a global sort would sample its input in a job of its own, running
+    // the upstream plan (a clustering fold) twice
+    val n = 1000
+    val evaluated = spark.sparkContext.longAccumulator("pairs-input-rows")
+    val rows = new scala.util.Random(7).shuffle((0 until n).toList)
+      .map(i => (i.toLong, s"t$i", s"p${i % 7}"))
+    val df = spark.sparkContext.parallelize(rows, 3)
+      .mapPartitions(_.map { r => evaluated.add(1); r })
+      .toDF("i", "t", "p")
+    val dir = Files.createTempDirectory("graft-pairs-once").toString + "/pairs"
+    Sources.writeClusterPairs(df, "t", "p", "i", dir)
+    evaluated.value shouldBe n.toLong
+    val parts = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+    parts.length shouldBe 1
+    Files.readAllLines(parts.head.toPath).toArray.toSeq shouldBe
+      (0 until n).map(i => s"t$i, p${i % 7}")
   }
 
   test("cluster-pairs reader fails on a line without exactly two fields (S10)") {
