@@ -162,15 +162,6 @@ object TextFunctions {
   def stopwordCount(toks: Column): Column =
     size(filter(toks, t => t.isInCollection(stopwords)))
 
-  /** Quality heuristics: token count, mean token length, stopword ratio,
-    * alphabetic ratio — the length/punct/stopword trio of standard
-    * training-data quality filters.
-    */
-  def tokenCount(toks: Column): Column = size(toks)
-
-  def meanTokenLen(toks: Column): Column =
-    aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / size(toks).cast("double")
-
   /** Language marker vocabularies for the n-gram-heuristic language-ID.
     * Deterministic token-vote: language with the most marker hits wins,
     * ties broken lexicographically; 'und' when no marker hits.
@@ -181,9 +172,6 @@ object TextFunctions {
     "es" -> Seq("el", "la", "de", "que", "es"),
     "fr" -> Seq("le", "la", "et", "les", "des"),
     "zh" -> Seq("de5", "shi4", "le5", "zai4", "he2"))
-
-  def markerHits(toks: Column, lang: String): Column =
-    size(filter(toks, t => t.isInCollection(langMarkers(lang))))
 
   def langId(toks: Column): Column =
     ExpressionUtils.column(LangIdVote(ExpressionUtils.expression(toks)))

@@ -46,14 +46,6 @@ object Projections {
     (leftKept, rightKept)
   }
 
-  /** P3 — gold-label filter (`preprocess_aida_yago2.py:89-90`). */
-  def dropUnlinked(df: DataFrame, entity: Column, sentinel: String = "--NME--"): DataFrame =
-    df.filter(entity =!= sentinel)
-
-  /** P4 — mention-validity filter (`preprocess_ecbplus.py:73-80`). */
-  def validMentions(df: DataFrame, tag: Column, mention: Column): DataFrame =
-    df.filter(!tag.contains("ACT") && !tag.contains("NEG") && length(mention) > 0)
-
   /** P5 — LaTeX-escape + context ellipsis pretty-printing
     * (`meercat/error_analysis.py:14-39`): escape specials, keep the last
     * / first `n` tokens of left/right context.

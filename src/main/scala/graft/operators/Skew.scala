@@ -15,18 +15,10 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Salted count: groupBy (key, salt) then re-aggregate by key.
-    * Deterministic salt from a row-id column (not rand() — results must
-    * be reproducible).
+  /** Salted sum over a long column (exact, associative): groupBy (key,
+    * salt) then re-aggregate by key. Deterministic salt from a row-id
+    * column (not rand() — results must be reproducible).
     */
-  def saltedCount(df: DataFrame, key: Column, rowId: Column, salts: Int): DataFrame =
-    df.withColumn("_salt", pmod(rowId.cast("long"), lit(salts)))
-      .groupBy(key.as("k"), col("_salt"))
-      .agg(count(lit(1)).as("_c"))
-      .groupBy(col("k"))
-      .agg(sum("_c").cast("long").as("cnt"))
-
-  /** Salted sum over a long column (exact, associative). */
   def saltedSum(df: DataFrame, key: Column, value: Column, rowId: Column, salts: Int): DataFrame =
     df.withColumn("_salt", pmod(rowId.cast("long"), lit(salts)))
       .groupBy(key.as("k"), col("_salt"))

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming ANN lookup — v14's sign-prefix bucketed Hamming search as
   * an INGEST-TIME operator and the catalog's stream-STATIC join shape:
@@ -69,17 +68,15 @@ object StreamingAnn {
       .select(col("qid"), col("cid"),
         expr("bit_count(qhi ^ hi) + bit_count(qlo ^ lo)").cast("long").as("hamming"))
       .as[(Long, Long, Long)]
-    cand.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (qid: Long, it: Iterator[(Long, Long, Long)], state: GroupState[Boolean]) =>
-          require(!state.exists,
-            s"ann: query $qid arrived in more than one micro-batch — its candidate " +
-              "set is complete within one batch against a static corpus, so a " +
-              "re-delivery would emit a second, conflicting top-k")
-          state.update(true)
-          it.toSeq.sortBy(t => (t._3, t._2)).take(k).zipWithIndex.map {
-            case ((_, cid, h), i) => AnnOut(qid, cid, i + 1L, h)
-          }.iterator
-      }
+    KeyedFold(cand)(_._1, Some(Ordering.by(t => (t._3, t._2)))) {
+      (qid: Long, seen: Option[Boolean], rows: Iterator[(Long, Long, Long)]) =>
+        require(seen.isEmpty,
+          s"ann: query $qid arrived in more than one micro-batch — its candidate " +
+            "set is complete within one batch against a static corpus, so a " +
+            "re-delivery would emit a second, conflicting top-k")
+        (Some(true), rows.take(k).zipWithIndex.map {
+          case ((_, cid, h), i) => AnnOut(qid, cid, i + 1L, h)
+        })
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.GreedyClustering
 import graft.operators.GreedyClustering.{Params, Snapshot}
@@ -14,7 +13,7 @@ import graft.operators.GreedyClustering.{Params, Snapshot}
   *
   * The reference's stream contract has no watermarks and no late data —
   * arrival order is exact (`meercat/baseline.py:76-83` line order), so
-  * the operator uses NoTimeout state and trusts within-batch `order`
+  * the operator is a [[KeyedFold]] that trusts within-batch `order`
   * for intra-batch sequencing. The SAME GreedyClustering.State machine
   * runs here and in the batch fold — batch/streaming parity is pinned
   * by StreamingSpec.
@@ -35,17 +34,12 @@ object StreamingClustering {
     */
   def greedyCluster(events: Dataset[MentionEvent], p: Params): Dataset[Assignment] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, batch: Iterator[MentionEvent], state: GroupState[Snapshot]) =>
-          val machine = new GreedyClustering.State(p)
-          state.getOption.foreach(machine.restore)
-          val out = batch.toSeq.sortBy(_.order).map { e =>
-            Assignment(key, e.id, machine.step(e.id, e.vec))
-          }
-          state.update(machine.snapshot)
-          out.iterator
-      }
+    KeyedFold(events)(_.key, Some(Ordering.by(_.order))) {
+      (key: Long, prior: Option[Snapshot], rows: Iterator[MentionEvent]) =>
+        val machine = new GreedyClustering.State(p)
+        prior.foreach(machine.restore)
+        val out = rows.map(e => Assignment(key, e.id, machine.step(e.id, e.vec))).toList
+        (Some(machine.snapshot), out.iterator)
+    }
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming connected components — duplicate-group assembly (d7) as an
   * INGEST-TIME operator: verified near-dup pair events fold into a keyed
@@ -110,13 +109,9 @@ object StreamingComponents {
 
   def connectedComponents(events: Dataset[EdgeEvent]): Dataset[NodeComp] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, batch: Iterator[EdgeEvent], state: GroupState[UfState]) =>
-          val (next, out) = applyBatch(state.getOption, batch.toSeq)
-          state.update(next)
-          out.iterator
-      }
+    KeyedFold(events)(_.key) { (_: Long, prior: Option[UfState], rows: Iterator[EdgeEvent]) =>
+      val (next, out) = applyBatch(prior, rows.toSeq)
+      (Some(next), out.iterator)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Arrival-order exact dedup with a DETERMINISTIC survivor — the dedup
   * stage of the streaming ingest pipeline (st26).
@@ -35,15 +34,9 @@ object StreamingDedupOrdered {
 
   def firstByOrder(events: Dataset[DocEvent]): Dataset[DocEvent] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.text)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, batch: Iterator[DocEvent], state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty
-          else {
-            state.update(true)
-            Iterator.single(batch.minBy(e => (e.order, e.id)))
-          }
-      }
+    KeyedFold(events)(_.text) { (_: String, seen: Option[Boolean], rows: Iterator[DocEvent]) =>
+      if (seen.isDefined) (None, Iterator.empty)
+      else (Some(true), Iterator.single(rows.minBy(e => (e.order, e.id))))
+    }
   }
 }

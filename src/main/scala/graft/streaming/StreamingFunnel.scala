@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming ordered-funnel — the w4 per-user step-prefix analysis as
   * an INGEST-TIME fold. Per user the state is one timestamp per step
@@ -39,25 +38,22 @@ object StreamingFunnel {
 
   def funnel(events: Dataset[FunnelEvent], nSteps: Int): Dataset[FunnelOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, batch: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
-          var cur = state.getOption.getOrElse(FunnelState(Seq.fill(nSteps)(-1L), 0L))
-          val mins = cur.mins.toArray
-          var seen = cur.nSeen
-          batch.toSeq.sortBy(e => (e.tsUs, e.step)).foreach { e =>
-            seen += 1
-            if (e.step == 0) {
-              if (mins(0) < 0 || e.tsUs < mins(0)) mins(0) = e.tsUs
-            } else if (e.step > 0 && e.step < nSteps &&
-              mins(e.step - 1) >= 0 && mins(e.step - 1) < e.tsUs) {
-              if (mins(e.step) < 0 || e.tsUs < mins(e.step)) mins(e.step) = e.tsUs
-            }
+    KeyedFold(events)(_.userId, Some(Ordering.by(e => (e.tsUs, e.step)))) {
+      (user: Long, prior: Option[FunnelState], rows: Iterator[FunnelEvent]) =>
+        val cur = prior.getOrElse(FunnelState(Seq.fill(nSteps)(-1L), 0L))
+        val mins = cur.mins.toArray
+        var seen = cur.nSeen
+        rows.foreach { e =>
+          seen += 1
+          if (e.step == 0) {
+            if (mins(0) < 0 || e.tsUs < mins(0)) mins(0) = e.tsUs
+          } else if (e.step > 0 && e.step < nSteps &&
+            mins(e.step - 1) >= 0 && mins(e.step - 1) < e.tsUs) {
+            if (mins(e.step) < 0 || e.tsUs < mins(e.step)) mins(e.step) = e.tsUs
           }
-          cur = FunnelState(mins.toSeq, seen)
-          state.update(cur)
-          Iterator.single(FunnelOut(user, seen, cur.mins))
-      }
+        }
+        val next = FunnelState(mins.toSeq, seen)
+        (Some(next), Iterator.single(FunnelOut(user, seen, next.mins)))
+    }
   }
 }

@@ -1,13 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Grinch
 
 /** Structured Streaming mode of the GRINCH tree automaton (SURVEY §2.4;
   * the C11-C17 twin of [[StreamingClustering]]): one evolving
-  * hierarchical clustering per key behind `flatMapGroupsWithState`.
+  * hierarchical clustering per key behind a [[KeyedFold]].
   *
   * State design: the automaton's node-id layout pins leaf ids to
   * [0, n) with internal ids above them (`grinch_alg.py:60-77` does the
@@ -53,16 +52,13 @@ object StreamingGrinch {
   private def replayed[O: Encoder](events: Dataset[PointEvent], p: Grinch.Params)
                                   (out: (Long, Grinch, List[(Long, Array[Float])]) => Iterator[O]): Dataset[O] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, batch: Iterator[PointEvent], state: GroupState[TreeLog]) =>
-          val prior = state.getOption.map(_.entries).getOrElse(Nil)
-          val log = prior ++ batch.toSeq.sortBy(_.order).map(e => (e.id, e.vec))
-          state.update(TreeLog(log))
+    KeyedFold(events)(_.key, Some(Ordering.by(_.order))) {
+      (key: Long, prior: Option[TreeLog], rows: Iterator[PointEvent]) =>
+        val log = prior.map(_.entries).getOrElse(Nil) ++ rows.map(e => (e.id, e.vec))
+        (Some(TreeLog(log)),
           if (log.isEmpty) Iterator.empty
-          else out(key, Grinch.buildFrom(log.map(_._2).toArray, p), log)
-      }
+          else out(key, Grinch.buildFrom(log.map(_._2).toArray, p), log))
+    }
   }
 
   /** The evolving DENDROGRAM of each key: every micro-batch re-emits

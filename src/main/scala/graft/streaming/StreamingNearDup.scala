@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming MinHash-LSH near-duplicate candidate generation — the
   * dedup pack's d2/d3 banding as an INGEST-TIME operator: documents
@@ -37,23 +36,20 @@ object StreamingNearDup {
 
   def lshCandidates(events: Dataset[BandEvent]): Dataset[CandidatePair] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (bucket: Long, batch: Iterator[BandEvent], state: GroupState[BucketDocs]) =>
-          val stored = scala.collection.mutable.LinkedHashSet.empty[Long]
-          state.getOption.foreach(s => stored ++= s.docs)
-          val out = scala.collection.mutable.ArrayBuffer.empty[CandidatePair]
-          batch.toSeq.sortBy(_.order).foreach { e =>
-            if (!stored.contains(e.docId)) {
-              stored.foreach { d =>
-                out += CandidatePair(math.min(d, e.docId), math.max(d, e.docId))
-              }
-              stored += e.docId
+    KeyedFold(events)(_.bucket, Some(Ordering.by(_.order))) {
+      (_: Long, prior: Option[BucketDocs], rows: Iterator[BandEvent]) =>
+        val stored = scala.collection.mutable.LinkedHashSet.empty[Long]
+        prior.foreach(s => stored ++= s.docs)
+        val out = scala.collection.mutable.ArrayBuffer.empty[CandidatePair]
+        rows.foreach { e =>
+          if (!stored.contains(e.docId)) {
+            stored.foreach { d =>
+              out += CandidatePair(math.min(d, e.docId), math.max(d, e.docId))
             }
+            stored += e.docId
           }
-          state.update(BucketDocs(stored.toList))
-          out.iterator
-      }
+        }
+        (Some(BucketDocs(stored.toList)), out.iterator)
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming sequence packing — p14's concat-and-chunk as an INGEST-TIME
   * operator: documents stream in and each is assigned its [tok_start,
@@ -42,31 +41,27 @@ object StreamingPacking {
   def pack(events: Dataset[PackEvent], seqLen: Int): Dataset[PackOut] = {
     require(seqLen > 0, s"seqLen=$seqLen must be positive")
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (shard: Long, batch: Iterator[PackEvent], state: GroupState[PackState]) =>
-          var cur = state.getOption.getOrElse(PackState(0L, Long.MinValue, Long.MinValue))
-          val sorted = batch.toSeq.sortBy(e => (e.h, e.docId))
-          // fail fast on a contract violation across batches: an event
-          // ordered BEFORE the last packed one would need an offset
-          // that is already assigned. STRICTLY after — an exact
-          // duplicate (same h, same docId, e.g. an at-least-once
-          // redelivery in a later micro-batch) must fail loudly too,
-          // or it would silently re-pack with a second, different
-          // [tok_start, tok_end) interval and diverge from batch p14.
-          val out = sorted.map { e =>
-            require(e.h > cur.lastH || (e.h == cur.lastH && e.docId > cur.lastId),
-              s"pack: document ${e.docId} (h=${e.h}) for shard $shard arrived at-or-before " +
-                s"(h=${cur.lastH}, id=${cur.lastId}) — the strictly-(hash, id)-ascending " +
-                "ingest contract is violated (out-of-order arrival or duplicate redelivery)")
-            val start = cur.tokEnd
-            cur = PackState(start + e.nTok, e.h, e.docId)
-            PackOut(e.docId, shard, start, cur.tokEnd,
-              start / seqLen, math.max(start, cur.tokEnd - 1) / seqLen)
-          }
-          state.update(cur)
-          out.iterator
-      }
+    KeyedFold(events)(_.shard, Some(Ordering.by(e => (e.h, e.docId)))) {
+      (shard: Long, prior: Option[PackState], rows: Iterator[PackEvent]) =>
+        var cur = prior.getOrElse(PackState(0L, Long.MinValue, Long.MinValue))
+        // fail fast on a contract violation across batches: an event
+        // ordered BEFORE the last packed one would need an offset
+        // that is already assigned. STRICTLY after — an exact
+        // duplicate (same h, same docId, e.g. an at-least-once
+        // redelivery in a later micro-batch) must fail loudly too,
+        // or it would silently re-pack with a second, different
+        // [tok_start, tok_end) interval and diverge from batch p14.
+        val out = rows.map { e =>
+          require(e.h > cur.lastH || (e.h == cur.lastH && e.docId > cur.lastId),
+            s"pack: document ${e.docId} (h=${e.h}) for shard $shard arrived at-or-before " +
+              s"(h=${cur.lastH}, id=${cur.lastId}) — the strictly-(hash, id)-ascending " +
+              "ingest contract is violated (out-of-order arrival or duplicate redelivery)")
+          val start = cur.tokEnd
+          cur = PackState(start + e.nTok, e.h, e.docId)
+          PackOut(e.docId, shard, start, cur.tokEnd,
+            start / seqLen, math.max(start, cur.tokEnd - 1) / seqLen)
+        }.toList
+        (Some(cur), out.iterator)
+    }
   }
 }

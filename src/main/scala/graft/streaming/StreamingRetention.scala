@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming cohort retention — the w5 activation/retention matrix as
   * an INGEST-TIME operator: per-user state is TWO longs (the cohort
@@ -13,10 +12,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Preconditions (the harness's contract, same as st9/st20): events
   * arrive ts-ascending, so a user's first-ever event fixes the cohort
-  * day. The bitmask bounds the tracked window at 63 offsets — ample
-  * for the 30-day retention matrices pipelines report; a longer
-  * horizon would swap the mask for a bounded sorted Seq without
-  * changing the operator shape.
+  * day, and an event dated before its user's cohort day fails the
+  * query. The bitmask bounds the tracked window at 63 offsets — ample
+  * for the 30-day retention matrices pipelines report, and an offset
+  * past it fails too rather than going uncounted (batch w5 counts every
+  * offset); a longer horizon would swap the mask for a bounded sorted
+  * Seq without changing the operator shape.
   */
 object StreamingRetention {
 
@@ -34,23 +35,23 @@ object StreamingRetention {
 
   def cohortOffsets(events: Dataset[DayEvent]): Dataset[OffsetHit] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, batch: Iterator[DayEvent], state: GroupState[UserDays]) =>
-          val evs = batch.toArray
-          val st0 = state.getOption.getOrElse(UserDays(evs.iterator.map(_.day).min, 0L))
-          var mask = st0.mask
-          val fresh = Array.newBuilder[OffsetHit]
-          evs.foreach { e =>
-            val off = e.day - st0.cohortDay
-            if (off >= 0 && off < 63) {
-              val bit = 1L << off
-              if ((mask & bit) == 0L) { mask |= bit; fresh += OffsetHit(st0.cohortDay, off) }
-            }
-          }
-          state.update(UserDays(st0.cohortDay, mask))
-          fresh.result().iterator
+    KeyedFold(events)(_.userId) { (user: Long, prior: Option[UserDays], rows: Iterator[DayEvent]) =>
+      val evs = rows.toArray
+      val st0 = prior.getOrElse(UserDays(evs.iterator.map(_.day).min, 0L))
+      var mask = st0.mask
+      val fresh = Array.newBuilder[OffsetHit]
+      evs.foreach { e =>
+        val off = e.day - st0.cohortDay
+        require(off >= 0,
+          s"cohortOffsets: day ${e.day} for user $user precedes its cohort day ${st0.cohortDay} " +
+            "— the ts-ascending ingest contract is violated")
+        require(off < 63,
+          s"cohortOffsets: day ${e.day} for user $user is $off days past its cohort day " +
+            s"${st0.cohortDay} — beyond the 63-offset bitmask")
+        val bit = 1L << off
+        if ((mask & bit) == 0L) { mask |= bit; fresh += OffsetHit(st0.cohortDay, off) }
       }
+      (Some(UserDays(st0.cohortDay, mask)), fresh.result().iterator)
+    }
   }
 }

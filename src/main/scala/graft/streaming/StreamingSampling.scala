@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming deterministic reservoir — the p12 bottom-k uniform sample
   * as an INGEST-TIME operator: keyed state is exactly the current k
@@ -38,15 +37,12 @@ object StreamingSampling {
 
   def bottomK(events: Dataset[SampleEvent], k: Int): Dataset[SampleSnapshot] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, batch: Iterator[SampleEvent], state: GroupState[Reservoir]) =>
-          val prev = state.getOption.map(r => r.hs.zip(r.ids)).getOrElse(Seq.empty)
-          val merged = (prev ++ batch.map(e => (e.h, e.id))).sorted.take(k)
-          val step = state.getOption.map(_.step).getOrElse(0L) + 1
-          state.update(Reservoir(merged.map(_._1), merged.map(_._2), step))
-          merged.iterator.map { case (_, id) => SampleSnapshot(step, id) }
-      }
+    KeyedFold(events)(_.key) { (_: String, prior: Option[Reservoir], rows: Iterator[SampleEvent]) =>
+      val prev = prior.map(r => r.hs.zip(r.ids)).getOrElse(Seq.empty)
+      val merged = (prev ++ rows.map(e => (e.h, e.id))).sorted.take(k)
+      val step = prior.map(_.step).getOrElse(0L) + 1
+      (Some(Reservoir(merged.map(_._1), merged.map(_._2), step)),
+        merged.iterator.map { case (_, id) => SampleSnapshot(step, id) })
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming sessionization — the w2 gap-based session assignment as an
   * INGEST-TIME operator. Session ids are PREFIX-STABLE: an event's id is
@@ -13,7 +12,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Keyed state per user is two longs (last event time, current session
   * index) — constant size, unlike the batch window which must sort the
   * partition. Events must arrive in (ts, event_id) order per user, the
-  * same contract the batch window's ORDER BY encodes.
+  * same contract the batch window's ORDER BY encodes; an event earlier
+  * than its user's stored last event time fails the query.
   */
 object StreamingSessions {
 
@@ -30,20 +30,21 @@ object StreamingSessions {
 
   def sessionize(events: Dataset[SessionEvent], gapNs: Long): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, batch: Iterator[SessionEvent], state: GroupState[SessionState]) =>
-          var cur = state.getOption.getOrElse(SessionState(Long.MinValue, -1L))
-          val out = batch.toSeq.sortBy(e => (e.ts, e.eventId)).map { e =>
-            if (cur.sessionIdx < 0 || e.ts - cur.lastTs > gapNs)
-              cur = SessionState(e.ts, cur.sessionIdx + 1)
-            else
-              cur = SessionState(e.ts, cur.sessionIdx)
-            SessionOut(e.eventId, user, cur.sessionIdx)
-          }
-          state.update(cur)
-          out.iterator
-      }
+    KeyedFold(events)(_.userId, Some(Ordering.by(e => (e.ts, e.eventId)))) {
+      (user: Long, prior: Option[SessionState], rows: Iterator[SessionEvent]) =>
+        var cur = prior.getOrElse(SessionState(Long.MinValue, -1L))
+        val out = rows.map { e =>
+          // rows are ts-sorted, so only a batch's first row can fail this
+          require(e.ts >= cur.lastTs,
+            s"sessionize: ts ${e.ts} for user $user arrived after ts ${cur.lastTs} " +
+              "— the ts-ascending ingest contract is violated")
+          if (cur.sessionIdx < 0 || e.ts - cur.lastTs > gapNs)
+            cur = SessionState(e.ts, cur.sessionIdx + 1)
+          else
+            cur = SessionState(e.ts, cur.sessionIdx)
+          SessionOut(e.eventId, user, cur.sessionIdx)
+        }.toList
+        (Some(cur), out.iterator)
+    }
   }
 }

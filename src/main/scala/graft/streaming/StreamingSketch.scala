@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming deterministic HyperLogLog — the k2 sketch as an
   * INGEST-TIME operator: per-key state is exactly the 64 registers
@@ -60,46 +59,37 @@ object StreamingSketch {
     */
   def runningCounts(events: Dataset[IncEvent]): Dataset[CellSnapshot] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.cell)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (cell: Long, batch: Iterator[IncEvent], state: GroupState[CellCount]) =>
-          val prev = state.getOption.map(_.count).getOrElse(0L)
-          val n = prev + batch.size
-          val step = state.getOption.map(_.step).getOrElse(0L) + 1
-          state.update(CellCount(n, step))
-          Iterator(CellSnapshot(step, cell, n))
-      }
+    KeyedFold(events)(_.cell) { (cell: Long, prior: Option[CellCount], rows: Iterator[IncEvent]) =>
+      val n = prior.map(_.count).getOrElse(0L) + rows.size
+      val step = prior.map(_.step).getOrElse(0L) + 1
+      (Some(CellCount(n, step)), Iterator(CellSnapshot(step, cell, n)))
+    }
   }
 
   def hllDistinct(events: Dataset[HashEvent], m: Int = 64): Dataset[Estimate] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[HashEvent], state: GroupState[Registers]) =>
-          val regs = state.getOption.map(_.regs.toArray).getOrElse(Array.fill(m)(0L))
-          batch.foreach { e =>
-            // floorMod: hv is non-negative by the feed's mod-P contract,
-            // but a stray negative hash must not index regs out of bounds
-            val b = java.lang.Math.floorMod(e.hv, m.toLong).toInt
-            val v = e.hv / m
-            // = the batch side's 25 - length(bin(v)) (bin has no leading zeros)
-            val rho = if (v > 0) 25L - (64 - java.lang.Long.numberOfLeadingZeros(v)) else 25L
-            if (rho > regs(b)) regs(b) = rho
-          }
-          val step = state.getOption.map(_.step).getOrElse(0L) + 1
-          state.update(Registers(regs.toSeq, step))
-          // bucket-order fold of exact powers of two — same order as the
-          // batch aggregate over the bucket-sorted register array
-          val sInv = regs.foldLeft(0.0)((acc, r) => acc + math.pow(2.0, -r.toDouble))
-          val raw = 0.709 * (m * m).toDouble / sInv
-          val zeroes = regs.count(_ == 0L)
-          val est =
-            if (raw <= 2.5 * m && zeroes > 0) m.toDouble * math.log(m.toDouble / zeroes)
-            else raw
-          Iterator(Estimate(step, key, est))
+    KeyedFold(events)(_.key) { (key: String, prior: Option[Registers], rows: Iterator[HashEvent]) =>
+      val regs = prior.map(_.regs.toArray).getOrElse(Array.fill(m)(0L))
+      rows.foreach { e =>
+        // floorMod: hv is non-negative by the feed's mod-P contract,
+        // but a stray negative hash must not index regs out of bounds
+        val b = java.lang.Math.floorMod(e.hv, m.toLong).toInt
+        val v = e.hv / m
+        // = the batch side's 25 - length(bin(v)) (bin has no leading zeros)
+        val rho = if (v > 0) 25L - (64 - java.lang.Long.numberOfLeadingZeros(v)) else 25L
+        if (rho > regs(b)) regs(b) = rho
       }
+      val step = prior.map(_.step).getOrElse(0L) + 1
+      // bucket-order fold of exact powers of two — same order as the
+      // batch aggregate over the bucket-sorted register array
+      val sInv = regs.foldLeft(0.0)((acc, r) => acc + math.pow(2.0, -r.toDouble))
+      val raw = 0.709 * (m * m).toDouble / sInv
+      val zeroes = regs.count(_ == 0L)
+      val est =
+        if (raw <= 2.5 * m && zeroes > 0) m.toDouble * math.log(m.toDouble / zeroes)
+        else raw
+      (Some(Registers(regs.toSeq, step)), Iterator(Estimate(step, key, est)))
+    }
   }
 
   /** One observation for the sliding-window sketch (w6's streaming
@@ -124,29 +114,24 @@ object StreamingSketch {
     */
   def dailyRegisters(events: Dataset[DayRhoEvent]): Dataset[DayRegOut] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (bucket: Long, batch: Iterator[DayRhoEvent], state: GroupState[DayReg]) =>
-          var cur = state.getOption.getOrElse(DayReg(Long.MinValue, 0L))
-          val perDay = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
-          val sorted = batch.toSeq.sortBy(_.day)
-          // fail fast on a day regression across batches: silently
+    KeyedFold(events)(_.bucket, Some(Ordering.by(_.day))) {
+      (bucket: Long, prior: Option[DayReg], rows: Iterator[DayRhoEvent]) =>
+        var cur = prior.getOrElse(DayReg(Long.MinValue, 0L))
+        val perDay = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
+        rows.foreach { e =>
+          // fail fast on a day regression across batches (rows are
+          // day-sorted, so only a batch's first row can fail): silently
           // max-merging a late old-day rho into the NEWER day's register
           // would inflate that day's estimate and drop the old day's —
           // the ingest contract (day-ascending) must hold loudly
-          sorted.headOption.foreach { e =>
-            require(e.day >= cur.day,
-              s"dailyRegisters: day ${e.day} for bucket $bucket arrived after day ${cur.day} " +
-                "— the day-ascending ingest contract is violated")
-          }
-          sorted.foreach { e =>
-            if (e.day > cur.day) cur = DayReg(e.day, e.rho)
-            else cur = DayReg(cur.day, math.max(cur.reg, e.rho))
-            perDay.update(cur.day, cur.reg)
-          }
-          state.update(cur)
-          perDay.iterator.map { case (d, r) => DayRegOut(d, bucket, r) }
-      }
+          require(e.day >= cur.day,
+            s"dailyRegisters: day ${e.day} for bucket $bucket arrived after day ${cur.day} " +
+              "— the day-ascending ingest contract is violated")
+          if (e.day > cur.day) cur = DayReg(e.day, e.rho)
+          else cur = DayReg(cur.day, math.max(cur.reg, e.rho))
+          perDay.update(cur.day, cur.reg)
+        }
+        (Some(cur), perDay.iterator.map { case (d, r) => DayRegOut(d, bucket, r) })
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming twin of `Relational.dictEncode` — the reference's dynamic
   * entity vocabulary (`meercat/utils.py:46-51`): `EntityTokenizer`
@@ -39,18 +38,15 @@ object StreamingVocab {
     */
   def dictEncode(events: Dataset[TokenEvent]): Dataset[Encoded] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, batch: Iterator[TokenEvent], state: GroupState[VocabState]) =>
-          val codes = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-          state.getOption.foreach(s => codes ++= s.codes)
-          val out = batch.toSeq.sortBy(_.order).map { e =>
-            val code = codes.getOrElseUpdate(e.entity, codes.size.toLong)
-            Encoded(key, e.order, e.entity, code)
-          }
-          state.update(VocabState(codes.toMap))
-          out.iterator
-      }
+    KeyedFold(events)(_.key, Some(Ordering.by(_.order))) {
+      (key: Long, prior: Option[VocabState], rows: Iterator[TokenEvent]) =>
+        val codes = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+        prior.foreach(s => codes ++= s.codes)
+        val out = rows.map { e =>
+          val code = codes.getOrElseUpdate(e.entity, codes.size.toLong)
+          Encoded(key, e.order, e.entity, code)
+        }.toList
+        (Some(VocabState(codes.toMap)), out.iterator)
+    }
   }
 }

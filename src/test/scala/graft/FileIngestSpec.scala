@@ -2,10 +2,11 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{Dataset, Encoder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryException}
+import org.apache.spark.sql.streaming.StreamingQueryException
 
-import graft.streaming.StreamingPacking
+import graft.streaming.{KeyedFold, StreamingPacking}
 import graft.streaming.StreamingPacking.PackEvent
 
 /** Contracts of the file-source ingest harness every driver st query
@@ -16,6 +17,16 @@ import graft.streaming.StreamingPacking.PackEvent
   */
 class FileIngestSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Tags each row with the count of micro-batches its key has been
+    * seen in so far: 1 in the key's first batch, 2 in its second, …
+    */
+  private def withBatchStep[T, O: Encoder](ds: Dataset[T])(key: T => Long)
+                                          (tag: (T, Long) => O): Dataset[O] =
+    KeyedFold(ds)(key) { (_: Long, prior: Option[Long], rows: Iterator[T]) =>
+      val step = prior.getOrElse(0L) + 1
+      (Some(step), rows.map(tag(_, step)))
+    }
 
   test("rangeChunks: a partition of the input — no loss, no duplication, ascending, equal keys never split") {
     val df = (1L to 100L).map(i => (i, i % 7)).toDF("id", "k")
@@ -42,13 +53,7 @@ class FileIngestSpec extends SparkSpec {
     val chunks = (0 until 3).map(i =>
       base.where(col("id") >= i * 10 && col("id") < (i + 1) * 10))
     QueriesStreaming.fileIngest(spark, chunks) { stream =>
-      stream.as[(Long, Long)].groupByKey(_._1)
-        .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-          (_: Long, it: Iterator[(Long, Long)], st: GroupState[Long]) =>
-            val step = st.getOption.getOrElse(0L) + 1
-            st.update(step)
-            it.map(e => (step, e._2))
-        }
+      withBatchStep(stream.as[(Long, Long)])(_._1)((e, step) => (step, e._2))
         .toDF("step", "id")
         .writeStream.format("memory").queryName("fi_sink").outputMode("append").start()
     }
@@ -111,26 +116,14 @@ class FileIngestSpec extends SparkSpec {
     try {
       val mid = java.nio.file.Files.createDirectory(topic.resolve("mid"))
       QueriesStreaming.fileIngest(spark, Seq(chunks), Nil) { case Seq(in) =>
-        val qA = in.as[(Long, Long)].groupByKey(_._1)
-          .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-            (_: Long, it: Iterator[(Long, Long)], st: GroupState[Long]) =>
-              val step = st.getOption.getOrElse(0L) + 1
-              st.update(step)
-              it.map(e => (e._1, e._2, step))
-          }
+        val qA = withBatchStep(in.as[(Long, Long)])(_._1)((e, step) => (e._1, e._2, step))
           .toDF("k", "id", "stepA")
           .writeStream.format("parquet")
           .option("path", mid.toString)
           .option("checkpointLocation", topic.resolve("ck").toString)
           .outputMode("append").start()
-        val qB = spark.readStream.schema("k LONG, id LONG, stepA LONG").parquet(mid.toString)
-          .as[(Long, Long, Long)].groupByKey(_._1)
-          .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-            (_: Long, it: Iterator[(Long, Long, Long)], st: GroupState[Long]) =>
-              val step = st.getOption.getOrElse(0L) + 1
-              st.update(step)
-              it.map(e => (e._2, e._3, step))
-          }
+        val qB = withBatchStep(spark.readStream.schema("k LONG, id LONG, stepA LONG")
+          .parquet(mid.toString).as[(Long, Long, Long)])(_._1)((e, step) => (e._2, e._3, step))
           .toDF("id", "stepA", "stepB")
           .writeStream.format("memory").queryName("fi_chain_sink").outputMode("append").start()
         Seq(qA, qB)

@@ -107,6 +107,13 @@ class PlanAuditSpec extends SparkSpec {
       case (p, (f, t)) if p.startsWith("src/main/scala/graft/operators") &&
         t.contains("sortWithinPartitions(") => f
     } shouldBe Seq("ClusterFold.scala")
+    // and the stateful streaming operators keep their keyed state in
+    // one fold: no other main source touches group state
+    val groupStateImport = """import org\.apache\.spark\.sql\.streaming\.[^\n]*\bGroupState\b""".r
+    mainText.collect {
+      case (f, t) if t.contains("flatMapGroupsWithState(") ||
+        groupStateImport.findFirstIn(t).isDefined => f
+    } shouldBe Seq("KeyedFold.scala")
     // single-file writers shuffle into one partition and sort there: a
     // global orderBy coalesced to one file runs a range-sampling job
     // that evaluates its whole input an extra time

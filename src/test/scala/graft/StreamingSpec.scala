@@ -385,6 +385,24 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("streaming sessionization: an event before the user's stored last ts fails loudly") {
+    import graft.streaming.StreamingSessions
+    import graft.streaming.StreamingSessions.SessionEvent
+    implicit val sqlCtx = spark.sqlContext
+    // a late event would otherwise join the current session silently
+    val input = MemoryStream[SessionEvent]
+    val query = StreamingSessions.sessionize(input.toDS(), gapNs = 100L)
+      .writeStream.format("memory").queryName("sess_bad").outputMode("append").start()
+    try {
+      input.addData(SessionEvent(1L, 1L, 1000L)); query.processAllAvailable()
+      input.addData(SessionEvent(1L, 2L, 999L)) // ts went backwards
+      val thrown = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        query.processAllAvailable()
+      }
+      thrown.getMessage should include("ts-ascending ingest contract is violated")
+    } finally query.stop()
+  }
+
   test("streaming HLL: final sketch is independent of micro-batch boundaries") {
     import graft.streaming.StreamingSketch
     import graft.streaming.StreamingSketch.HashEvent
@@ -515,6 +533,28 @@ class StreamingSpec extends SparkSpec {
     val expected = evts.map(e => (e.userId, e.day)).distinct.size.toLong
     nOne shouldBe expected
     nMany shouldBe expected
+  }
+
+  test("streaming retention: an offset before the cohort day or past the bitmask fails loudly") {
+    import graft.streaming.StreamingRetention
+    import graft.streaming.StreamingRetention.DayEvent
+    implicit val sqlCtx = spark.sqlContext
+    // batch w5 counts every offset, so a dropped one would silently
+    // disagree with the oracle
+    def failure(sink: String, batches: Seq[DayEvent]*): String = {
+      val input = MemoryStream[DayEvent]
+      val query = StreamingRetention.cohortOffsets(input.toDS())
+        .writeStream.format("memory").queryName(sink).outputMode("append").start()
+      try intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        batches.foreach { b => input.addData(b); query.processAllAvailable() }
+      }.getMessage
+      finally query.stop()
+    }
+    // user 1's cohort is day 10; a later batch dated day 9 went backwards
+    failure("ret_early", Seq(DayEvent(1L, 10L)), Seq(DayEvent(1L, 9L))) should
+      include("ts-ascending ingest contract is violated")
+    // offset 63 does not fit the bitmask
+    failure("ret_late", Seq(DayEvent(2L, 0L), DayEvent(2L, 63L))) should include("63-offset bitmask")
   }
 
   test("streaming counters: exact, batching-independent, emission bounded by touched cells") {
