@@ -241,13 +241,10 @@ object QueriesVector {
        |ORDER BY vec_id, idx""".stripMargin
 
   // ---------------------------------------------------------------- v6
-  // IVF-style ANN (KMeans coarse quantizer) — RETIRED from the driver
-  // catalog: the spark.ml float fit can never be SQL-reproduced, so as
-  // a `queries` entry it could only ever be a rows-only demo. The
-  // operator itself ([[Similarity.ivfTopK]]) stays, pinned by
-  // VectorSpec's seeded-determinism + recall@k-vs-exact spec; v9 is
-  // the production twin (same shuffle shape, integer build, full
-  // hash-checked oracle).
+  // IVF-style ANN (spark.ml KMeans coarse quantizer) — RETIRED: a float
+  // k-means fit can never be SQL-reproduced, so it could only ever be a
+  // rows-only demo, and the operator is gone. v9/v11 are the IVF rows
+  // (same shuffle shape, integer build, full hash-checked oracle).
 
   // ---------------------------------------------------------------- v9
   // Deterministic INTEGER IVF ANN: one global int8 scale, centroid init

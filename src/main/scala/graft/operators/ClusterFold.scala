@@ -32,18 +32,16 @@ object ClusterFold {
     * `_4` = order, hash-partitioned by key and sorted by (key, order),
     * so each key is one contiguous run of its partition ([[keyRuns]]).
     *
-    * The exchange names its partition count (the session's
-    * `spark.sql.shuffle.partitions`, read at call time): AQE may coalesce
-    * a column-only repartition by bytes, and a few hundred KB of vectors
-    * then folds every key one after another in one task. A fold costs
-    * per key, not per byte.
+    * The exchange names its partition count ([[Fanout.byKey]]): AQE may
+    * coalesce a column-only repartition by bytes, and a few hundred KB of
+    * vectors then folds every key one after another in one task. A fold
+    * costs per key, not per byte.
     */
   def keyed[T: Encoder](df: DataFrame, key: Column, id: Column, vec: Column,
-                        order: Column): Dataset[T] = {
-    val partitions = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    tupled(df, Seq(key.cast("long"), id.cast("long"), vec.cast("array<float>"), order.cast("long")))
-      .repartition(partitions, col("_1")).sortWithinPartitions(col("_1"), col("_4")).as[T]
-  }
+                        order: Column): Dataset[T] =
+    Fanout.byKey(
+      tupled(df, Seq(key.cast("long"), id.cast("long"), vec.cast("array<float>"), order.cast("long"))),
+      col("_1")).sortWithinPartitions(col("_1"), col("_4")).as[T]
 
   private def tupled(df: DataFrame, cols: Seq[Column]): DataFrame =
     df.select(cols.zipWithIndex.map { case (c, i) => c.as(s"_${i + 1}") }: _*)

@@ -62,6 +62,7 @@ object Dedup {
     // element, and t7's explode coerces in its pmod arithmetic —
     // every emitted value is bit-identical to the long form.
     df.select(id.as("doc"), array_sort(shingleSet).cast(IntSet).as("hs"))
+      // column-only on purpose: it feeds a persist, whose output partitioning AQE keeps by default
       .repartition(col("doc"))
       // The set relation feeds the signature branch AND both sides of
       // the verify join: persist it (dimension-sized: id + ~30 longs per

@@ -31,8 +31,8 @@ object Similarity {
     * (fixed 2^p buckets ⇒ occupancy ∝ n ⇒ candidate pairs ∝ n²), so
     * since round 15 no silent fallback routes to a fixed-width tier —
     * those remain available only as EXPLICIT routes/operators
-    * ([[HammingRoute.Bucketed]], [[rhpTopKForQueries]], [[rhpAnnTopK]])
-    * whose bounded-corpus oracles pin them.
+    * ([[HammingRoute.Bucketed]], [[rhpAnnTopK]]) whose bounded-corpus
+    * oracles pin them.
     */
   val AutoTables: Int = 8
   val AutoOccupancy: Int = 32
@@ -237,24 +237,93 @@ object Similarity {
   private def cosOf(va: Column, vb: Column, na: Column, nb: Column): Column =
     VectorFunctions.dotProduct(va, vb) / (na * nb)
 
+  /** Every top-k route checks its cut before it runs a job: a cut at
+    * rank <= 0 would return an empty frame without a word.
+    */
+  private def requirePositive(name: String, k: Int): Unit =
+    require(k > 0, s"$name=$k must be positive")
+
+  /** Each query's candidates (qid, cid, score, …) numbered 1, 2, … by
+    * `score`, ties to the smaller cid, in a `rank` column: the one
+    * per-query rank window, over candidate rows only.
+    */
+  private def rankPerQuery(cand: DataFrame, score: String, ascending: Boolean): DataFrame = {
+    val order = if (ascending) col(score).asc else col(score).desc
+    cand.withColumn("rank",
+      row_number().over(Window.partitionBy(col("qid")).orderBy(order, col("cid"))))
+  }
+
+  /** The cut every ANN route ends with: each query's `k` best candidates
+    * by [[rankPerQuery]], as (query_id, neighbor_id, rank: long, score).
+    * Callers project candidates to narrow scalars first, so the sort
+    * never moves vectors.
+    */
+  private def topKPerQuery(cand: DataFrame, score: String, ascending: Boolean,
+                           k: Int): DataFrame =
+    rankPerQuery(cand, score, ascending).where(col("rank") <= k)
+      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
+        col("rank").cast("long").as("rank"), col(score))
+
+  /** The exact tiers' pair scan ([[cosineTopK]], [[binaryHammingTopK]]):
+    * every (query, corpus) pair but self-pairs. The scan side (keyed by
+    * `cid`) gets a counted fan-out first ([[Fanout.byKey]]):
+    * BroadcastNestedLoopJoin keeps the scan side's partitioning, so a
+    * corpus that arrives as one split, or whose exchange AQE coalesces
+    * by bytes, would put the whole pair relation and its top-k sort in
+    * one task. The query side is broadcast; callers bound it by absolute
+    * row count ([[Broadcasts]]).
+    */
+  private def bruteScan(scan: DataFrame, queries: DataFrame): DataFrame =
+    Fanout.byKey(scan, col("cid")).join(broadcast(queries), col("qid") =!= col("cid"))
+
+  /** RHP-LSH candidates (qid, cid, sim) over `nTables` independent
+    * hyperplane sets, table t seeded `seed + t·7919`: a pair is a
+    * candidate when both sides share a bucket in ANY table. Each side is
+    * one scan whose L signatures are an array + posexplode to (tbl,
+    * bucket); the join shuffles on (tbl, bucket), linear in bucket
+    * occupancy. The cosine runs before the dedupe, so its exchange
+    * carries (qid, cid, sim) scalars; per-table sims are bit-identical
+    * (same strict fold), so max() only collapses copies. At L = 1 a
+    * pair joins once and there is no dedupe.
+    */
+  private def rhpCandidates(corpus: DataFrame, queries: DataFrame, id: Column, vec: Column,
+                            nBits: Int, dim: Int, nTables: Int, seed: Long): DataFrame = {
+    require(nTables >= 1, s"nTables=$nTables must be positive")
+    def side(df: DataFrame, key: String, v: String, nrm: String): DataFrame =
+      df.select(id.as(key), vec.as(v))
+        .withColumn(nrm, VectorFunctions.l2Norm(col(v)))
+        .select(col(key), col(v), col(nrm),
+          posexplode(array((0 until nTables).map { t =>
+            VectorFunctions.rhpSignature(col(v), nBits, dim, seed + t * 7919L)
+          }: _*)).as(Seq("tbl", "bucket")))
+    val cand = side(queries, "qid", "qvec", "qnrm")
+      .join(side(corpus, "cid", "cvec", "cnrm"), Seq("tbl", "bucket"))
+      .where(col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"),
+        cosOf(col("qvec"), col("cvec"), col("qnrm"), col("cnrm")).as("sim"))
+    if (nTables > 1) cand.groupBy(col("qid"), col("cid")).agg(max(col("sim")).as("sim"))
+    else cand
+  }
+
   /** Brute-force exact top-k cosine neighbors of each query row against
-    * the whole corpus (self-pairs excluded). The query side is
-    * broadcast, so it is capped by ABSOLUTE row count, never a corpus
-    * fraction — a proportional subset ("2% of the corpus") scales with
-    * the data and is a guaranteed executor OOM at 100×. Past
-    * `maxBroadcastRows` the operator routes to the OCCUPANCY-TARGETED
-    * auto-width multi-table RHP-LSH join ([[rhpTopKForQueriesAuto]]):
-    * approximate (LSH recall), but linear at any corpus size and
-    * broadcast-free — never the fixed-width tier
-    * ([[rhpTopKForQueries]]), whose fixed 2^nBits bucket cardinality
-    * is quadratic in the corpus (SCALE_100X_r14). `dim`/`seed`/
-    * `nTables`/`targetOccupancy` configure only that fallback.
+    * the whole corpus (self-pairs excluded, [[bruteScan]]). The query
+    * side is broadcast, so it is capped by ABSOLUTE row count, never a
+    * corpus fraction — a proportional subset ("2% of the corpus")
+    * scales with the data and is a guaranteed executor OOM at 100×.
+    * Past `maxBroadcastRows` the operator routes to the
+    * OCCUPANCY-TARGETED auto-width multi-table RHP-LSH join
+    * ([[rhpTopKForQueriesAuto]]): approximate (LSH recall), but linear
+    * at any corpus size and broadcast-free — never a fixed-width tier,
+    * whose fixed 2^nBits bucket cardinality is quadratic in the corpus
+    * (SCALE_100X_r14). `dim`/`seed`/`nTables`/`targetOccupancy`
+    * configure only that fallback.
     */
   def cosineTopK(corpus: DataFrame, queries: DataFrame, id: Column, vec: Column, k: Int,
                  maxBroadcastRows: Long = Broadcasts.MaxRows, dim: Int = 64,
                  seed: Long = 42L, nTables: Int = AutoTables,
                  targetOccupancy: Int = AutoOccupancy,
                  exactOnly: Boolean = false): DataFrame = {
+    requirePositive("k", k)
     val cap = Broadcasts.cap(maxBroadcastRows)
     val over = Broadcasts.boundedCount(queries, cap) > cap
     // exactOnly callers (recall-truth computation) must never receive
@@ -275,80 +344,33 @@ object Similarity {
         nTables, targetOccupancy)
     }
     log.info(s"cosineTopK: query side within broadcast cap $cap — exact broadcast path")
-    // repartition the SCAN side first: a corpus that arrives as one
-    // parquet split would otherwise put the whole corpus×queries
-    // candidate relation — and its top-k partial sort — in ONE task
-    // (BroadcastNestedLoopJoin preserves the probe side's
-    // partitioning). One corpus-sized hash shuffle is trivial next to
-    // the pair volume it parallelizes.
     val c = corpus.select(id.as("cid"), vec.as("cvec"))
       .withColumn("cnrm", VectorFunctions.l2Norm(col("cvec")))
-      .repartition(col("cid"))
     val q = queries.select(id.as("qid"), vec.as("qvec"))
       .withColumn("qnrm", VectorFunctions.l2Norm(col("qvec")))
-    // project to (qid, cid, sim) BEFORE the window so the top-k sort
-    // moves 3 narrow columns, never the two 64-float vectors
-    val sims = c.join(broadcast(q), col("cid") =!= col("qid"))
-      .select(col("qid"), col("cid"),
-        cosOf(col("qvec"), col("cvec"), col("qnrm"), col("cnrm")).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("sim"))
-  }
-
-  /** Query-subset-vs-corpus RHP-LSH top-k at an EXPLICIT fixed width:
-    * both sides bucket on the same hyperplane signature and join on
-    * the bucket key. Shuffles on bucket occupancy, no broadcast;
-    * misses cross-bucket neighbors (standard LSH recall trade, same as
-    * [[rhpAnnTopK]]). Bounded-corpus tier only — the fixed 2^nBits
-    * bucket cardinality is quadratic in the corpus (SCALE_100X_r14);
-    * since round 15 [[cosineTopK]]'s over-cap fallback routes to
-    * [[rhpTopKForQueriesAuto]] instead.
-    */
-  def rhpTopKForQueries(corpus: DataFrame, queries: DataFrame, id: Column, vec: Column,
-                        nBits: Int, dim: Int, k: Int, seed: Long = 42L): DataFrame = {
-    val c = corpus.select(id.as("cid"), vec.as("cvec"))
-      .withColumn("cnrm", VectorFunctions.l2Norm(col("cvec")))
-      .withColumn("bucket", VectorFunctions.rhpSignature(col("cvec"), nBits, dim, seed))
-    val q = queries.select(id.as("qid"), vec.as("qvec"))
-      .withColumn("qnrm", VectorFunctions.l2Norm(col("qvec")))
-      .withColumn("bucket", VectorFunctions.rhpSignature(col("qvec"), nBits, dim, seed))
-    val cand = q.join(c, Seq("bucket")).where(col("qid") =!= col("cid"))
-      .withColumn("sim", cosOf(col("qvec"), col("cvec"), col("qnrm"), col("cnrm")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    cand.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("sim"))
+    topKPerQuery(bruteScan(c, q).select(col("qid"), col("cid"),
+      cosOf(col("qvec"), col("cvec"), col("qnrm"), col("cnrm")).as("sim")),
+      "sim", ascending = false, k)
   }
 
   /** The 100×-safe unbounded-query-side route of [[cosineTopK]] — the
     * cosine-family twin of v14d's occupancy-targeted auto width
     * ([[binaryHammingTopKMultiTable]] with `targetOccupancy`): the RHP
     * signature width is derived from ONE bounded scalar count of the
-    * corpus (p = min(32, max(4, ceilLog2(ceil(n/targetOccupancy)))),
-    * integer arithmetic so the DuckDB oracle replays the derivation
-    * verbatim), holding expected bucket occupancy ≈ targetOccupancy at
-    * every corpus size — candidates grow LINEARLY (n · L · occupancy),
-    * never quadratically as with any fixed width (SCALE_100X_r14:
-    * fixed 2^8 RHP buckets hit a 316× wall at 100× data). Per-table
-    * recall drops as p widens; `nTables` INDEPENDENT seeded hyperplane
-    * sets (seed + t·7919, the [[rhpAnnTopKMulti]] convention) buy it
-    * back — a pair colliding in ANY table is a candidate, deduped
-    * before the rank so each pair scores once.
-    *
-    * Scale: one scan per side (the L signatures are an array +
-    * posexplode, not L passes); the join shuffles on (tbl, bucket);
-    * the dedup exchange carries (qid, cid, sim) scalars, not vectors;
-    * top-k is a per-query window over candidates only. No broadcast,
+    * corpus ([[autoPrefixBits]], integer arithmetic so the DuckDB
+    * oracle replays the derivation verbatim), holding expected bucket
+    * occupancy ≈ targetOccupancy at every corpus size — candidates grow
+    * LINEARLY (n · L · occupancy), never quadratically as with any
+    * fixed width (SCALE_100X_r14: fixed 2^8 RHP buckets hit a 316× wall
+    * at 100× data). Per-table recall drops as p widens; `nTables`
+    * independent tables ([[rhpCandidates]]) buy it back. No broadcast,
     * no count beyond the one bounded scalar, no n².
     */
   def rhpTopKForQueriesAuto(corpus: DataFrame, queries: DataFrame, id: Column,
                             vec: Column, dim: Int, k: Int, seed: Long = 42L,
                             nTables: Int = AutoTables,
                             targetOccupancy: Int = AutoOccupancy): DataFrame = {
+    requirePositive("k", k)
     require(nTables >= 1, s"nTables=$nTables must be positive")
     // bounded scalar count (a driver-side constant, the allowlisted
     // shape) → integer ceil-log2 width
@@ -356,90 +378,35 @@ object Similarity {
     val nBits = autoPrefixBits(n, targetOccupancy)
     log.info(s"rhpTopKForQueriesAuto: corpus n=$n, targetOccupancy=$targetOccupancy " +
       s"-> nBits=$nBits, L=$nTables")
-    def sigArr(v: Column): Column =
-      array((0 until nTables).map { t =>
-        VectorFunctions.rhpSignature(v, nBits, dim, seed + t * 7919L)
-      }: _*)
-    val c = corpus.select(id.as("cid"), vec.as("cvec"))
-      .withColumn("cnrm", VectorFunctions.l2Norm(col("cvec")))
-      .select(col("cid"), col("cvec"), col("cnrm"),
-        posexplode(sigArr(col("cvec"))).as(Seq("tbl", "bucket")))
-    val q = queries.select(id.as("qid"), vec.as("qvec"))
-      .withColumn("qnrm", VectorFunctions.l2Norm(col("qvec")))
-      .select(col("qid"), col("qvec"), col("qnrm"),
-        posexplode(sigArr(col("qvec"))).as(Seq("tbl", "bucket")))
-    // cosine BEFORE the dedup so the exchange carries scalars; the
-    // per-table recomputed sims are bit-identical (same strict fold),
-    // so max() just collapses copies — the rhpAnnTopKMulti convention
-    val cand = q.join(c, Seq("tbl", "bucket")).where(col("qid") =!= col("cid"))
-      .withColumn("sim", cosOf(col("qvec"), col("cvec"), col("qnrm"), col("cnrm")))
-      .groupBy(col("qid"), col("cid")).agg(max(col("sim")).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    cand.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("sim"))
+    topKPerQuery(rhpCandidates(corpus, queries, id, vec, nBits, dim, nTables, seed),
+      "sim", ascending = false, k)
   }
 
   /** LSH-bucketed ANN: random-hyperplane signature buckets the corpus;
     * exact cosine ranks candidates within each bucket. Misses neighbors
     * landing in other buckets — the standard recall/cost trade; both
     * sides of the oracle compute identical buckets, deterministically.
+    * It is table 0 of [[rhpAnnTopKMulti]].
     */
   def rhpAnnTopK(df: DataFrame, id: Column, vec: Column, nBits: Int, dim: Int, k: Int,
-                 seed: Long = 42L): DataFrame = {
-    val sig = df.select(id.as("vid"), vec.as("v"))
-      .withColumn("nrm", VectorFunctions.l2Norm(col("v")))
-      .withColumn("bucket", VectorFunctions.rhpSignature(col("v"), nBits, dim, seed))
-    val a = sig.select(col("bucket"), col("vid").as("qid"), col("v").as("qvec"), col("nrm").as("qnrm"))
-    val b = sig.select(col("bucket"), col("vid").as("cid"), col("v").as("cvec"), col("nrm").as("cnrm"))
-    val cand = a.join(b, Seq("bucket")).where(col("qid") =!= col("cid"))
-      .withColumn("sim", cosOf(col("qvec"), col("cvec"), col("qnrm"), col("cnrm")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    cand.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("sim"))
-  }
+                 seed: Long = 42L): DataFrame =
+    rhpAnnTopKMulti(df, id, vec, nBits, dim, k, nTables = 1, seed)
 
   /** Multi-table RHP-LSH ANN: `nTables` independent hyperplane sets
-    * (seed offsets), candidates = union of per-table bucket joins,
-    * deduped before the exact ranking — the standard LSH recall knob
-    * (probability a true neighbor shares ≥1 of L buckets →
-    * 1-(1-p^b)^L). Each table shuffles on its own bucket key; the
-    * union is linear in total bucket occupancy, never n².
+    * ([[rhpCandidates]]), candidates deduped before the exact ranking —
+    * the standard LSH recall knob (probability a true neighbor shares
+    * ≥1 of L buckets → 1-(1-p^b)^L), linear in total bucket occupancy,
+    * never n². `isQuery` restricts the QUERY side before the join (the
+    * corpus side always carries every vector): default all-true = the
+    * v7 every-vector-is-a-query shape; a predicate makes the per-query
+    * candidate cost attributable (the RecallLadder's cosine grid).
     */
   def rhpAnnTopKMulti(df: DataFrame, id: Column, vec: Column, nBits: Int, dim: Int, k: Int,
                       nTables: Int, seed: Long = 42L,
                       isQuery: Column => Column = _ => lit(true)): DataFrame = {
-    val base = df.select(id.as("vid"), vec.as("v"))
-      .withColumn("nrm", VectorFunctions.l2Norm(col("v")))
-    val sigs = (0 until nTables).map { t =>
-      base.withColumn("bucket", VectorFunctions.rhpSignature(col("v"), nBits, dim, seed + t * 7919L))
-        .withColumn("tbl", lit(t))
-    }.reduce(_ unionByName _)
-    // `isQuery` restricts the QUERY side before the join (the corpus
-    // side always carries every vector): default all-true = the v7
-    // every-vector-is-a-query shape; a predicate makes the per-query
-    // candidate cost attributable (the RecallLadder's cosine grid)
-    val a = sigs.where(isQuery(col("vid")))
-      .select(col("tbl"), col("bucket"), col("vid").as("qid"), col("v").as("qvec"), col("nrm").as("qnrm"))
-    val b = sigs.select(col("tbl"), col("bucket"), col("vid").as("cid"), col("v").as("cvec"), col("nrm").as("cnrm"))
-    // a pair may collide in several tables — rank it once. The dedup
-    // runs AFTER the (map-side) cosine so the exchange carries
-    // (qid, cid, sim) scalars instead of two 64-float vectors per
-    // candidate row (bench-neutral at sf0.1 where stage overheads
-    // dominate, ~128 bytes/row narrower at scale); the per-table
-    // recomputed sims are bit-identical (same strict fold), so max()
-    // just collapses copies.
-    val cand = a.join(b, Seq("tbl", "bucket")).where(col("qid") =!= col("cid"))
-      .withColumn("sim", cosOf(col("qvec"), col("cvec"), col("qnrm"), col("cnrm")))
-      .groupBy(col("qid"), col("cid")).agg(max(col("sim")).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    cand.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("sim"))
+    requirePositive("k", k)
+    topKPerQuery(rhpCandidates(df, df.where(isQuery(id)), id, vec, nBits, dim, nTables, seed),
+      "sim", ascending = false, k)
   }
 
   /** Embedding-cosine near-duplicate pairs: RHP-LSH bucket join, then
@@ -459,88 +426,6 @@ object Similarity {
       .select(col("id_a"), col("id_b"), col("sim"))
   }
 
-  /** IVF-style ANN: a spark.ml KMeans coarse quantizer assigns every
-    * vector to a cell; queries probe their `nProbe` nearest cells
-    * (corpus side stays single-cell — the inverted file). The centroid
-    * fit is the one global pass; the search join shuffles on cell id;
-    * the query-side cell ranking is a broadcast of the (tiny) centroid
-    * table — the classic inverted-file trade of recall for
-    * candidate-set size, complementary to the RHP-LSH path.
-    */
-  def ivfTopK(df: DataFrame, id: Column, vec: Column, nCells: Int, k: Int,
-              seed: Long = 42L, nProbe: Int = 1): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val spark = df.sparkSession
-    import spark.implicits._
-    val base = df.select(id.as("vid"), vec.as("v"))
-      .withColumn("fv", array_to_vector(col("v").cast("array<double>")))
-    // a coarse quantizer does not need converged centroids — random
-    // init (k-means|| costs several extra passes) + 3 Lloyd iterations
-    // give stable cells at a fraction of the default fit
-    val model = new KMeans().setK(nCells).setSeed(seed).setMaxIter(3)
-      .setInitMode("random")
-      .setFeaturesCol("fv").setPredictionCol("cell")
-      .fit(base)
-    val assigned = model.transform(base)
-      .withColumn("nrm", VectorFunctions.l2Norm(col("v")))
-      .select(col("cell"), col("vid"), col("v"), col("nrm"))
-    val b = assigned.select(col("cell"), col("vid").as("cid"), col("v").as("cvec"), col("nrm").as("cnrm"))
-    val a =
-      if (nProbe <= 1)
-        assigned.select(col("cell"), col("vid").as("qid"), col("v").as("qvec"), col("nrm").as("qnrm"))
-      else {
-        val centers = broadcast(model.clusterCenters.toSeq.zipWithIndex
-          .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }
-          .toDF("pcell", "centroid"))
-        val wq = Window.partitionBy(col("qid")).orderBy(col("cdist"), col("pcell"))
-        assigned.select(col("vid").as("qid"), col("v").as("qvec"), col("nrm").as("qnrm"))
-          .crossJoin(centers)
-          .withColumn("cdist", VectorFunctions.sqDist(col("qvec"), col("centroid")))
-          .withColumn("crk", row_number().over(wq))
-          .where(col("crk") <= nProbe)
-          .select(col("pcell").as("cell"), col("qid"), col("qvec"), col("qnrm"))
-      }
-    val cand = a.join(b, Seq("cell")).where(col("qid") =!= col("cid"))
-      .select(col("qid"), col("qvec"), col("qnrm"), col("cid"), col("cvec"), col("cnrm"))
-      .distinct() // a neighbor may appear via several probed cells
-      .withColumn("sim", cosOf(col("qvec"), col("cvec"), col("qnrm"), col("cnrm")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
-    cand.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("sim"))
-  }
-
-  /** Deterministic INTEGER IVF ANN — the oracle-checkable twin of
-    * [[ivfTopK]]: spark.ml KMeans' float fit can never be reproduced by
-    * another engine (sum order changes every centroid ULP), so this
-    * variant does the whole inverted-file build in integer arithmetic:
-    *
-    *  1. int8-quantize all vectors under one GLOBAL symmetric scale
-    *     (max|x|/127 — max-selection is exact, no float accumulation);
-    *  2. initial centroids = the `nCells` smallest-id code vectors;
-    *  3. one Lloyd round: assign = argmin of the INTEGER squared
-    *     distance (ties → smallest cell), update = element-wise
-    *     truncating integer mean (`s - s%n) / n`, = DuckDB's `//`);
-    *  4. final assignment, then per-cell top-k by INTEGER dot product.
-    *
-    * Every step is order-independent integer math, so any engine
-    * replays it bit-for-bit — the IVF scale path stops being a
-    * rows-only check. Scale shape: centroids are a broadcast `nCells`-
-    * row table, assignment is a map-side cross product (n·C rows, no
-    * shuffle), the update is one keyed aggregation, and the search join
-    * shuffles on cell id — same skeleton as [[ivfTopK]].
-    *
-    * `isQuery` filters which rows get neighbors (the probe subset).
-    */
-  /** Shared deterministic integer IVF build (v9's steps 1-3, reused by
-    * d9's semantic dedup): one GLOBAL int8 scale, centroid init = the
-    * nCells smallest-id code vectors, one Lloyd round in pure integer
-    * arithmetic. Returns the persisted (vid, q, cell) assignment —
-    * every step engine-replayable, so consumers keep full hash-checked
-    * oracles.
-    */
   /** Balance constant for [[autoIvfCells]]: the catalog's query side is
     * a ~1/50 stride of the corpus, so total work (assign n·C + in-cell
     * search n²/(50·C)) is minimized at C ≈ √(n/50).
@@ -630,6 +515,7 @@ object Similarity {
     // (round 18).
     val qv = base.select(col("vid"),
       transform(col("v"), x => round(x.cast("double") / lit(scale)).cast("long")).as("q"))
+      // column-only on purpose: it feeds a persist, whose output partitioning AQE keeps by default
       .repartition(col("vid"))
       .persist()
     val c0 = qv.orderBy("vid").limit(nCells)
@@ -701,19 +587,37 @@ object Similarity {
         .select(col("cell"), col("vid"), col("q"))
     }
 
+  /** Deterministic INTEGER IVF ANN (v9): a float k-means fit can never
+    * be reproduced by another engine (sum order changes every centroid
+    * ULP), so the whole inverted-file build runs in integer arithmetic
+    * ([[intIvfIndex]]):
+    *
+    *  1. int8-quantize all vectors under one GLOBAL symmetric scale
+    *     (max|x|/127 — max-selection is exact, no float accumulation);
+    *  2. initial centroids = the `nCells` smallest-id code vectors;
+    *  3. one Lloyd round: assign = argmin of the INTEGER squared
+    *     distance (ties → smallest cell), update = element-wise
+    *     truncating integer mean (`s - s%n) / n`, = DuckDB's `//`);
+    *  4. final assignment, then per-cell top-k by INTEGER dot product.
+    *
+    * Every step is order-independent integer math, so any engine
+    * replays it bit-for-bit. Scale shape: centroids are a broadcast
+    * `nCells`-row table, assignment is a map-side cross product (n·C
+    * rows, no shuffle), the update is one keyed aggregation, and the
+    * search join shuffles on cell id.
+    *
+    * `isQuery` filters which rows get neighbors (the probe subset).
+    */
   def intIvfTopK(df: DataFrame, id: Column, vec: Column, nCells: Int, k: Int,
                  isQuery: Column => Column, nProbe: Int = IvfAutoProbe): DataFrame = {
+    requirePositive("k", k)
     val (fin, cents) = intIvfBuild(df, id, vec, nCells)
     val qs = intIvfProbe(fin, cents, isQuery, nProbe)
       .select(col("cell"), col("vid").as("qid"), col("q").as("qq"))
     val cs = fin.select(col("cell"), col("vid").as("cid"), col("q").as("cq"))
-    val idot = VectorFunctions.intDot(col("qq"), col("cq"))
-    val w = Window.partitionBy("qid").orderBy(col("idot").desc, col("cid"))
-    qs.join(cs, Seq("cell")).where(col("qid") =!= col("cid"))
-      .withColumn("idot", idot)
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("idot"))
+    topKPerQuery(qs.join(cs, Seq("cell")).where(col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), VectorFunctions.intDot(col("qq"), col("cq")).as("idot")),
+      "idot", ascending = false, k)
   }
 
   /** v11 — the production ANN recipe: coarse candidate generation from
@@ -728,6 +632,7 @@ object Similarity {
   def intIvfRerankTopK(df: DataFrame, id: Column, vec: Column, nCells: Int,
                        k: Int, isQuery: Column => Column,
                        nProbe: Int = IvfAutoProbe): DataFrame = {
+    requirePositive("k", k)
     val (fin, cents) = intIvfBuild(df, id, vec, nCells)
     intIvfRerankFromBuild(df, id, vec, fin, cents, k, isQuery, nProbe)
   }
@@ -742,6 +647,7 @@ object Similarity {
                                            fin: DataFrame, cents: DataFrame,
                                            k: Int, isQuery: Column => Column,
                                            nProbe: Int): DataFrame = {
+    requirePositive("k", k)
     val v = df.select(id.cast("long").as("fid"), vec.as("fv"),
       VectorFunctions.l2Norm(vec).as("fn"))
     val qs = intIvfProbe(fin, cents, isQuery, nProbe)
@@ -749,12 +655,9 @@ object Similarity {
       .select(col("cell"), col("vid").as("qid"), col("fv").as("qv"), col("fn").as("qn"))
     val cs = fin.join(v, col("vid") === col("fid"))
       .select(col("cell"), col("vid").as("cid"), col("fv").as("cv"), col("fn").as("cn"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid"))
-    qs.join(cs, Seq("cell")).where(col("qid") =!= col("cid"))
-      .withColumn("sim", cosOf(col("qv"), col("cv"), col("qn"), col("cn")))
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("sim"))
+    topKPerQuery(qs.join(cs, Seq("cell")).where(col("qid") =!= col("cid"))
+      .select(col("qid"), col("cid"), cosOf(col("qv"), col("cv"), col("qn"), col("cn")).as("sim")),
+      "sim", ascending = false, k)
   }
 
   /** d9 — SemDeDup-style semantic deduplication: cluster the corpus by
@@ -796,34 +699,35 @@ object Similarity {
     * by HAMMING distance — bit_count(hi⊕hi') + bit_count(lo⊕lo'),
     * exact integers on both engines. The scan side carries 8 packed
     * bytes per vector (32× smaller than float32), so the brute-force
-    * pass is a cache-friendly popcount scan. Routing mirrors v1's
-    * cosineTopK: the query side broadcasts only below an ABSOLUTE row
-    * cap; past it, the top `prefixBits` sign bits become the LSH bucket
-    * key (v2's bucket-join shape — axis-aligned hyperplanes are free
-    * here, the signature is already packed in `hi`) with exact Hamming
-    * re-rank inside buckets — linear in bucket occupancy, no broadcast,
-    * never n².
+    * pass ([[bruteScan]]) is a cache-friendly popcount scan. Routing
+    * mirrors v1's cosineTopK: the query side broadcasts only below an
+    * ABSOLUTE row cap; past it, Auto takes the occupancy-targeted
+    * auto-width multi-table LSH ([[binaryHammingTopKMultiTable]]) —
+    * linear in bucket occupancy, no broadcast, never n². Bucketed is
+    * that route's single fixed-width table: the top `prefixBits` sign
+    * bits of `hi` as the bucket key.
     */
   def binaryHammingTopK(df: DataFrame, id: Column, vec: Column, k: Int,
                         isQuery: Column => Column,
                         maxBroadcastRows: Long = Broadcasts.MaxRows,
                         prefixBits: Int = 8,
                         route: HammingRoute = HammingRoute.Auto): DataFrame = {
+    requirePositive("k", k)
     require(prefixBits >= 1 && prefixBits <= 32,
       s"prefixBits=$prefixBits must be in [1, 32] (the hi half packs 32 sign bits)")
+    // route=Bucketed plans without the count() existence check: table 0
+    // of the multi-table route is its fixed-width bucket hi >>> (32 - p)
+    if (route == HammingRoute.Bucketed)
+      return binaryHammingTopKMultiTable(df, id, vec, k, isQuery,
+        prefixBits = prefixBits, nTables = 1, probe = 0)
     val base = df.select(id.cast("long").as("vid"),
       VectorFunctions.signCode(vec).as("code"))
       .select(col("vid"), col("code.hi").as("hi"), col("code.lo").as("lo"))
     val qs = base.where(isQuery(col("vid")))
       .select(col("vid").as("qid"), col("hi").as("qhi"), col("lo").as("qlo"))
-    // same absolute-count broadcast gate as cosineTopK.
-    // HammingRoute.Bucketed skips the check entirely (no count() job,
-    // bucket path by construction).
+    // same absolute-count broadcast gate as cosineTopK
     val cap = Broadcasts.cap(maxBroadcastRows)
-    val over = route match {
-      case HammingRoute.Bucketed => true
-      case _                     => Broadcasts.boundedCount(qs, cap) > cap
-    }
+    val over = Broadcasts.boundedCount(qs, cap) > cap
     if (over && route == HammingRoute.Exact)
       throw new IllegalStateException(
         s"binaryHammingTopK(route=Exact): query side exceeds broadcast cap $cap — " +
@@ -831,7 +735,7 @@ object Similarity {
           "pass route=Auto to accept the auto-width multi-table LSH route, " +
           "route=Bucketed for the fixed-width single-table tier, " +
           "or binaryHammingTopKMultiTable to pick the LSH knobs explicitly")
-    if (over && route == HammingRoute.Auto) {
+    if (over) {
       // The 100×-safe fallback (since round 15): occupancy-targeted
       // auto-width multi-table LSH at the measured production
       // operating point (L=16 probe=1, RECALL_r15.json). A fixed
@@ -869,100 +773,17 @@ object Similarity {
         prefixBits = p, nTables = nT,
         probe = HammingAutoProbe)
     }
-    val cand =
-      if (over) {
-        // route=Bucketed — EXPLICIT fixed-width sign-prefix LSH: the
-        // top `prefixBits` bits of the hi half ARE an axis-aligned
-        // random-hyperplane signature (bit i = sign of dim i), so they
-        // double as the bucket key — v2's bucket-join shape, no
-        // broadcast, shuffle on bucket occupancy. Exact Hamming
-        // re-rank inside each bucket; misses cross-bucket neighbors
-        // (standard LSH recall trade — see
-        // [[binaryHammingTopKMultiTable]] for the L-table recall knob).
-        val shift = 32 - prefixBits
-        val c = base.select(col("vid").as("cid"), col("hi"), col("lo"),
-          shiftright(col("hi"), shift).as("bucket"))
-        val q = qs.withColumn("bucket", shiftright(col("qhi"), shift))
-        q.join(c, Seq("bucket")).where(col("qid") =!= col("cid")).drop("bucket")
-      } else {
-        log.info(s"binaryHammingTopK: query side within broadcast cap $cap — " +
-          "exact brute popcount scan")
-        // repartition the scan side first (cosineTopK's argument): a
-        // single-split corpus would serialize the whole popcount pair
-        // scan and its top-k partial sort into one task
-        base.select(col("vid").as("cid"), col("hi"), col("lo"))
-          .repartition(col("cid"))
-          .crossJoin(broadcast(qs)).where(col("qid") =!= col("cid"))
-      }
-    val ham = expr("bit_count(qhi ^ hi) + bit_count(qlo ^ lo)").cast("long")
-    val w = Window.partitionBy("qid").orderBy(col("hamming").asc, col("cid").asc)
-    cand.withColumn("hamming", ham)
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("hamming"))
+    log.info(s"binaryHammingTopK: query side within broadcast cap $cap — " +
+      "exact brute popcount scan")
+    val cand = bruteScan(base.select(col("vid").as("cid"), col("hi"), col("lo")), qs)
+      .select(col("qid"), col("cid"), hammingOf.as("hamming"))
+    topKPerQuery(cand, "hamming", ascending = true, k)
   }
 
-  /** v14b — multi-table sign-prefix LSH: the recall knob on
-    * [[binaryHammingTopK]]'s bucket route. A single prefix table misses
-    * any true neighbor that differs from the query in even ONE of the
-    * `prefixBits` bucket bits; `nTables` `prefixBits`-wide windows of
-    * the hi half — disjoint while they fit, WRAPPED bit-rotations past
-    * 32 bits — act as L independent hash tables (each
-    * table hashes with a different subset of the 64 axis-aligned
-    * hyperplanes — the standard L-table LSH construction, the same way
-    * v7 extends v2's single RHP table). A candidate pair is generated
-    * when the two codes agree on ANY table's window; union-of-tables
-    * candidates dedup BEFORE the exact Hamming re-rank so each pair is
-    * scored once. Miss probability decays exponentially in L: a
-    * neighbor within Hamming radius r of the query survives unless all
-    * L windows are hit. At EQUAL `prefixBits`, table 0's window is
-    * exactly the single-table route's bucket key, so the candidate set
-    * is a superset and recall@k dominates the single-table route at
-    * the cost of ≤ L× candidate generation. (At differing widths — the
-    * defaults here are 6 bits vs 8 there — neither candidate set
-    * contains the other and domination is not guaranteed. A larger
-    * nTables at the same width IS a candidate superset of a smaller
-    * one — the tables form a prefix sequence — so recall is monotone
-    * in L.)
-    *
-    * Deterministic (bit windows/rotations, not seeded permutations) ⇒
-    * the whole route replays in integer SQL: table l's bucket is the
-    * top p bits of hi rotated left by r = (l·p) mod 32 — while windows
-    * fit, exactly `(hi // 2^(32-(l+1)·p)) % 2^p`; wrapped tables
-    * replay as `((hi % 2^(32-r))·2^r + hi // 2^(32-r)) // 2^(32-p)`.
-    *
-    * Scale: never broadcasts and never counts — candidates come from L
-    * bucket-keyed equi-joins (posexplode to (tbl, bucket) keys, one
-    * shuffle keyed on both), linear in summed bucket occupancy; the
-    * dedup is a partial-agg-friendly distinct on (qid, cid, hamming);
-    * top-k is a per-query window over candidates only. No n² anywhere.
-    *
-    * Defaults (p=6, L=8) are the executed cost/recall frontier
-    * (RECALL_r13.json, [[graft.RecallLadder]], SCALE.md "Multi-table
-    * Hamming LSH operating points"): at sf1 (20k×20k, 2k queries) p=6
-    * dominates p=4 at every equal candidate budget (L=4: recall@3
-    * 0.548 @ 2.7M cands vs p=4 L=1's 0.320 @ 2.6M) while p=8 is capped
-    * at 4 distinct tables (recall ceiling 0.333); L=8 buys recall@3
-    * 0.741 at sf1 / 0.545 at sf0.1 for ~4.5 s — the knee before the
-    * near-linear-cost tail to the p=6 ceiling (L=16: 0.875 @ 7.7 s).
-    * Callers chasing >0.9 recall switch to p=4 L=8 (0.967 @ 14 s).
-    *
-    * `targetOccupancy > 0` switches the width to OCCUPANCY-TARGETED
-    * auto mode — the 100× lesson from SCALE_100X_r14.json: ANY fixed
-    * prefix width has a fixed 2^p bucket cardinality, so occupancy
-    * grows linearly with the corpus and candidate pairs QUADRATICALLY
-    * (the measured fixed-width walls blow up 797×/1239× at 100× data).
-    * Auto mode derives p from one bounded scalar count so expected
-    * occupancy stays ≈ targetOccupancy at every corpus size:
-    * p = min(32, max(4, ceilLog2(ceil(n / targetOccupancy)))), in pure
-    * integer arithmetic (no float log2 — boundary powers of two must
-    * round identically in the SQL replay), and CLAMPS nTables to the
-    * 32/gcd(p,32) distinct rotation offsets. Candidates then grow
-    * LINEARLY (n · L · occupancy); per-table recall drops as p widens,
-    * bought back by raising L — odd derived widths keep gcd(p,32)=1
-    * and the full 32-table headroom. `prefixBits` is ignored in auto
-    * mode.
-    */
+  /** Hamming distance of a (qhi, qlo) × (hi, lo) sign-code pair. */
+  private def hammingOf: Column =
+    expr("bit_count(qhi ^ hi) + bit_count(qlo ^ lo)").cast("long")
+
   /** The L-table bucket array shared by [[binaryHammingTopKMultiTable]]
     * and [[RecallLadder]]'s candidate counter (a single construction so
     * the ladder's reported `cands` can never desync from the plan being
@@ -1013,6 +834,69 @@ object Similarity {
     }
   }
 
+  /** v14b — multi-table sign-prefix LSH: the recall knob on
+    * [[binaryHammingTopK]]'s bucket route. A single prefix table misses
+    * any true neighbor that differs from the query in even ONE of the
+    * `prefixBits` bucket bits; `nTables` `prefixBits`-wide windows of
+    * the hi half — disjoint while they fit, WRAPPED bit-rotations past
+    * 32 bits — act as L independent hash tables (each
+    * table hashes with a different subset of the 64 axis-aligned
+    * hyperplanes — the standard L-table LSH construction, the same way
+    * v7 extends v2's single RHP table). A candidate pair is generated
+    * when the two codes agree on ANY table's window; union-of-tables
+    * candidates dedup BEFORE the exact Hamming re-rank so each pair is
+    * scored once. Miss probability decays exponentially in L: a
+    * neighbor within Hamming radius r of the query survives unless all
+    * L windows are hit. At EQUAL `prefixBits`, table 0's window is
+    * exactly the single-table route's bucket key, so the candidate set
+    * is a superset and recall@k dominates the single-table route at
+    * the cost of ≤ L× candidate generation. (At differing widths — the
+    * defaults here are 6 bits vs 8 there — neither candidate set
+    * contains the other and domination is not guaranteed. A larger
+    * nTables at the same width IS a candidate superset of a smaller
+    * one — the tables form a prefix sequence — so recall is monotone
+    * in L.)
+    *
+    * Deterministic (bit windows/rotations, not seeded permutations) ⇒
+    * the whole route replays in integer SQL: table l's bucket is the
+    * top p bits of hi rotated left by r = (l·p) mod 32 — while windows
+    * fit, exactly `(hi // 2^(32-(l+1)·p)) % 2^p`; wrapped tables
+    * replay as `((hi % 2^(32-r))·2^r + hi // 2^(32-r)) // 2^(32-p)`.
+    *
+    * Scale: never broadcasts and never counts — candidates come from L
+    * bucket-keyed equi-joins (posexplode to (tbl, bucket) keys, one
+    * shuffle keyed on both), linear in summed bucket occupancy; at
+    * L > 1 the dedup is a partial-agg-friendly distinct on (qid, cid,
+    * hamming) (one table yields each pair once: a code has one bucket
+    * per table, and the probed buckets are distinct); top-k is a
+    * per-query window over candidates only. No n² anywhere.
+    *
+    * Defaults (p=6, L=8) are the executed cost/recall frontier
+    * (RECALL_r13.json, [[graft.RecallLadder]], SCALE.md "Multi-table
+    * Hamming LSH operating points"): at sf1 (20k×20k, 2k queries) p=6
+    * dominates p=4 at every equal candidate budget (L=4: recall@3
+    * 0.548 @ 2.7M cands vs p=4 L=1's 0.320 @ 2.6M) while p=8 is capped
+    * at 4 distinct tables (recall ceiling 0.333); L=8 buys recall@3
+    * 0.741 at sf1 / 0.545 at sf0.1 for ~4.5 s — the knee before the
+    * near-linear-cost tail to the p=6 ceiling (L=16: 0.875 @ 7.7 s).
+    * Callers chasing >0.9 recall switch to p=4 L=8 (0.967 @ 14 s).
+    *
+    * `targetOccupancy > 0` switches the width to OCCUPANCY-TARGETED
+    * auto mode — the 100× lesson from SCALE_100X_r14.json: ANY fixed
+    * prefix width has a fixed 2^p bucket cardinality, so occupancy
+    * grows linearly with the corpus and candidate pairs QUADRATICALLY
+    * (the measured fixed-width walls blow up 797×/1239× at 100× data).
+    * Auto mode derives p from one bounded scalar count so expected
+    * occupancy stays ≈ targetOccupancy at every corpus size:
+    * p = min(32, max(4, ceilLog2(ceil(n / targetOccupancy)))), in pure
+    * integer arithmetic (no float log2 — boundary powers of two must
+    * round identically in the SQL replay), and CLAMPS nTables to the
+    * 32/gcd(p,32) distinct rotation offsets. Candidates then grow
+    * LINEARLY (n · L · occupancy); per-table recall drops as p widens,
+    * bought back by raising L — odd derived widths keep gcd(p,32)=1
+    * and the full 32-table headroom ([[autoPrefixBits]]). `prefixBits`
+    * is ignored in auto mode.
+    */
   def binaryHammingTopKMultiTable(df: DataFrame, id: Column, vec: Column, k: Int,
                                   isQuery: Column => Column,
                                   prefixBits: Int = 6,
@@ -1026,16 +910,12 @@ object Similarity {
                                   nTables: Int = 4,
                                   targetOccupancy: Int = 0,
                                   probe: Int = 0): DataFrame = {
+    requirePositive("k", k)
+    // auto mode: one bounded scalar count (the allowlisted shape) →
+    // integer ceil-log2, replayed verbatim in oracle SQL
     val p =
       if (targetOccupancy <= 0) prefixBits
-      else {
-        // bounded scalar count (the allowlisted driver-side-constant
-        // shape) → integer ceil-log2, replayed verbatim in oracle SQL
-        val n = df.count()
-        val b = (n + targetOccupancy - 1) / targetOccupancy
-        val cl2 = if (b <= 1L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(b - 1L)
-        math.min(32, math.max(4, cl2))
-      }
+      else autoPrefixBits(df.count(), targetOccupancy)
     require(p >= 1 && p <= 32 && nTables >= 1 && nTables <= 32,
       s"nTables=$nTables, prefixBits=$p must each fit the 32 hi sign bits")
     require(probe >= 0 && probe <= 2,
@@ -1079,13 +959,9 @@ object Similarity {
     val c = tabled.select(col("vid").as("cid"), col("hi"), col("lo"),
       col("tbl"), col("bucket"))
     val cand = q.join(c, Seq("tbl", "bucket")).where(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        expr("bit_count(qhi ^ hi) + bit_count(qlo ^ lo)").cast("long").as("hamming"))
-      .distinct() // a pair found by several tables scores once
-    val w = Window.partitionBy("qid").orderBy(col("hamming").asc, col("cid").asc)
-    cand.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("hamming"))
+      .select(col("qid"), col("cid"), hammingOf.as("hamming"))
+    // a pair found by several tables scores once
+    topKPerQuery(if (nT > 1) cand.distinct() else cand, "hamming", ascending = true, k)
   }
 
   /** v12 — prototypicality ranking per IVF cell (the SSL-prototypes
@@ -1175,6 +1051,18 @@ object Similarity {
       .groupBy("m", "cell").agg(array_sort(collect_list(struct(col("i"), col("c")))).as("ps"))
       .select(col("m"), col("cell"), expr("transform(ps, p -> p.c)").as("cent"))
 
+  /** Codebook init shared by [[pqTopK]] and [[adcBuild]]: the `k`
+    * smallest-id training rows' subvectors, numbered as cells 0..k-1 in
+    * id order, in every subspace — (m, cell, cent).
+    */
+  private def pqInit(sv: DataFrame, k: Int): DataFrame =
+    sv.join(
+        sv.select(col("vid")).distinct().orderBy("vid").limit(k)
+          .select((row_number().over(Window.orderBy("vid")) - 1).cast("long").as("cell"),
+            col("vid").as("cvid")),
+        col("vid") === col("cvid"))
+      .select(col("m"), col("cell"), col("sub").as("cent"))
+
   /** Flatten collected (m, cell, cent) codebook rows to the dense
     * cell-indexed layout the packed kernels read: `cbFlat((mi*kCodes +
     * cell)*subDim + j)` plus the per-(m, cell) validity mask (Lloyd
@@ -1208,7 +1096,7 @@ object Similarity {
              topK: Int, isQuery: Column => Column,
              trainTarget: Int = AdcTrainTarget): DataFrame = {
     require(trainTarget > 0, s"trainTarget must be positive: $trainTarget")
-    require(topK > 0, s"topK must be positive: $topK")
+    requirePositive("topK", topK)
     require(k <= ArgminPackStride,
       s"k=$k exceeds the argmin packing stride $ArgminPackStride")
     val base = df.select(id.cast("long").as("vid"), vec.as("v"))
@@ -1230,6 +1118,7 @@ object Similarity {
     // and the extra pass).
     val qvec = base.select(col("vid"),
       transform(col("v"), x => round(x.cast("double") / lit(scale)).cast("long")).as("q"))
+      // column-only on purpose: both consumers (qvT, codes) persist, and AQE keeps their output partitioning
       .repartition(col("vid"))
     // codebook training on the deterministic bounded stride sample
     // (round 19, VERDICT r18 #5 — full-corpus codebook training is the
@@ -1244,18 +1133,11 @@ object Similarity {
       .select(col("vid"), col("m"),
         slice(col("q"), col("m") * subDim + 1, lit(subDim)).as("sub"))
       .persist()
-    val c0 = qvT.join(
-        qvT.select(col("vid")).distinct().orderBy("vid").limit(k)
-          .select((row_number().over(Window.orderBy("vid")) - 1).cast("long").as("cell"),
-            col("vid").as("cvid")),
-        col("vid") === col("cvid"))
-      .select(col("m"), col("cell"), col("sub").as("cent"))
-
     // trained codebooks (m, cell, cent) — collected IMMEDIATELY: every
     // downstream consumer (the encode kernel and the distance table)
     // reads the collected rows, so no training cache outlives this call
     // (VERDICT r17 #6)
-    val cbRows = pqUpdate(pqAssign(qvT, c0)).collect()
+    val cbRows = pqUpdate(pqAssign(qvT, pqInit(qvT, k))).collect()
     require(cbRows.nonEmpty, "pqTopK: PQ training produced no codebook " +
       "rows (empty training sample)")
     qvT.unpersist(blocking = false)
@@ -1293,14 +1175,12 @@ object Similarity {
     // same containment contract as cosineTopK's query side
     val qcodes = codes.where(isQuery(col("vid")))
       .select(col("vid").as("qid"), col("pc").as("qc"))
-    val w = Window.partitionBy("qid").orderBy(col("pq_dist"), col("cid"))
-    codes.select(col("vid").as("cid"), col("pc").as("cc"))
+    topKPerQuery(codes.select(col("vid").as("cid"), col("pc").as("cc"))
       .crossJoin(broadcast(qcodes)).where(col("qid") =!= col("cid"))
-      .withColumn("pq_dist",
-        VectorFunctions.pqSymDistPacked(col("qc"), col("cc"), dvals.toIndexedSeq, m, k))
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= topK)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("pq_dist"))
+      .select(col("qid"), col("cid"),
+        VectorFunctions.pqSymDistPacked(col("qc"), col("cc"), dvals.toIndexedSeq, m, k)
+          .as("pq_dist")),
+      "pq_dist", ascending = true, topK)
   }
 
   /** IVFADC — the production large-scale ANN composition (inverted
@@ -1348,9 +1228,11 @@ object Similarity {
                  m: Int, subDim: Int, kCodes: Int, topK: Int,
                  isQuery: Column => Column,
                  nProbe: Int = IvfAutoProbe,
-                 trainTarget: Int = AdcTrainTarget): DataFrame =
+                 trainTarget: Int = AdcTrainTarget): DataFrame = {
+    requirePositive("topK", topK)
     ivfAdcFromIndex(intIvfIndex(df, id, vec, nCells),
       m, subDim, kCodes, topK, isQuery, nProbe, trainTarget)
+  }
 
   /** [[ivfAdcTopK]] over a prebuilt [[IvfIndex]] — the handle form for
     * long-lived callers (RecallLadder) that must release the coarse
@@ -1362,6 +1244,7 @@ object Similarity {
                  m: Int, subDim: Int, kCodes: Int, topK: Int,
                  isQuery: Column => Column,
                  nProbe: Int, trainTarget: Int): DataFrame = {
+    requirePositive("topK", topK)
     val aix = adcBuild(ix, m, subDim, kCodes, trainTarget)
     val out = ivfAdcTopKFromAdc(aix, topK, isQuery, nProbe)
     // one-shot contract: nothing PQ-specific outlives the call (the
@@ -1376,13 +1259,8 @@ object Similarity {
   private[graft] def ivfAdcTopKFromAdc(aix: AdcIndex, topK: Int,
                  isQuery: Column => Column,
                  nProbe: Int = IvfAutoProbe): DataFrame = {
-    // ADVICE r19: topK <= 0 used to silently return an empty frame
-    require(topK > 0, s"topK must be positive: $topK")
-    val w = Window.partitionBy("qid").orderBy(col("adc_score").desc, col("cid"))
-    adcScored(aix, isQuery, nProbe)
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= topK)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("adc_score"))
+    requirePositive("topK", topK)
+    topKPerQuery(adcScored(aix, isQuery, nProbe), "adc_score", ascending = false, topK)
   }
 
   /** Build the IVFADC serving artifacts over a coarse [[IvfIndex]] —
@@ -1474,19 +1352,13 @@ object Similarity {
       .select(col("vid"), col("ms").getField("m").as("m"),
         col("ms").getField("sub").as("sub"))
       .persist()
-    val c0 = rsvT.join(
-        rsvT.select(col("vid")).distinct().orderBy("vid").limit(kCodes)
-          .select((row_number().over(Window.orderBy("vid")) - 1).cast("long").as("cell"),
-            col("vid").as("cvid")),
-        col("vid") === col("cvid"))
-      .select(col("m"), col("cell"), col("sub").as("cent"))
     // two Lloyd rounds; the round-1 codebook is a bounded (≤ M·k*)
     // relation that broadcasts into round 2's assign. Rounds and
     // sample size were A/B'd (round 20, semb1 20k fixture): a third
     // round and a 4× training sample both measured FLAT on pure-ADC
     // recall (0.165→0.145 at probe=1) — the binding constraint past
     // two rounds is the 8-byte code budget, not training quality.
-    val rc1 = pqUpdate(pqAssign(rsvT, c0))
+    val rc1 = pqUpdate(pqAssign(rsvT, pqInit(rsvT, kCodes)))
     val cbRows = pqUpdate(pqAssign(rsvT, rc1)).collect()
     require(cbRows.nonEmpty, "ivfAdc: PQ training produced no codebook " +
       "rows (empty training sample)")
@@ -1568,10 +1440,12 @@ object Similarity {
                        topK: Int, isQuery: Column => Column,
                        nProbe: Int = IvfAutoProbe,
                        trainTarget: Int = AdcTrainTarget,
-                       shortlistFrac: Int = AdcShortlistFrac): DataFrame =
+                       shortlistFrac: Int = AdcShortlistFrac): DataFrame = {
+    requirePositive("topK", topK)
     ivfAdcRerankFromIndex(intIvfIndex(df, id, vec, nCells), df, id, vec,
       m, subDim, kCodes, shortlist, topK, isQuery, nProbe, trainTarget,
       shortlistFrac)
+  }
 
   /** [[ivfAdcRerankTopK]] over a prebuilt [[IvfIndex]] — see
     * [[ivfAdcFromIndex]] for the cache-ownership contract.
@@ -1582,6 +1456,7 @@ object Similarity {
                        topK: Int, isQuery: Column => Column,
                        nProbe: Int, trainTarget: Int,
                        shortlistFrac: Int = AdcShortlistFrac): DataFrame = {
+    requirePositive("topK", topK)
     val aix = adcBuild(ix, m, subDim, kCodes, trainTarget)
     val out = ivfAdcRerankTopKFromAdc(aix, df, id, vec, shortlist, topK,
       isQuery, nProbe, shortlistFrac)
@@ -1600,15 +1475,11 @@ object Similarity {
                        shortlistFrac: Int = AdcShortlistFrac,
                        maxBroadcastRows: Long = Broadcasts.MaxRows,
                        knownQueryCount: Option[Long] = None): DataFrame = {
-    // ADVICE r19: topK <= 0 used to silently return an empty frame
-    // (shortlist >= topK passes at 0)
-    require(topK > 0, s"topK must be positive: $topK")
+    requirePositive("topK", topK)
     require(shortlist >= topK,
       s"shortlist=$shortlist must be >= topK=$topK")
     require(shortlistFrac >= 0,
       s"shortlistFrac=$shortlistFrac must be >= 0 (0 pins the fixed tier)")
-    val scored = adcScored(aix, isQuery, nProbe)
-    val wr = Window.partitionBy("qid").orderBy(col("adc_score").desc, col("cid"))
     // per-query shortlist: rank and pool-count over the SAME (qid)
     // partitioning — one exchange feeds both window functions
     val rCut =
@@ -1617,8 +1488,7 @@ object Similarity {
         // integral ceiling division (`div`, = DuckDB's `//` on the
         // oracle side) — exact, no float quotient
         expr(s"(pool + ${shortlistFrac - 1}) div $shortlistFrac"))
-    val short = scored
-      .withColumn("rank", row_number().over(wr))
+    val short = rankPerQuery(adcScored(aix, isQuery, nProbe), "adc_score", ascending = false)
       .withColumn("pool", count(lit(1)).over(Window.partitionBy("qid")))
       .where(col("rank") <= rCut)
       .select(col("qid").as("query_id"), col("cid").as("neighbor_id"))
@@ -1664,12 +1534,9 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         col("fv").as("cv"), col("fn").as("cn"))
     val rer = c.join(maybeBroadcast(qv), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
+      .select(col("query_id").as("qid"), col("neighbor_id").as("cid"),
         cosOf(col("qv"), col("cv"), col("qn"), col("cn")).as("sim"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("neighbor_id"))
-    rer.withColumn("rank", row_number().over(w)).where(col("rank") <= topK)
-      .select(col("query_id"), col("neighbor_id"),
-        col("rank").cast("long").as("rank"), col("sim"))
+    topKPerQuery(rer, "sim", ascending = false, topK)
   }
 
   /** C1 — all-pairs Gram similarities (i < j) over a bounded subset:

@@ -4,13 +4,17 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+
 import graft.operators.{ClusterFold, GreedyClustering, Grinch}
 
 /** The C8 bisection every threshold search calls
   * (GreedyClustering.findThreshold, Grinch's tree cut, the CLI's combo),
-  * and the keyed prep both per-key clusterers fold over.
+  * the keyed prep both per-key clusterers fold over, and the counted
+  * fan-out it shares with the exact ANN scans.
   */
-class ClusterFoldSpec extends SparkSpec {
+class ClusterFoldSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   /** A monotone synthetic cluster count: ⌊1000·θ⌋, recording each probe. */
@@ -84,5 +88,22 @@ class ClusterFoldSpec extends SparkSpec {
       Grinch.flatCluster(df.where(col("k") === k), col("id"), col("vec"), col("id"), hp, threshold = 0.3)
         .as[(Long, Long)].collect().toSeq.map { case (id, c) => (k, id, c) }
     }.sortBy(_._2)
+  }
+
+  test("exact ANN scans keep their fan-out under AQE (v1, v13 at sf0.01)") {
+    val dir = "/root/testdata/sf0.01"
+    assume(new java.io.File(s"$dir/embeddings.parquet").exists())
+    spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") shouldBe "true"
+    Seq("v1_cosine_topk", "v13_binary_hamming").foreach { name =>
+      val out = SparkEntry.queries(name)(spark, dir)
+      out.collect() should not be empty
+      // the pair scan runs in the stage of the broadcast nested-loop
+      // join, whose tasks are the fanned-out scan side's partitions
+      val scans = collect(out.queryExecution.executedPlan) { case j: BroadcastNestedLoopJoinExec => j }
+      withClue(s"$name: ") {
+        scans should have size 1
+        scans.head.outputPartitioning.numPartitions should be > 1
+      }
+    }
   }
 }

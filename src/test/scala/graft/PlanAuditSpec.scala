@@ -126,6 +126,20 @@ class PlanAuditSpec extends SparkSpec {
       Seq("Dedup.scala")
     mainText.collect { case ("QueriesText.scala", t) => """sortedIntersectCount\(""".r.findAllIn(t).size } shouldBe
       Seq(2)
+    // one per-query top-k cut for the ANN routes: the only ordered
+    // window over qid is Similarity's rankPerQuery (topKPerQuery's rank)
+    val qidWindow = """partitionBy\((?:col\()?"qid"\)?\)\s*\.orderBy\(""".r
+    val enclosingDef = """\bdef (\w+)""".r
+    mainText.flatMap { case (f, t) =>
+      qidWindow.findAllMatchIn(t).map(m => f -> enclosingDef.findAllMatchIn(t.take(m.start)).toSeq.last.group(1))
+    } shouldBe Seq("Similarity.scala" -> "rankPerQuery")
+    // a fan-out that spreads compute names its partition count
+    // (Fanout.byKey); column-only repartitions remain only where the
+    // exchange feeds a persist, whose output partitioning AQE keeps
+    sources.zip(text).collect {
+      case (p, (f, t)) if p.startsWith("src/main/scala/graft/operators") &&
+        t.contains(".repartition(col(") => f -> """\.repartition\(col\(""".r.findAllIn(t).size
+    }.sorted shouldBe Seq("Dedup.scala" -> 1, "Similarity.scala" -> 2)
     // launch-time spark.sql.* settings (the SparkContext's conf, which
     // no test's runtime spark.conf.set can touch)
     val launched = spark.sparkContext.getConf.getAll.toMap

@@ -483,18 +483,6 @@ class VectorSpec extends SparkSpec {
     out(1)._4.toSeq shouldBe Seq(0f, 0f, 0f) // zero vector survives (scale 1)
   }
 
-  test("IVF nProbe=2 finds at least the nProbe=1 neighbors") {
-    val df = vecs.toDF("vec_id", "embedding")
-    val one = Similarity.ivfTopK(df, col("vec_id"), col("embedding"), nCells = 2, k = 4)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val two = Similarity.ivfTopK(df, col("vec_id"), col("embedding"), nCells = 2, k = 4, nProbe = 2)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    // k exceeds candidate counts at this size, so probing more cells
-    // can only add neighbors
-    one.subsetOf(two) shouldBe true
-    two.size should be >= one.size
-  }
-
   test("multi-table LSH finds at least the single-table candidates") {
     val df = vecs.toDF("vec_id", "embedding")
     val single = Similarity.rhpAnnTopK(df, col("vec_id"), col("embedding"), 4, 3, 4)
@@ -504,6 +492,13 @@ class VectorSpec extends SparkSpec {
     // table 0 of the multi variant IS the single table (same seed), and
     // k exceeds the candidate counts here, so recall can only grow
     single.subsetOf(multi) shouldBe true
+    // and the single-table route is the one-table multi route, row for row
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
+    val one = rows(Similarity.rhpAnnTopK(df, col("vec_id"), col("embedding"), 4, 3, 4))
+    one should not be empty
+    one shouldBe rows(Similarity.rhpAnnTopKMulti(df, col("vec_id"), col("embedding"), 4, 3, 4,
+      nTables = 1))
   }
 
   test("gramPairs emits each unordered pair once") {
@@ -523,21 +518,6 @@ class VectorSpec extends SparkSpec {
     out should contain((0L, 1L))
   }
 
-  test("ivfTopK returns ranked neighbors within cells, self excluded") {
-    val df = vecs.toDF("vec_id", "embedding")
-    val out = Similarity.ivfTopK(df, col("vec_id"), col("embedding"), nCells = 2, k = 2)
-      .select("query_id", "neighbor_id", "rank").as[(Long, Long, Long)].collect()
-    out.foreach { case (q, n, r) =>
-      q should not be n
-      r should be >= 1L
-      r should be <= 2L
-    }
-    // ranks are dense per query starting at 1
-    out.groupBy(_._1).values.foreach { rows =>
-      rows.map(_._3).sorted.toSeq shouldBe (1L to rows.length).toSeq
-    }
-  }
-
   test("intIvfTopK groups parallel vectors and ranks by integer dot") {
     val df = vecs.toDF("vec_id", "embedding")
     val out = Similarity.intIvfTopK(df, col("vec_id"), col("embedding"),
@@ -552,30 +532,6 @@ class VectorSpec extends SparkSpec {
     // 0 and 1 are near-parallel: if 0 gets any neighbor, 1 ranks first
     val q0 = out.filter(_._1 == 0L).sortBy(_._3)
     if (q0.nonEmpty) q0.head._2 shouldBe 1L
-  }
-
-  // Pins the retired-from-catalog v6 path (QueriesVector.scala): the
-  // float KMeans fit is not SQL-reproducible, so the operator is held
-  // to a seeded-determinism contract plus a recall@k floor against the
-  // exact top-k (v1) instead of a DuckDB oracle.
-  test("ivfTopK is deterministic across runs (seeded KMeans fit)") {
-    val df = clusteredVecs.toDF("vec_id", "embedding")
-    def run() = Similarity.ivfTopK(df, col("vec_id"), col("embedding"),
-      nCells = 4, k = 5, seed = 7L, nProbe = 2)
-      .select("query_id", "neighbor_id", "rank")
-      .collect().map(_.toSeq).toSet
-    run() shouldBe run()
-  }
-
-  test("ivfTopK recall@5 vs exact cosine top-k is at least 0.6") {
-    val df = clusteredVecs.toDF("vec_id", "embedding")
-    val exact = Similarity.cosineTopK(df, df, col("vec_id"), col("embedding"), 5)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val ivf = Similarity.ivfTopK(df, col("vec_id"), col("embedding"),
-      nCells = 4, k = 5, seed = 7L, nProbe = 2)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val recall = ivf.intersect(exact).size.toDouble / exact.size
-    recall should be >= 0.6
   }
 
   test("intIvfRerankTopK: same candidate set as the integer ranker, float-ordered") {
@@ -728,6 +684,11 @@ class VectorSpec extends SparkSpec {
     }
     // every neighbor the bucket path returns shares the query's sign prefix
     bucketed.foreach { case (q, n, _, _) => prefix(codes(n)) shouldBe prefix(codes(q)) }
+    // Bucketed is the one-table multi-table route at the same width, row for row
+    Similarity.binaryHammingTopKMultiTable(df, col("vec_id"), col("embedding"),
+        k = 3, isQuery = isQ, prefixBits = prefixBits, nTables = 1)
+      .orderBy("query_id", "rank").as[(Long, Long, Long, Long)].collect().toSeq shouldBe
+      bucketed.sortBy(r => (r._1, r._3))
     // recall@3 vs the exact brute ranking: same-cluster neighbors share
     // most sign bits, so the prefix buckets should recover most of the
     // true top-3
@@ -940,10 +901,63 @@ class VectorSpec extends SparkSpec {
     val bucketedRef = Similarity.binaryHammingTopK(df, col("vec_id"), col("embedding"),
         k = 3, isQuery = isQ, prefixBits = 4, route = Similarity.HammingRoute.Bucketed)
       .as[(Long, Long, Long, Long)].collect().toSet
-    // Count only jobs from THIS test's job group (a concurrent suite's
-    // job can't over-count) and drain the listener bus before asserting
-    // (a slow bus can't under-count) — no fixed sleep anywhere.
-    val group = "vectorspec-bucketed-no-count"
+    val (plan, jobs) = jobsDuring("vectorspec-bucketed-no-count") {
+      Similarity.binaryHammingTopK(df, col("vec_id"), col("embedding"),
+        k = 3, isQuery = isQ, prefixBits = 4, route = Similarity.HammingRoute.Bucketed)
+    }
+    withClue("Bucketed must not run the count() existence check: ") {
+      jobs shouldBe 0
+    }
+    plan.get.as[(Long, Long, Long, Long)].collect().toSet shouldBe bucketedRef
+  }
+
+  test("every top-k route rejects k <= 0 before it runs a job") {
+    val rnd = new scala.util.Random(43)
+    val df = (0L until 40L).map(i => (i, Array.fill(64)(rnd.nextFloat() - 0.5f)))
+      .toDF("vec_id", "embedding")
+    val (id, vec) = (col("vec_id"), col("embedding"))
+    val isQ: org.apache.spark.sql.Column => org.apache.spark.sql.Column = _ % 4 === 0
+    def hamming(route: Similarity.HammingRoute)(k: Int) =
+      Similarity.binaryHammingTopK(df, id, vec, k, isQ, route = route)
+    val routes: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "cosineTopK" -> (k => Similarity.cosineTopK(df, df, id, vec, k)),
+      "rhpTopKForQueriesAuto" -> (k => Similarity.rhpTopKForQueriesAuto(df, df, id, vec, 64, k)),
+      "rhpAnnTopK" -> (k => Similarity.rhpAnnTopK(df, id, vec, 4, 64, k)),
+      "rhpAnnTopKMulti" -> (k => Similarity.rhpAnnTopKMulti(df, id, vec, 4, 64, k, nTables = 2,
+        isQuery = isQ)),
+      "intIvfTopK" -> (k => Similarity.intIvfTopK(df, id, vec, nCells = 4, k = k, isQuery = isQ)),
+      "intIvfRerankTopK" -> (k => Similarity.intIvfRerankTopK(df, id, vec, nCells = 4, k = k,
+        isQuery = isQ)),
+      "binaryHammingTopK(Auto)" -> hamming(Similarity.HammingRoute.Auto),
+      "binaryHammingTopK(Exact)" -> hamming(Similarity.HammingRoute.Exact),
+      "binaryHammingTopK(Bucketed)" -> hamming(Similarity.HammingRoute.Bucketed),
+      "binaryHammingTopKMultiTable" -> (k => Similarity.binaryHammingTopKMultiTable(df, id, vec,
+        k, isQ)),
+      "binaryHammingTopKMultiTable(auto width)" -> (k => Similarity.binaryHammingTopKMultiTable(
+        df, id, vec, k, isQ, targetOccupancy = 8)),
+      "pqTopK" -> (k => Similarity.pqTopK(df, id, vec, m = 8, subDim = 8, k = 4, topK = k,
+        isQuery = isQ)),
+      "ivfAdcTopK" -> (k => Similarity.ivfAdcTopK(df, id, vec, nCells = 4, m = 8, subDim = 8,
+        kCodes = 4, topK = k, isQuery = isQ)),
+      "ivfAdcRerankTopK" -> (k => Similarity.ivfAdcRerankTopK(df, id, vec, nCells = 4, m = 8,
+        subDim = 8, kCodes = 4, shortlist = 4, topK = k, isQuery = isQ)))
+    for ((name, route) <- routes; k <- Seq(0, -1)) withClue(s"$name(k=$k): ") {
+      val (out, jobs) = jobsDuring(s"vectorspec-k-check-$name-$k")(route(k))
+      out match {
+        case scala.util.Failure(e: IllegalArgumentException) =>
+          e.getMessage should include("must be positive")
+        case other => fail(s"expected the k check to fail the call, got $other")
+      }
+      jobs shouldBe 0
+    }
+  }
+
+  /** `body`'s outcome and the number of jobs it started. Counts only
+    * jobs of its own job group (a concurrent suite's job can't
+    * over-count) and drains the listener bus first (a slow bus can't
+    * under-count) — no fixed sleep anywhere.
+    */
+  private def jobsDuring[T](group: String)(body: => T): (scala.util.Try[T], Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -951,17 +965,12 @@ class VectorSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      spark.sparkContext.setJobGroup(group, "bucketed plan construction", false)
-      val plan = Similarity.binaryHammingTopK(df, col("vec_id"), col("embedding"),
-        k = 3, isQuery = isQ, prefixBits = 4, route = Similarity.HammingRoute.Bucketed)
-      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.setJobGroup(group, group, false)
+      val out = try scala.util.Try(body) finally spark.sparkContext.clearJobGroup()
       // listenerBus is private[spark] in source but public in bytecode
       val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      withClue("Bucketed must not run the count() existence check: ") {
-        jobs.get() shouldBe 0
-      }
-      plan.as[(Long, Long, Long, Long)].collect().toSet shouldBe bucketedRef
+      (out, jobs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
