@@ -3,9 +3,9 @@ package graft
 /** Empirical scale smoke (VERDICT r7 #2): run the iterative/wide
   * catalog queries at two or more scale-factor directories and emit
   * one JSON line per (dir, query) with raw per-iteration wall times,
-  * the min, and — for d7 — the connected-components round count, so
-  * SCALE.md's 100x argument carries executed evidence, not only a
-  * plan audit. The 10x dataset comes from `scripts/gen_sf1.py`
+  * the min, and — for d7 — the connected-components route and round
+  * count, so SCALE.md's 100x argument carries executed evidence, not
+  * only a plan audit. The 10x dataset comes from `scripts/gen_sf1.py`
   * (schema- and shape-matched to the driver's sf0.1; the smoke
   * measures scaling, not oracle hashes).
   *
@@ -94,9 +94,14 @@ object ScaleSmoke {
           SparkEntry.queries(n)(spark, dir).queryExecution.toRdd.count()
           (System.nanoTime() - t0) / 1e9
         }
+        // a graph at or under the edge cap takes the union-find route
+        // (0 rounds), and one over it runs at least the loop's seed
+        // round: 0 rounds names the route
         val rounds =
-          if (n == "d7_cc_dedup") s""","cc_rounds":${operators.Dedup.lastCcRounds}"""
-          else ""
+          if (n == "d7_cc_dedup") {
+            val r = operators.Dedup.lastCcRounds
+            s""","cc_route":"${if (r == 0) "local" else "loop"}","cc_rounds":$r"""
+          } else ""
         println(s"""{"smoke":"$n","sf":"$dir","min":${fmt(times.min)},"times":[${times.map(fmt).mkString(",")}]$rounds}""")
         mins.getOrElseUpdate(n, scala.collection.mutable.LinkedHashMap.empty)
           .update(dir, times.min)

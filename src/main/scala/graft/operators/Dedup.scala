@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
 import graft.functions.TextFunctions
 import graft.functions.TextFunctions.P
@@ -176,10 +176,12 @@ object Dedup {
     bandJoin(kept, kept, "doc_a", "doc_b")(_ < _).distinct()
   }
 
-  /** Diagnostic only: rounds the most recent [[connectedComponents]]
-    * call took to converge (driver-side, written after its loop) —
-    * read by [[graft.ScaleSmoke]] to report convergence depth against
-    * the maxRounds cap. Not part of any query's semantics.
+  /** Diagnostic only: label-propagation rounds the most recent
+    * [[connectedComponents]] call took to converge (driver-side,
+    * written after its loop), or 0 when that call took the union-find
+    * route — read by [[graft.ScaleSmoke]] to report the route and the
+    * convergence depth against the maxRounds cap. Not part of any
+    * query's semantics.
     */
   @volatile var lastCcRounds: Int = 0
 
@@ -203,14 +205,33 @@ object Dedup {
   // hopping already minimized. What DID survive is the
   // identity-specialized first round below: strictly less work than
   // the generic round it replaces, no new passes over sym.
+  // The driver-side union-find route below the edge cap is a different
+  // lever: it runs only once a bounded count has PROVEN the graph
+  // small, where the loop's cost is job overhead, not data (dedup-batch:
+  // ~133 edges, 45 tasks and ~1.3 s of CC self time in the loop), and
+  // it never touches an edge relation past the cap, which is where
+  // both pre-merge attempts lost.
   /** Connected components over an undirected pair relation (the
     * canonical-document grouping a dedup pipeline runs AFTER near-dup
     * pair detection: transitively linked docs form one duplicate group;
     * the group's min id is its canonical representative).
     *
-    * Iterative min-label propagation WITH pointer hopping: each round
-    * every node takes the min of its own label and its neighbors'
-    * labels, then shortcuts through its label's label
+    * Two routes behind one bounded count of the (persisted) directed
+    * edges ([[Broadcasts.boundedCount]], the repo's one row-count gate):
+    *  - at or under [[Broadcasts.MaxRows]] edges they are collected and
+    *    folded through a driver-side [[MinRootUnionFind]]; the result
+    *    is a local relation built from its arrays. Two Spark jobs (the
+    *    count and the collect), no shuffle of the label state, the edge
+    *    persist released before returning.
+    *  - past the cap the iterative label propagation below runs.
+    * Both routes return the same rows: comp = the component's min id.
+    * The cap bounds what the union-find route holds on the driver (the
+    * edges and up to 2 × cap node rows), not its speed: it beat the
+    * loop at every graph size measured, up to 200k edges.
+    *
+    * The loop is iterative min-label propagation WITH pointer hopping:
+    * each round every node takes the min of its own label and its
+    * neighbors' labels, then shortcuts through its label's label
     * (comp(v) ← comp(comp(v))), which halves the label-tree depth —
     * convergence in O(log diameter) rounds, not O(diameter), so a
     * templated corpus with a long near-dup chain converges in a
@@ -229,13 +250,53 @@ object Dedup {
     * Returns (node, comp): comp = min node id of the component.
     */
   def connectedComponents(pairs: DataFrame, a: Column, b: Column,
-                          maxRounds: Int = 50): DataFrame = {
-    // persist the directed edges BEFORE the symmetrizing union: its two
-    // branches otherwise each recompute the whole upstream pair
-    // pipeline (minhash + bucket guard + Jaccard verify — measured 2×
-    // the pair-build cost on d7 at sf0.1, and the guard's own two
-    // band branches compound it to 4×)
-    val edges = pairs.select(a.cast("long").as("src"), b.cast("long").as("dst")).persist()
+                          maxRounds: Int = 50): DataFrame =
+    connectedComponents(pairs, a, b, maxRounds, Broadcasts.MaxRows)
+
+  /** [[connectedComponents]] with its edge cap as an argument, so a
+    * test can put a small graph on either side of the cap.
+    */
+  private[graft] def connectedComponents(pairs: DataFrame, a: Column, b: Column,
+                                         maxRounds: Int, maxLocalEdges: Long): DataFrame = {
+    val edges = directedEdges(pairs, a, b)
+    if (Broadcasts.boundedCount(edges, maxLocalEdges) <= Broadcasts.cap(maxLocalEdges)) {
+      localComponents(edges)
+    } else propagateLabels(edges, maxRounds)
+  }
+
+  /** The pair relation as persisted (src, dst) long edges, the input of
+    * both routes. Persisted BEFORE the loop's symmetrizing union: its
+    * two branches otherwise each recompute the whole upstream pair
+    * pipeline (minhash + bucket guard + Jaccard verify — measured 2×
+    * the pair-build cost on d7 at sf0.1, and the guard's own two band
+    * branches compound it to 4×).
+    */
+  private[graft] def directedEdges(pairs: DataFrame, a: Column, b: Column): DataFrame =
+    pairs.select(a.cast("long").as("src"), b.cast("long").as("dst")).persist()
+
+  /** [[connectedComponents]]' under-cap route: the collected edges fold
+    * through one [[MinRootUnionFind]], so each node's root is its
+    * component's min id — the loop's fixpoint. The output keeps the
+    * loop's schema (both columns nullable exactly when an input id
+    * column is).
+    */
+  private def localComponents(edges: DataFrame): DataFrame = {
+    val uf = new MinRootUnionFind()
+    edges.collect().foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+    edges.unpersist()
+    lastCcRounds = 0
+    val nullable = edges.schema.exists(_.nullable)
+    val schema = StructType(Seq(StructField("node", LongType, nullable),
+      StructField("comp", LongType, nullable)))
+    val rows = uf.nodes.toArray.sorted.map(n => Row(n, uf.find(n)))
+    edges.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** [[connectedComponents]]' over-cap route: iterative min-label
+    * propagation over [[directedEdges]]' persisted `edges`, which it
+    * releases. Tests call it directly to run the loop on small graphs.
+    */
+  private[graft] def propagateLabels(edges: DataFrame, maxRounds: Int): DataFrame = {
     val sym = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist()
     // ROUND 1 SPECIALIZED TO THE IDENTITY LABELING (round 21). With
@@ -348,9 +409,10 @@ object Dedup {
     *
     * Contract: `labels` is COUNTED EAGERLY (one bounded Spark job, at
     * call time, before the returned frame is used), so it should
-    * arrive materialized — as [[connectedComponents]] returns it,
-    * localCheckpoint-materialized — or the count recomputes its whole
-    * lineage, and the join then recomputes it again.
+    * arrive materialized — as [[connectedComponents]] returns it, a
+    * local relation or localCheckpoint-materialized — or the count
+    * recomputes its whole lineage, and the join then recomputes it
+    * again.
     */
   def keepBestPerComponent(docs: DataFrame, idCol: String, scoreCol: String,
                            labels: DataFrame,

@@ -181,7 +181,7 @@ object Similarity {
     * of two must round identically in the DuckDB oracle replay).
     */
   private[graft] def autoPrefixBits(n: Long, targetOccupancy: Int): Int = {
-    require(targetOccupancy > 0, s"targetOccupancy=$targetOccupancy must be positive")
+    requireOccupancy(targetOccupancy)
     val b = (n + targetOccupancy - 1) / targetOccupancy
     val cl2 = if (b <= 1L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(b - 1L)
     math.min(32, math.max(4, cl2))
@@ -242,6 +242,24 @@ object Similarity {
     */
   private def requirePositive(name: String, k: Int): Unit =
     require(k > 0, s"$name=$k must be positive")
+
+  /** The ADC rerank tier's cut, checked before the index build and the
+    * ADC training: a positive `topK` within a `shortlist` at least as
+    * wide, and a non-negative `shortlistFrac`.
+    */
+  private def requireRerankCut(shortlist: Int, topK: Int, shortlistFrac: Int): Unit = {
+    requirePositive("topK", topK)
+    require(shortlist >= topK,
+      s"shortlist=$shortlist must be >= topK=$topK")
+    require(shortlistFrac >= 0,
+      s"shortlistFrac=$shortlistFrac must be >= 0 (0 pins the fixed tier)")
+  }
+
+  /** An auto-width route's occupancy target, checked before its corpus
+    * `count()`.
+    */
+  private def requireOccupancy(targetOccupancy: Int): Unit =
+    require(targetOccupancy > 0, s"targetOccupancy=$targetOccupancy must be positive")
 
   /** Each query's candidates (qid, cid, score, …) numbered 1, 2, … by
     * `score`, ties to the smaller cid, in a `rank` column: the one
@@ -372,6 +390,7 @@ object Similarity {
                             targetOccupancy: Int = AutoOccupancy): DataFrame = {
     requirePositive("k", k)
     require(nTables >= 1, s"nTables=$nTables must be positive")
+    requireOccupancy(targetOccupancy)
     // bounded scalar count (a driver-side constant, the allowlisted
     // shape) → integer ceil-log2 width
     val n = corpus.count()
@@ -911,15 +930,17 @@ object Similarity {
                                   targetOccupancy: Int = 0,
                                   probe: Int = 0): DataFrame = {
     requirePositive("k", k)
-    // auto mode: one bounded scalar count (the allowlisted shape) →
-    // integer ceil-log2, replayed verbatim in oracle SQL
+    require(nTables >= 1 && nTables <= 32,
+      s"nTables=$nTables must fit the 32 hi sign bits")
+    require(probe >= 0 && probe <= 2,
+      s"probe=$probe must be 0, 1 or 2 (prefix Hamming radius of the query-side probe set)")
+    // auto mode (targetOccupancy > 0; <= 0 selects the explicit width):
+    // one bounded scalar count (the allowlisted shape) → integer
+    // ceil-log2, replayed verbatim in oracle SQL
     val p =
       if (targetOccupancy <= 0) prefixBits
       else autoPrefixBits(df.count(), targetOccupancy)
-    require(p >= 1 && p <= 32 && nTables >= 1 && nTables <= 32,
-      s"nTables=$nTables, prefixBits=$p must each fit the 32 hi sign bits")
-    require(probe >= 0 && probe <= 2,
-      s"probe=$probe must be 0, 1 or 2 (prefix Hamming radius of the query-side probe set)")
+    require(p >= 1 && p <= 32, s"prefixBits=$p must fit the 32 hi sign bits")
     // rotation offsets r = (l·p) mod 32 repeat with period 32/gcd(p,32)
     // — a table whose offset repeats is bit-identical to an earlier one
     // and pays full candidate-generation cost for zero recall gain. At
@@ -1441,7 +1462,7 @@ object Similarity {
                        nProbe: Int = IvfAutoProbe,
                        trainTarget: Int = AdcTrainTarget,
                        shortlistFrac: Int = AdcShortlistFrac): DataFrame = {
-    requirePositive("topK", topK)
+    requireRerankCut(shortlist, topK, shortlistFrac)
     ivfAdcRerankFromIndex(intIvfIndex(df, id, vec, nCells), df, id, vec,
       m, subDim, kCodes, shortlist, topK, isQuery, nProbe, trainTarget,
       shortlistFrac)
@@ -1456,7 +1477,7 @@ object Similarity {
                        topK: Int, isQuery: Column => Column,
                        nProbe: Int, trainTarget: Int,
                        shortlistFrac: Int = AdcShortlistFrac): DataFrame = {
-    requirePositive("topK", topK)
+    requireRerankCut(shortlist, topK, shortlistFrac)
     val aix = adcBuild(ix, m, subDim, kCodes, trainTarget)
     val out = ivfAdcRerankTopKFromAdc(aix, df, id, vec, shortlist, topK,
       isQuery, nProbe, shortlistFrac)
@@ -1475,11 +1496,7 @@ object Similarity {
                        shortlistFrac: Int = AdcShortlistFrac,
                        maxBroadcastRows: Long = Broadcasts.MaxRows,
                        knownQueryCount: Option[Long] = None): DataFrame = {
-    requirePositive("topK", topK)
-    require(shortlist >= topK,
-      s"shortlist=$shortlist must be >= topK=$topK")
-    require(shortlistFrac >= 0,
-      s"shortlistFrac=$shortlistFrac must be >= 0 (0 pins the fixed tier)")
+    requireRerankCut(shortlist, topK, shortlistFrac)
     // per-query shortlist: rank and pool-count over the SAME (qid)
     // partitioning — one exchange feeds both window functions
     val rCut =

@@ -4,17 +4,21 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 
+import graft.operators.MinRootUnionFind
+
 /** Streaming connected components — duplicate-group assembly (d7) as an
   * INGEST-TIME operator: verified near-dup pair events fold into a keyed
   * union-find, so the canonical-document map stays current as a corpus
   * lands instead of re-running the batch label propagation.
   *
-  * Union by MIN ROOT: merging always reparents the larger root onto the
-  * smaller, so a component's representative is its minimum node id —
-  * exactly the batch operator's (`Dedup.connectedComponents`) canonical
-  * choice, and ORDER-INDEPENDENT: whatever order edges arrive in, the
-  * final assignment equals the batch result, which is why st8
-  * hash-matches d7's recursive-CTE oracle.
+  * Union by MIN ROOT ([[MinRootUnionFind]], shared with the batch
+  * operator's small-graph route): merging always reparents the larger
+  * root onto the smaller, so a component's representative is its
+  * minimum node id — exactly the batch operator's
+  * (`Dedup.connectedComponents`) canonical choice, and
+  * ORDER-INDEPENDENT: whatever order edges arrive in, the final
+  * assignment equals the batch result, which is why st8 hash-matches
+  * d7's recursive-CTE oracle.
   *
   * Each micro-batch emits a DELTA stamped with a step counter: only
   * first-seen nodes and nodes whose root changed in the batch (append
@@ -63,38 +67,23 @@ object StreamingComponents {
     */
   private[graft] def applyBatch(prior: Option[UfState], batch: Seq[EdgeEvent])
     : (UfState, Seq[NodeComp]) = {
-    val parent = mutable.HashMap.empty[Long, Long]
+    val uf = new MinRootUnionFind(prior.fold(Map.empty[Long, Long])(_.parent))
     val members = mutable.HashMap.empty[Long, mutable.ArrayBuffer[Long]]
     prior.foreach { s =>
-      parent ++= s.parent
       s.members.foreach { case (r, ms) =>
         members(r) = mutable.ArrayBuffer.from(ms)
       }
     }
     // nodes whose assignment is new or changed this batch
     val touched = mutable.HashSet.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      // path compression: re-walk and point everything at the root
-      var c = x
-      while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
-      r
-    }
-    def add(x: Long): Unit = if (!parent.contains(x)) {
-      parent(x) = x
+    def add(x: Long): Unit = if (uf.add(x)) {
       members(x) = mutable.ArrayBuffer(x)
       touched += x
     }
     batch.sortBy(_.seq).foreach { e =>
       add(e.a)
       add(e.b)
-      val ra = find(e.a)
-      val rb = find(e.b)
-      if (ra != rb) {
-        val winner = math.min(ra, rb)
-        val loser = math.max(ra, rb)
-        parent(loser) = winner
+      uf.union(e.a, e.b).foreach { case (winner, loser) =>
         // the absorbed root's members are EXACTLY the nodes whose
         // root changes — no scan over the surviving component
         val moved = members.remove(loser).get
@@ -103,8 +92,8 @@ object StreamingComponents {
       }
     }
     val step = prior.map(_.step).getOrElse(0L) + 1
-    val next = UfState(parent.toMap, members.view.mapValues(_.toSeq).toMap, step)
-    (next, touched.toSeq.sorted.map(n => NodeComp(step, n, find(n))))
+    val next = UfState(uf.parents, members.view.mapValues(_.toSeq).toMap, step)
+    (next, touched.toSeq.sorted.map(n => NodeComp(step, n, uf.find(n))))
   }
 
   def connectedComponents(events: Dataset[EdgeEvent]): Dataset[NodeComp] = {

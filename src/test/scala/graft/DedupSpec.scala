@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -8,30 +9,47 @@ import graft.operators.Dedup
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Both [[Dedup.connectedComponents]] routes on `pairs`, keyed by
+    * the route's name: the driver union-find it takes at or under its
+    * edge cap, and the label-propagation loop it takes past the cap,
+    * called directly because every graph below is far under the cap.
+    */
+  private def ccRoutes(pairs: DataFrame, maxRounds: Int = 50): Seq[(String, DataFrame)] = {
+    val (a, b) = (col("doc_a"), col("doc_b"))
+    Seq("union-find" -> Dedup.connectedComponents(pairs, a, b, maxRounds),
+      "loop" -> Dedup.propagateLabels(Dedup.directedEdges(pairs, a, b), maxRounds))
+  }
+
+  /** (node → comp) of `pairs` on each route, keyed by the route's name. */
+  private def ccOnBothRoutes(pairs: DataFrame): Seq[(String, Map[Long, Long])] =
+    ccRoutes(pairs).map { case (route, cc) =>
+      route -> cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+
   test("connectedComponents: transitive chains collapse to the min id") {
     // components: {1,2,3,9} via 1-2, 2-3, 3-9; {5,7}; {10,11,12} via a
     // triangle (cycle safety); 20-21 isolated pair
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 9L), (5L, 7L),
       (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)).toDF("doc_a", "doc_b")
-    val cc = Dedup.connectedComponents(pairs, col("doc_a"), col("doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    cc shouldBe Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L,
-      5L -> 5L, 7L -> 5L, 10L -> 10L, 11L -> 10L, 12L -> 10L,
-      20L -> 20L, 21L -> 20L)
+    for ((route, cc) <- ccOnBothRoutes(pairs)) withClue(s"$route: ") {
+      cc shouldBe Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L,
+        5L -> 5L, 7L -> 5L, 10L -> 10L, 11L -> 10L, 12L -> 10L,
+        20L -> 20L, 21L -> 20L)
+    }
   }
 
   test("connectedComponents: empty pair relation yields empty result") {
     val pairs = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
-    Dedup.connectedComponents(pairs, col("doc_a"), col("doc_b")).count() shouldBe 0L
+    for ((route, cc) <- ccOnBothRoutes(pairs)) withClue(s"$route: ")(cc shouldBe empty)
   }
 
   test("connectedComponents: long path needs diameter rounds, still converges") {
     // path 0-1-2-...-12: worst case for min-label propagation
     val pairs = (0L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val cc = Dedup.connectedComponents(pairs, col("doc_a"), col("doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    cc.values.toSet shouldBe Set(0L)
-    cc.keySet shouldBe (0L to 12L).toSet
+    for ((route, cc) <- ccOnBothRoutes(pairs)) withClue(s"$route: ") {
+      cc.values.toSet shouldBe Set(0L)
+      cc.keySet shouldBe (0L to 12L).toSet
+    }
   }
 
   test("connectedComponents: a chain deeper than maxRounds converges via pointer hopping") {
@@ -40,10 +58,22 @@ class DedupSpec extends SparkSpec {
     // O(log diameter) rounds (templated-corpus near-dup chains are the
     // real-world shape of this graph)
     val pairs = (0L until 200L).map(i => (i + 1, i)).toDF("doc_a", "doc_b")
-    val cc = Dedup.connectedComponents(pairs, col("doc_a"), col("doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    cc.values.toSet shouldBe Set(0L)
-    cc.keySet shouldBe (0L to 200L).toSet
+    for ((route, cc) <- ccOnBothRoutes(pairs)) withClue(s"$route: ") {
+      cc.values.toSet shouldBe Set(0L)
+      cc.keySet shouldBe (0L to 200L).toSet
+    }
+  }
+
+  /** Min-root union-find written out independently of the program's. */
+  private def referenceComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(k => k -> find(k)).toMap
   }
 
   test("connectedComponents: seeded random graphs match a local union-find") {
@@ -52,36 +82,77 @@ class DedupSpec extends SparkSpec {
       val n = 30 + trial * 10
       val edges = Seq.fill(n) { (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong) }
         .filter { case (a, b) => a != b }
-      // local reference union-find (min-root)
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
-      edges.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expected = parent.keys.map(k => k -> find(k)).toMap
-      val got = Dedup.connectedComponents(
-        edges.toDF("doc_a", "doc_b"), col("doc_a"), col("doc_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      got shouldBe expected
+      val expected = referenceComponents(edges)
+      for ((route, got) <- ccOnBothRoutes(edges.toDF("doc_a", "doc_b")))
+        withClue(s"trial $trial, $route: ")(got shouldBe expected)
     }
   }
 
   test("connectedComponents: components split across many partitions still collapse") {
-    // force the partition-local union-find pre-merge (round 19) to see
-    // each component's edges scattered over partitions: a 60-node
-    // chain plus a star, repartitioned to 16 slices, must still
-    // collapse to the global component minima — the star rewrite is
-    // per-partition, the keyed loop restores cross-partition links
+    // each component's edges scattered over 16 partitions: a 60-node
+    // chain plus a star must still collapse to the global component
+    // minima on both routes
     val chain = (0L until 59L).map(i => (i, i + 1))
     val star = (100L to 120L).map(i => (200L, i))
     val pairs = (chain ++ star).toDF("doc_a", "doc_b").repartition(16)
-    val got = Dedup.connectedComponents(pairs, col("doc_a"), col("doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (0L to 59L).foreach(n => got(n) shouldBe 0L)
-    (100L to 120L).foreach(n => got(n) shouldBe 100L)
-    got(200L) shouldBe 100L
+    for ((route, got) <- ccOnBothRoutes(pairs)) withClue(s"$route: ") {
+      (0L to 59L).foreach(n => got(n) shouldBe 0L)
+      (100L to 120L).foreach(n => got(n) shouldBe 100L)
+      got(200L) shouldBe 100L
+    }
+  }
+
+  test("connectedComponents: both routes give equal rows and schema; the edge cap picks the route") {
+    val rnd = new scala.util.Random(7)
+    // duplicate edges and self-loops (a == b) on purpose: both are legal
+    // pair rows, and a self-loop makes its node a singleton component
+    val graphs = Seq.empty[(Long, Long)] +: (0 until 4).map { trial =>
+      Seq.fill(20 + trial * 15)((rnd.nextInt(30).toLong, rnd.nextInt(30).toLong))
+    }
+    for ((edges, trial) <- graphs.zipWithIndex) withClue(s"graph $trial: ") {
+      val dup = edges ++ edges.take(3)
+      // a nullable id column (no nulls) next to the non-nullable tuple one
+      val frames = Seq(dup.toDF("doc_a", "doc_b"),
+        dup.map { case (a, b) => (Option(a), Option(b)) }.toDF("doc_a", "doc_b"))
+      for (pairs <- frames) {
+        val Seq(local, loop) = ccRoutes(pairs).map(_._2)
+        local.schema shouldBe loop.schema
+        val rows = local.collect().sortBy(_.getLong(0)).toSeq
+        rows shouldBe loop.collect().sortBy(_.getLong(0)).toSeq
+        rows.map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe referenceComponents(dup)
+      }
+    }
+    // the gate counts directed edge rows, duplicates included: a graph
+    // of exactly `cap` rows takes the union-find route (0 rounds), one
+    // more row takes the loop (at least its seed round)
+    val edges = (0L until 10L).map(i => (i, i + 1)) :+ ((3L, 4L))
+    val pairs = edges.toDF("doc_a", "doc_b")
+    val atCap = Dedup.connectedComponents(pairs, col("doc_a"), col("doc_b"),
+      maxRounds = 50, maxLocalEdges = edges.size.toLong)
+    Dedup.lastCcRounds shouldBe 0
+    val overCap = Dedup.connectedComponents(pairs, col("doc_a"), col("doc_b"),
+      maxRounds = 50, maxLocalEdges = edges.size - 1L)
+    Dedup.lastCcRounds should be >= 1
+    atCap.collect().toSeq shouldBe overCap.orderBy("node").collect().toSeq
+  }
+
+  test("connectedComponents: the union-find route runs at most 2 jobs and leaks no cache; the loop's non-convergence releases its caches") {
+    val pairs = (0L until 200L).map(i => (i + 1, i)).toDF("doc_a", "doc_b")
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (local, jobs) = jobsDuring("dedupspec-cc-local-jobs")(
+      Dedup.connectedComponents(pairs, col("doc_a"), col("doc_b")))
+    jobs should (be >= 1 and be <= 2)
+    Dedup.lastCcRounds shouldBe 0
+    assert(spark.sharedState.cacheManager.isEmpty, "the union-find route left a cache entry")
+    (spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore) shouldBe empty
+    local.get.count() shouldBe 201L
+    // the loop on the same chain with one round to spare fails loudly,
+    // and releases both of its persisted edge relations first
+    val thrown = intercept[IllegalArgumentException](
+      Dedup.propagateLabels(Dedup.directedEdges(pairs, col("doc_a"), col("doc_b")), maxRounds = 1))
+    thrown.getMessage should include("did not converge in 1 rounds")
+    assert(spark.sharedState.cacheManager.isEmpty, "the failed loop left a cache entry")
   }
 
   test("stringHash: pinned cross-engine constant and empty-string guard") {

@@ -941,37 +941,50 @@ class VectorSpec extends SparkSpec {
         kCodes = 4, topK = k, isQuery = isQ)),
       "ivfAdcRerankTopK" -> (k => Similarity.ivfAdcRerankTopK(df, id, vec, nCells = 4, m = 8,
         subDim = 8, kCodes = 4, shortlist = 4, topK = k, isQuery = isQ)))
-    for ((name, route) <- routes; k <- Seq(0, -1)) withClue(s"$name(k=$k): ") {
-      val (out, jobs) = jobsDuring(s"vectorspec-k-check-$name-$k")(route(k))
+    val kCalls = for ((name, route) <- routes; k <- Seq(0, -1))
+      yield (s"$name(k=$k)", () => route(k), "must be positive")
+    // the other cut and width arguments a route checks before its
+    // index build or its corpus count
+    val argCalls = Seq[(String, () => org.apache.spark.sql.DataFrame, String)](
+      ("ivfAdcRerankTopK(shortlist=1, topK=3)", () => Similarity.ivfAdcRerankTopK(df, id, vec,
+        nCells = 4, m = 8, subDim = 8, kCodes = 4, shortlist = 1, topK = 3, isQuery = isQ),
+        "must be >= topK"),
+      ("binaryHammingTopKMultiTable(auto width, nTables=0)", () =>
+        Similarity.binaryHammingTopKMultiTable(df, id, vec, 3, isQ, nTables = 0,
+          targetOccupancy = 8), "must fit")) ++
+      Seq(0, -1).map(occ => (s"rhpTopKForQueriesAuto(targetOccupancy=$occ)",
+        () => Similarity.rhpTopKForQueriesAuto(df, df, id, vec, 64, 3, targetOccupancy = occ),
+        "must be positive"))
+    for ((name, call, message) <- kCalls ++ argCalls) withClue(s"$name: ") {
+      val (out, jobs) = jobsDuring(s"vectorspec-k-check-$name")(call())
       out match {
         case scala.util.Failure(e: IllegalArgumentException) =>
-          e.getMessage should include("must be positive")
-        case other => fail(s"expected the k check to fail the call, got $other")
+          e.getMessage should include(message)
+        case other => fail(s"expected the argument check to fail the call, got $other")
       }
       jobs shouldBe 0
     }
   }
 
-  /** `body`'s outcome and the number of jobs it started. Counts only
-    * jobs of its own job group (a concurrent suite's job can't
-    * over-count) and drains the listener bus first (a slow bus can't
-    * under-count) — no fixed sleep anywhere.
-    */
-  private def jobsDuring[T](group: String)(body: => T): (scala.util.Try[T], Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (group == j.properties.getProperty("spark.jobGroup.id")) jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+  test("Broadcasts.boundedCount: one job that clamps at cap + 1 and builds a persisted input's cache") {
+    import graft.operators.Broadcasts
+    val rnd = new scala.util.Random(44)
+    val df = (0L until 40L).map(i => (i, Array.fill(64)(rnd.nextFloat())))
+      .toDF("vec_id", "embedding").persist()
     try {
-      spark.sparkContext.setJobGroup(group, group, false)
-      val out = try scala.util.Try(body) finally spark.sparkContext.clearJobGroup()
-      // listenerBus is private[spark] in source but public in bytecode
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      (out, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
+      val (n, jobs) = jobsDuring("vectorspec-bounded-count")(Broadcasts.boundedCount(df, 100))
+      n.get shouldBe 40L
+      jobs shouldBe 1
+      // the count projects the columns away, yet the cache holds them all
+      val cached = spark.sharedState.cacheManager
+        .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).get
+      assert(cached.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
+      df.select(col("embedding")).collect().map(_.getSeq[Float](0).size).toSet shouldBe Set(64)
+      Broadcasts.boundedCount(df, 39) shouldBe 40L
+      Broadcasts.boundedCount(df, 40) shouldBe 40L
+      Broadcasts.boundedCount(df.where(col("vec_id") < 0), 10) shouldBe 0L
+      Broadcasts.boundedCount(df, 10, known = Some(500L)) shouldBe 11L
+    } finally df.unpersist()
   }
 
   test("signCode: all-negative vector packs to hi=lo=0; non-64-dim input rejected") {
